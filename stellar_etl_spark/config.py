@@ -24,6 +24,21 @@ class EngineConfig:
                             internal/utils/logger.go:17-23)
       limit              <- --limit early exit (internal/utils/main.go:254)
       salt_buckets       <- no analog; explicit skew handling for hot conv_ids
+
+    Two partition widths, both set once by ``session.get_spark``:
+      shuffle_partitions  batch width: the partition count a batch shuffle
+                          starts from before AQE coalesces it
+                          (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
+      (state width)       ``spark.sql.shuffle.partitions``, the width of the
+                          plans AQE does not run in: the stateful streaming
+                          operators (one state-store instance per
+                          partition) and the transforms inside
+                          ``foreachBatch``. Derived from the session's
+                          ``defaultParallelism``, i.e. its cores; a
+                          checkpoint keeps the width it was first started
+                          with.
+    ``master`` defaults to every core of the host, and the driver heap is
+    derived from the host's memory (``session.driver_memory``).
     """
 
     # windowing
@@ -51,7 +66,7 @@ class EngineConfig:
 
     # spark session
     shuffle_partitions: int = 32
-    master: str = "local[32]"
+    master: str = "local[*]"
     extra_conf: dict = field(default_factory=dict)
 
 

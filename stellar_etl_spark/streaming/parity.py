@@ -69,14 +69,16 @@ _DELAY_US = 3650 * 86400 * 1_000_000
 _SLACK_US = 30 * 86400 * 1_000_000
 N_SLICES = 6
 
-# Streaming state-store partition count for the parity drains: each
-# micro-batch schedules one task per state partition, so at bench scale
-# (32-core session => 200/32 shuffle partitions) most tasks carry zero
-# state and the drain pays pure scheduling overhead. 8 partitions keeps
-# the evidence identical (results are partition-count independent;
-# tests already run at 8) and cuts per-trigger cost ~4x. A real 100 TB
-# deployment sizes this to executor count x cores as usual — it is a
-# drain-local override, not an engine default.
+# Streaming state-store partition count for the parity drains. They
+# run in whatever session the caller built. A `session.get_spark`
+# session already sizes the state width to its cores (session.py), but
+# a session sized for batch work (Spark's own default is 200 shuffle
+# partitions) gives each micro-batch one task and one state-store
+# commit per partition, most of them empty, and the drain pays pure
+# per-partition overhead. Pinning 8 keeps the evidence identical
+# (results are partition-count independent; tests already run at 8)
+# and cuts per-trigger cost ~4x against 32. It is a drain-local
+# override, not an engine default.
 DRAIN_PARTITIONS = "8"
 
 # Python-stateful drains (applyInPandasWithState) are bottlenecked by

@@ -73,9 +73,9 @@ class EpochCommitSink:
         Returns False if the epoch was already committed (idempotent
         replay after checkpoint restart — the exactly-once guarantee).
 
-        On that replay path the DataFrames are still evaluated once
-        through the noop sink (all partitions, JVM-side, nothing
-        written): Spark 4.1 validates that every micro-batch commits
+        On that replay path one table is still evaluated through the
+        noop sink (all partitions, JVM-side, nothing written): Spark
+        4.1 validates that every micro-batch commits
         its state-store partitions IN THE CURRENT RUN
         (``spark.sql.streaming.stateStore.commitValidation.enabled``
         defaults to true), and a foreachBatch that returns without
@@ -84,11 +84,13 @@ class EpochCommitSink:
         (SQLSTATE XXKST, "Expected N commits but got 0") even though
         the prior attempt's state deltas are durable. Re-evaluating
         recommits the deterministic state versions and satisfies the
-        validator; the sink output stays write-once.
+        validator; the sink output stays write-once. Every table is a
+        transform of the same micro-batch, whose evaluation is what
+        commits the state, so one evaluation serves them all (a table
+        that limits or samples its input must not come first).
         """
         if self.committed(epoch_id):
-            for df in tables.values():
-                df.write.format("noop").mode("overwrite").save()
+            next(iter(tables.values())).write.format("noop").mode("overwrite").save()
             return False
         manifest: dict = {
             "epoch_id": epoch_id,
@@ -265,12 +267,15 @@ def foreach_batch_writer(
 
     The batch is persisted so the N table transforms and the lineage
     pass share one materialization instead of re-reading the source.
+    A replayed, already-committed epoch skips the lineage pass: its
+    manifest is written, and `write_epoch` only re-evaluates the batch.
     """
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            lineage = lineage_of(batch_df) if with_lineage else None
+            trace = with_lineage and not sink.committed(epoch_id)
+            lineage = lineage_of(batch_df) if trace else None
             tables = {
                 name: fn(batch_df.drop("_source_file"))
                 for name, fn in transforms.items()

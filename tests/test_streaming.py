@@ -10,9 +10,11 @@ gate (same input + watermark => identical rows, SURVEY §5) and the
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from stellar_etl_spark.config import EngineConfig
 from stellar_etl_spark.operators import pairs as batch_pairs
@@ -230,6 +232,164 @@ def test_sink_idempotent_epoch(spark, tmp_path):
     assert sink.write_epoch(7, {"t": df}) is True
     assert sink.write_epoch(7, {"t": spark.range(500).toDF("x")}) is False  # replay: no-op
     assert sink.read_table(spark, "t").count() == 5
+
+
+def test_sink_replay_evaluates_one_table(spark, tmp_path):
+    """A replayed epoch re-evaluates the micro-batch once, not once per
+    table: the second table would fail if it were evaluated."""
+    sink = EpochCommitSink(str(tmp_path / "s"))
+    assert sink.write_epoch(3, {"a": spark.range(5).toDF("x")}) is True
+    poisoned = spark.range(5).select(F.raise_error(F.lit("evaluated")).alias("x"))
+    assert sink.write_epoch(3, {"a": spark.range(5).toDF("x"), "b": poisoned}) is False
+
+
+class _StateWidthListener(StreamingQueryListener):
+    """Per-run state-store instance counts from query progress, and the
+    runs that have terminated (their progress events have all arrived:
+    the listener bus delivers one query's events in order)."""
+
+    def __init__(self):
+        self.started: list[str] = []
+        self.instances: dict[str, list[int]] = {}
+        self.terminated: set[str] = set()
+
+    def onQueryStarted(self, event):
+        self.started.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.instances.setdefault(str(p.runId), []).extend(
+            op.numStateStoreInstances for op in p.stateOperators
+        )
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated.add(str(event.runId))
+
+    def wait_terminated(self, run_id: str, timeout_s: float = 60.0) -> None:
+        import time
+
+        deadline = time.monotonic() + timeout_s
+        while run_id not in self.terminated and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert run_id in self.terminated, f"no termination event for run {run_id}"
+
+
+def test_default_state_width_is_session_cores(spark, data_dir, tmp_path):
+    """get_spark sets the streaming state width to the session's cores
+    and leaves batch shuffles starting from cfg.shuffle_partitions (the
+    test session passes 8) for AQE to coalesce."""
+    cores = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=3,
+                                    with_lineage=False)
+    q = start_windowed(sessions.sessionize(stream, CFG, watermark=True),
+                       str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                       "sessions", query_name="t_state_width")
+    assert q.awaitTermination(540), "stream did not finish within 540s"
+    widths = [op["numStateStoreInstances"]
+              for p in q.recentProgress for op in p["stateOperators"]]
+    assert widths and set(widths) == {cores}
+
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "8"
+    agg = (read_transcript_batch(spark, data_dir)
+           .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n")))
+    assert agg.collect()
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(conv_id#\d+, 8\)", plan), plan
+    assert "AQEShuffleRead coalesced" in plan, plan
+
+
+def test_resume_keeps_checkpoint_state_width(spark, data_dir, tmp_path):
+    """A sessions checkpoint started under the old 32-partition default,
+    hard-killed after its first committed epoch, resumes under the new
+    default: the output equals batch sessionize for the closed
+    sessions, every epoch is committed once, and the resumed query
+    still runs 32 state-store instances, the width pinned in the
+    checkpoint's offset metadata."""
+    import shutil
+    import threading
+    import time
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from stellar_etl_spark import cli
+
+    files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for f in files[:3]:  # copy2 keeps the time-ordered mtimes
+        shutil.copy2(os.path.join(data_dir, f), inp / f)
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    manifests = tmp_path / "sink" / "_commits"
+    argv = ["export-sessions", "--stream", "--input", str(inp), "--out", out,
+            "--checkpoint", ckpt, "--session-gap", "30 minutes",
+            "--files-per-trigger", "1"]
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    widths = _StateWidthListener()
+    spark.streams.addListener(widths)
+    try:
+        # phase 1: the old default, killed once an epoch is committed
+        errors: list[Exception] = []
+
+        def run() -> None:
+            try:
+                cli.main(argv, spark=spark)
+            except StreamingQueryException:
+                pass  # the kill's terminal report
+            except Exception as e:
+                errors.append(e)
+
+        spark.conf.set(key, "32")
+        try:
+            t = threading.Thread(target=run)
+            t.start()
+            while t.is_alive() and not any(manifests.glob("*.json")):
+                time.sleep(0.05)
+            for q in spark.streams.active:
+                if q.name == "sessions":
+                    _hard_kill(q)
+            t.join(120)
+        finally:
+            spark.conf.set(key, default)
+        assert not t.is_alive() and not errors, errors
+        before = {e: (manifests / f"{e:020d}.json").read_text()
+                  for e in EpochCommitSink(out).committed_epochs()}
+        assert before
+
+        # phase 2: the rest of the input, resumed under the session default
+        for f in files[3:]:
+            shutil.copy2(os.path.join(data_dir, f), inp / f)
+        assert cli.main(argv, spark=spark) == 0
+        widths.wait_terminated(widths.started[-1])
+    finally:
+        spark.streams.removeListener(widths)
+
+    offsets0 = (tmp_path / "ckpt" / "sessions" / "offsets" / "0").read_text()
+    assert '"spark.sql.shuffle.partitions":"32"' in offsets0
+    resumed = widths.instances.get(widths.started[-1], [])
+    assert resumed and set(resumed) == {32}
+
+    sink = EpochCommitSink(out)
+    epochs = sink.committed_epochs()
+    commit_log = tmp_path / "ckpt" / "sessions" / "commits"
+    spark_commits = sorted(int(f.name) for f in commit_log.iterdir() if f.name.isdigit())
+    assert epochs == spark_commits == list(range(len(epochs)))
+    for e, manifest in before.items():  # write-once: no epoch recommitted
+        assert (manifests / f"{e:020d}.json").read_text() == manifest
+
+    cols = ["conv_id", "session_start", "session_end", "turn_count",
+            "user_turns", "assistant_turns", "tool_turns"]
+    wm = _final_watermark(spark, data_dir)
+    batch = sessions.sessionize(read_transcript_batch(spark, data_dir), CFG)
+    expected = [r for r in _rows(batch, cols) if r[2] <= wm]
+    assert _rows(sink.read_table(spark, "sessions"), cols) == expected
+    assert len(expected) > 0
 
 
 def test_snapshot_stream_equals_batch_compaction(spark, data_dir, tmp_path):
