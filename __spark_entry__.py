@@ -736,15 +736,6 @@ def _q_turn_pairs_disorder_streamed(spark, sf):
     )
 
 
-# NOTE: a transformWithState (Spark 4 StatefulProcessor) form of the
-# matcher exists at streaming/matcher_tws.py with the same oracle-exact
-# semantics (parity.streamed_turn_pairs_tws); it is NOT registered as a
-# driver query because the TWS state-server protocol needs the protobuf
-# runtime, which this sandbox does not ship (no installs allowed). The
-# pytest parity test auto-skips on missing protobuf and runs on any
-# real cluster (tests/test_streaming.py::test_tws_matcher_parity).
-
-
 def _q_snapshot_streamed(spark, sf):
     """Update-mode snapshot stream drained through the exactly-once
     epoch sink and folded back; oracle = the batch compactor's SQL."""

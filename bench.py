@@ -42,6 +42,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.gating_ledger import WINDOW  # noqa: E402
+
 # The round-1 query set: the fixed headline basket every round reports,
 # immune to suite growth (round-3's summed total fell 40% across rounds
 # while the engine got faster, purely because the suite grew).
@@ -57,20 +59,6 @@ HEADLINE_30 = [
     "transform_stats", "turn_pairs", "turn_range_from_times",
     "turns_enriched",
 ]
-
-
-def _tws_status() -> str:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return "available"
-    except ImportError:
-        return (
-            "SKIPPED(env): transformWithState needs the protobuf runtime "
-            "(TWS state-server protocol); this environment does not ship "
-            "it — tests/test_streaming.py::test_tws_matcher_parity "
-            "importorskips and runs on any real Spark 4 cluster"
-        )
 
 
 def build_spark(cpus: int):
@@ -161,19 +149,14 @@ def main() -> None:
         "turns_per_sec": round(n_turns * len(timings) / total, 1) if total else None,
         "cpus": cpus,
         # self-describing gate split (VERDICT r04 "Next round" #9): the
-        # driver's CORRECTNESS artifact gates the first 50 registry
+        # per-round CORRECTNESS artifact gates the first WINDOW registry
         # positions, so record which queries were driver-gated this
         # round without needing GATING.md
         "gate_window": {
-            "window_size": 50,
-            "driver_gated": list(qs)[:50],
-            "tail": list(qs)[50:],
+            "window_size": WINDOW,
+            "driver_gated": list(qs)[:WINDOW],
+            "tail": list(qs)[WINDOW:],
         },
-        # machine-readable env-skip record: the transformWithState form
-        # of the J1 matcher (streaming/matcher_tws.py) needs the
-        # protobuf runtime for the TWS state-server protocol; where
-        # absent, its parity test importorskips rather than fails
-        "tws_matcher": _tws_status(),
     }
     out_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"

@@ -452,7 +452,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 raise SystemExit("--checkpoint is required with --stream")
             from stellar_etl_spark.operators import rollups, sessions
             from stellar_etl_spark.streaming.matcher import match_pairs_stream
-            from stellar_etl_spark.streaming.pipeline import start_fanout, start_windowed
+            from stellar_etl_spark.streaming.pipeline import start_fanout
             from stellar_etl_spark.streaming.source import read_transcript_stream
 
             def src():
@@ -467,7 +467,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             # row-local tables share ONE fan-out query/checkpoint (all-or-
             # nothing per epoch); watermarked/stateful tables each need
             # their own stateful query (per-batch transforms would break
-            # their cross-batch semantics)
+            # their cross-batch semantics): a fan-out of one table
             windowed_builders = {
                 "sessions": lambda s: sessions.sessionize(s, cfg, watermark=True),
                 "tool_rate": lambda s: rollups.tool_rate(
@@ -489,9 +489,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     src(), args.out, f"{args.checkpoint}/fanout", fanout))
             for name in selected:
                 if name in windowed_builders:
-                    queries.append(start_windowed(
+                    queries.append(start_fanout(
                         _with_extras(windowed_builders[name](src())), args.out,
-                        f"{args.checkpoint}/{name}", name, query_name=name))
+                        f"{args.checkpoint}/{name}", {name: lambda df: df},
+                        query_name=name))
             for q in queries:
                 q.awaitTermination()
         else:

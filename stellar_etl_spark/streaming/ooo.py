@@ -18,15 +18,19 @@ watermark passes its last buffered event (EventTimeTimeout — the
 matcher's eviction machinery as ordered-replay finalization).
 
 Exactness: the emitted rows equal the ordered processor's output on
-ANY delivery permutation of the same input, provided event time is
+ANY delivery permutation of the same input, provided (1) event time is
 monotone in turn_idx within each conversation — the corpus invariant
-the DQ monitor audits as ts_regression. A monotonicity violation only
+the DQ monitor audits as ts_regression — and (2) (conv_id, turn_idx)
+is unique — the invariant the DQ monitor audits as dup_turn_idx. The
+replay keeps one row per turn_idx (the (idx, ts)-least), so a
+duplicated index drops a row the batch operator keeps; the parity
+tests assert the corpus has none. A monotonicity violation only
 DELAYS finalization (the prefix rule stops at the first row the
 watermark has not passed, in idx order); it never replays out of
 order. Under the parity construction (PARITY_DELAY larger than the
 corpus span, closer sentinels pushing the final watermark) nothing
 finalizes mid-stream and the single terminal replay is exact
-unconditionally.
+without (1), though it still needs (2).
 
 State: only the not-yet-final rows of each conversation — bounded by
 what a conversation produces within one watermark delay, the standard

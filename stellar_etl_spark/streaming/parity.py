@@ -35,6 +35,10 @@ test):
      the EpochCommitSink and ``read_final_snapshot`` folds
      latest-epoch-per-key — equal to batch compaction for ANY slicing.
 
+Every drain starts through ``streaming/pipeline.start_query`` and
+commits through the EpochCommitSink, the engine's one commit protocol;
+results are read back from committed epochs only (``read_table``).
+
 Scale note: the slicing/materialization exists only to drive the file
 stream deterministically in-sandbox; a real deployment streams the
 Iceberg table directly. Nothing here collects corpus data to the
@@ -46,6 +50,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -54,7 +59,12 @@ from pyspark.sql import functions as F
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.sources.transcripts import load_transcripts
-from stellar_etl_spark.streaming.sink import EpochCommitSink
+from stellar_etl_spark.streaming.pipeline import start_query
+from stellar_etl_spark.streaming.sink import (
+    EpochCommitSink,
+    epoch_stamped_writer,
+    foreach_batch_writer,
+)
 from stellar_etl_spark.streaming.source import read_transcript_stream
 
 CLOSER_CONV = "__closer__"
@@ -311,7 +321,6 @@ def streamed_turn_pairs(
     ship_package(spark)
     matcher = match_pairs_stream_ooo if ooo else match_pairs_stream
     src_dir = src_dir or _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_pairs_")
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
@@ -324,40 +333,49 @@ def streamed_turn_pairs(
         spark, src_dir,
         max_files_per_trigger=max_files_per_trigger, with_lineage=False
     )
-    with _drain_conf(spark, DRAIN_PARTITIONS_STATEFUL):
-        q = (
-            matcher(stream, parity_cfg)
-            .writeStream.queryName("parity_pairs")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
+    return _drain_append(
+        matcher(stream, parity_cfg), "pairs", DRAIN_PARTITIONS_STATEFUL
+    ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
-def _drain_append(df: DataFrame, name: str) -> str:
-    """Run an append-mode streaming DataFrame to completion into a fresh
-    parquet dir (availableNow drain); return the output path."""
+def _drain(
+    stream: DataFrame,
+    name: str,
+    writer: Callable[[EpochCommitSink], Callable[[DataFrame, int], None]],
+    output_mode: str = "append",
+    partitions: str = DRAIN_PARTITIONS,
+) -> EpochCommitSink:
+    """Run a streaming DataFrame to completion (availableNow drain)
+    through `writer(sink)` into a fresh epoch sink; return the sink."""
     work = tempfile.mkdtemp(prefix=f"parity_{name}_")
-    out = os.path.join(work, "out")
-    with _drain_conf(df.sparkSession):
-        q = (
-            df.writeStream.queryName(f"parity_{name}")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return out
+    sink = EpochCommitSink(os.path.join(work, "sink"))
+    with _drain_conf(stream.sparkSession, partitions):
+        start_query(
+            stream, writer(sink), os.path.join(work, "ckpt"),
+            f"parity_{name}", output_mode,
+        ).awaitTermination()
+    return sink
+
+
+def _drain_append(
+    stream: DataFrame, name: str, partitions: str = DRAIN_PARTITIONS
+) -> DataFrame:
+    """Drain an append-mode streaming DataFrame as a fan-out of one
+    table; return the committed rows."""
+    sink = _drain(
+        stream, name,
+        lambda sink: foreach_batch_writer(sink, {name: lambda df: df}),
+        partitions=partitions,
+    )
+    return sink.read_table(stream.sparkSession, name)
+
+
+def _drain_stamped(stream: DataFrame, table: str) -> EpochCommitSink:
+    """Drain an update-mode aggregation: each epoch's changed rows,
+    stamped with their epoch_id, commit as `table`."""
+    return _drain(
+        stream, table, lambda sink: epoch_stamped_writer(sink, table), "update"
+    )
 
 
 def streamed_sessions(
@@ -385,8 +403,9 @@ def streamed_sessions(
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
-    out = _drain_append(sessionize(stream, parity_cfg, watermark=True), "sessions")
-    return spark.read.parquet(out).filter(F.col("conv_id") != CLOSER_CONV)
+    return _drain_append(
+        sessionize(stream, parity_cfg, watermark=True), "sessions"
+    ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
 def streamed_tool_rate(
@@ -411,8 +430,9 @@ def streamed_tool_rate(
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     ).withWatermark("ts", PARITY_DELAY)
-    out = _drain_append(tool_rate(stream, cfg, exact="set"), "tool_rate")
-    return spark.read.parquet(out).filter(F.col("tool") != CLOSER_CONV)
+    return _drain_append(tool_rate(stream, cfg, exact="set"), "tool_rate").filter(
+        F.col("tool") != CLOSER_CONV
+    )
 
 
 def _doc_slice_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -473,16 +493,6 @@ def dedup_stream_agg(stream: DataFrame) -> DataFrame:
     )
 
 
-def dedup_epoch_writer(sink: EpochCommitSink):
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {DEDUP_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
-    return _write
-
-
 def fold_dedup_sink(spark: SparkSession, sink_root: str, sf_dir: str) -> DataFrame:
     """Fold the committed dedup deltas (latest epoch per fingerprint —
     cumulative aggregates make the fold order-safe) and join back to
@@ -525,25 +535,13 @@ def streamed_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once, vs the reference's in-process seen-hash map
     (/root/reference/cmd/export_assets.go:40-58)."""
     src_dir = _doc_slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_dedup_")
-    sink_root = os.path.join(work, "sink")
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    with _drain_conf(spark):
-        q = (
-            dedup_stream_agg(stream)
-            .writeStream.queryName("parity_dedup")
-            .outputMode("update")
-            .foreachBatch(dedup_epoch_writer(EpochCommitSink(sink_root)))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return fold_dedup_sink(spark, sink_root, sf_dir)
+    sink = _drain_stamped(dedup_stream_agg(stream), DEDUP_TABLE)
+    return fold_dedup_sink(spark, sink.root, sf_dir)
 
 
 def streamed_tool_rate_sliding(
@@ -560,10 +558,9 @@ def streamed_tool_rate_sliding(
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     ).withWatermark("ts", PARITY_DELAY)
-    out = _drain_append(
+    return _drain_append(
         tool_rate_sliding(stream, cfg, exact="set"), "tool_rate_sliding"
-    )
-    return spark.read.parquet(out).filter(F.col("tool") != CLOSER_CONV)
+    ).filter(F.col("tool") != CLOSER_CONV)
 
 
 def streamed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -687,8 +684,6 @@ def streamed_tool_conv_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_hll_")
-    sink = EpochCommitSink(os.path.join(work, "sink"))
     stream = (
         read_transcript_stream(
             spark, src_dir, max_files_per_trigger=2, with_lineage=False
@@ -696,24 +691,7 @@ def streamed_tool_conv_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("conv_id") != CLOSER_CONV)
         .filter(F.col("tool").isNotNull())
     )
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {HLL_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
-    with _drain_conf(spark):
-        q = (
-            hll_registers(stream, "conv_id", "tool")
-            .writeStream.queryName("parity_hll")
-            .outputMode("update")
-            .foreachBatch(_write)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _drain_stamped(hll_registers(stream, "conv_id", "tool"), HLL_TABLE)
 
     deltas = sink.read_table(spark, HLL_TABLE)
     regs = (
@@ -757,8 +735,6 @@ def streamed_latency_quantiles(
 
     ship_package(spark)
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_latq_")
-    sink = EpochCommitSink(os.path.join(work, "sink"))
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
@@ -766,8 +742,8 @@ def streamed_latency_quantiles(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
 
-    def _hist_writer(batch_df: DataFrame, epoch_id: int) -> None:
-        hist = (
+    def _hist(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(~F.col("evicted_unmatched"))
             .filter(F.col("conv_id") != CLOSER_CONV)
             .groupBy(
@@ -775,21 +751,12 @@ def streamed_latency_quantiles(
                 "latency_s",
             )
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .withColumn("epoch_id", F.lit(epoch_id))
         )
-        sink.write_epoch(epoch_id, {LAT_HIST_TABLE: hist})
 
-    with _drain_conf(spark):
-        q = (
-            match_pairs_stream(stream, parity_cfg)
-            .writeStream.queryName("parity_latq")
-            .outputMode("append")
-            .foreachBatch(_hist_writer)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _drain(
+        match_pairs_stream(stream, parity_cfg), "latq",
+        lambda sink: foreach_batch_writer(sink, {LAT_HIST_TABLE: _hist}),
+    )
 
     merged = (
         sink.read_table(spark, LAT_HIST_TABLE)
@@ -829,55 +796,6 @@ def streamed_latency_quantiles(
     )
 
 
-def streamed_turn_pairs_tws(
-    spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
-    """Drain the transformWithState matcher (streaming/matcher_tws.py)
-    over the sliced driver input — the SAME oracle as turn_pairs /
-    turn_pairs_streamed, proving the two stateful APIs are semantically
-    interchangeable. RocksDB provider is set for the drain (Spark
-    requires it for transformWithState) and restored after."""
-    from stellar_etl_spark.deploy import ship_package
-    from stellar_etl_spark.streaming.matcher_tws import (
-        ROCKSDB_PROVIDER,
-        match_pairs_stream_tws,
-    )
-
-    ship_package(spark)
-    src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_pairs_tws_")
-    parity_cfg = EngineConfig(
-        session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
-    )
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=1, with_lineage=False
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        with _drain_conf(spark):
-            q = (
-                match_pairs_stream_tws(stream, parity_cfg)
-                .writeStream.queryName("parity_pairs_tws")
-                .outputMode("append")
-                .format("parquet")
-                .option("path", os.path.join(work, "out"))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
-
-
 CMS_TABLE = "cms_counters"
 
 
@@ -900,29 +818,10 @@ def streamed_conv_turns_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_cms_")
-    sink = EpochCommitSink(os.path.join(work, "sink"))
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     ).filter(F.col("conv_id") != CLOSER_CONV)
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {CMS_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
-    with _drain_conf(spark):
-        q = (
-            cms_counters(stream, "conv_id")
-            .writeStream.queryName("parity_cms")
-            .outputMode("update")
-            .foreachBatch(_write)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _drain_stamped(cms_counters(stream, "conv_id"), CMS_TABLE)
 
     deltas = sink.read_table(spark, CMS_TABLE)
     counters = deltas.groupBy("d", "bucket").agg(
@@ -997,8 +896,6 @@ def streamed_conv_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure functions of the fold — run batch-side. Oracle: the batch
     conv_retention SQL."""
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_ret_")
-    sink = EpochCommitSink(os.path.join(work, "sink"))
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -1007,23 +904,7 @@ def streamed_conv_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("conv_id", "activity_day")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {RET_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
-    with _drain_conf(spark):
-        q = (
-            days_stream.writeStream.queryName("parity_retention")
-            .outputMode("update")
-            .foreachBatch(_write)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _drain_stamped(days_stream, RET_TABLE)
 
     days = (
         sink.read_table(spark, RET_TABLE)
@@ -1070,8 +951,7 @@ def streamed_turn_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first_seen_ts",
         "uses",
     )
-    out = _drain_append(joined, "turn_tools")
-    return spark.read.parquet(out)
+    return _drain_append(joined, "turn_tools")
 
 
 TURN_TOOLS_ORACLE_SQL = """
@@ -1113,8 +993,6 @@ def streamed_tool_transitions(
 
     ship_package(spark)
     src_dir = src_dir or _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_trans_")
-    sink = EpochCommitSink(os.path.join(work, "sink"))
     raw = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
@@ -1134,25 +1012,15 @@ def streamed_tool_transitions(
             .filter(F.col("tool").isNotNull())
         )
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = (
-            batch_df.groupBy("prev_tool", "tool")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .withColumn("epoch_id", F.lit(epoch_id))
+    def _partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("prev_tool", "tool").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
         )
-        sink.write_epoch(epoch_id, {TRANS_TABLE: partial})
 
-    with _drain_conf(spark):
-        q = (
-            detected
-            .writeStream.queryName("parity_trans")
-            .outputMode("append")
-            .foreachBatch(_write)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _drain(
+        detected, "trans",
+        lambda sink: foreach_batch_writer(sink, {TRANS_TABLE: _partial}),
+    )
 
     return (
         sink.read_table(spark, TRANS_TABLE)
@@ -1187,26 +1055,13 @@ def streamed_error_bursts(
     ship_package(spark)
     detector = error_bursts_stream_ooo if ooo else error_bursts_stream
     src_dir = src_dir or _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_bursts_")
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
-    with _drain_conf(spark, DRAIN_PARTITIONS_STATEFUL):
-        q = (
-            detector(stream, parity_cfg)
-            .writeStream.queryName("parity_bursts")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
+    return _drain_append(
+        detector(stream, parity_cfg), "bursts", DRAIN_PARTITIONS_STATEFUL
+    ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
 # --- streamed minhash-LSH dedup ----------------------------------------------
@@ -1231,16 +1086,6 @@ def streamed_dedup_minhash(
 
     ship_package(spark)
     src_dir = src_dir or _doc_slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_minhash_")
-    sink_root = os.path.join(work, "sink")
-    sink = EpochCommitSink(sink_root)
-
-    def writer(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {MINHASH_BUCKET_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         # 2 files/trigger: halves the state-store commits and the
@@ -1250,18 +1095,8 @@ def streamed_dedup_minhash(
         .option("maxFilesPerTrigger", 2)
         .parquet(src_dir)
     )
-    with _drain_conf(spark):
-        q = (
-            minhash_bucket_stream(stream)
-            .writeStream.queryName("parity_minhash")
-            .outputMode("update")
-            .foreachBatch(writer)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return fold_minhash_sink(spark, sink_root, sf_dir)
+    sink = _drain_stamped(minhash_bucket_stream(stream), MINHASH_BUCKET_TABLE)
+    return fold_minhash_sink(spark, sink.root, sf_dir)
 
 
 def fold_minhash_sink(spark: SparkSession, sink_root: str, sf_dir: str) -> DataFrame:
@@ -1319,10 +1154,6 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package(spark)
     src_dir = _doc_slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_bm25_")
-    sink_root = os.path.join(work, "sink")
-    sink = EpochCommitSink(sink_root)
-
     qstructs = ", ".join(
         f"named_struct('query_id', CAST({qid} AS BIGINT), 'token', '{t}')"
         for qid, q in fret.BM25_QUERIES
@@ -1352,40 +1183,22 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def writer(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            sink.write_epoch(
-                epoch_id,
-                {
-                    BM25_DL_TABLE: batch_df.select("doc_id", "dl")
-                    .distinct()
-                    .withColumn("epoch_id", F.lit(epoch_id)),
-                    BM25_TF_TABLE: batch_df.filter(F.col("tf") > 0)
-                    .select("query_id", "token", "doc_id", "dl", "tf")
-                    .withColumn("epoch_id", F.lit(epoch_id)),
-                },
-            )
-        finally:
-            batch_df.unpersist()
-
+    transforms = {
+        BM25_DL_TABLE: lambda df: df.select("doc_id", "dl").distinct(),
+        BM25_TF_TABLE: lambda df: df.filter(F.col("tf") > 0).select(
+            "query_id", "token", "doc_id", "dl", "tf"
+        ),
+    }
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .parquet(src_dir)
     )
-    with _drain_conf(spark):
-        q = (
-            index_rows(stream)
-            .writeStream.queryName("parity_bm25")
-            .outputMode("append")
-            .foreachBatch(writer)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return fold_bm25_sink(spark, sink_root)
+    sink = _drain(
+        index_rows(stream), "bm25",
+        lambda sink: foreach_batch_writer(sink, transforms),
+    )
+    return fold_bm25_sink(spark, sink.root)
 
 
 def fold_bm25_sink(spark: SparkSession, sink_root: str) -> DataFrame:
@@ -1433,38 +1246,30 @@ def streamed_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package(spark)
     src_dir = _doc_slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_lm_")
-    sink_root = os.path.join(work, "sink")
-    sink = EpochCommitSink(sink_root)
 
-    def writer(batch_df: DataFrame, epoch_id: int) -> None:
-        parts = fscore.lm_parts(batch_df)
-        sink.write_epoch(
-            epoch_id,
-            {
-                LM_DOCS_TABLE: parts["docs"].withColumn("epoch_id", F.lit(epoch_id)),
-                LM_OCC_TABLE: parts["occ"].withColumn("epoch_id", F.lit(epoch_id)),
-                LM_UNI_TABLE: parts["uni"].withColumn("epoch_id", F.lit(epoch_id)),
-                LM_BIG_TABLE: parts["big"].withColumn("epoch_id", F.lit(epoch_id)),
-            },
-        )
+    def writer(sink: EpochCommitSink) -> Callable[[DataFrame, int], None]:
+        # lm_parts stages the batch once (an eager local checkpoint), so
+        # all four tables come from one call rather than one per table
+        def _write(batch_df: DataFrame, epoch_id: int) -> None:
+            parts = fscore.lm_parts(batch_df)
+            sink.write_epoch(
+                epoch_id,
+                {
+                    LM_DOCS_TABLE: parts["docs"],
+                    LM_OCC_TABLE: parts["occ"],
+                    LM_UNI_TABLE: parts["uni"],
+                    LM_BIG_TABLE: parts["big"],
+                },
+            )
+
+        return _write
 
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 2)
         .parquet(src_dir)
     )
-    with _drain_conf(spark):
-        q = (
-            stream.writeStream.queryName("parity_ngram_lm")
-            .outputMode("append")
-            .foreachBatch(writer)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return fold_lm_sink(spark, sink_root)
+    return fold_lm_sink(spark, _drain(stream, "ngram_lm", writer).root)
 
 
 def fold_lm_sink(spark: SparkSession, sink_root: str) -> DataFrame:
@@ -1510,26 +1315,13 @@ def streamed_dq_violations(
 
     ship_package(spark)
     src_dir = src_dir or _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_dq_")
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
-    with _drain_conf(spark):
-        q = (
-            dq_violations_stream(inject_dq_violations(stream), parity_cfg)
-            .writeStream.queryName("parity_dq")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
+    return _drain_append(
+        dq_violations_stream(inject_dq_violations(stream), parity_cfg), "dq"
+    ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
 # --- native stream-stream range join -----------------------------------------
@@ -1546,25 +1338,12 @@ def streamed_turn_replies(
     from stellar_etl_spark.streaming.replies import reply_join_stream, reply_pairs
 
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_replies_")
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
-    with _drain_conf(spark):
-        q = (
-            reply_join_stream(stream, parity_cfg)
-            .writeStream.queryName("parity_replies")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return reply_pairs(
-        spark.read.parquet(os.path.join(work, "out")).filter(
+        _drain_append(reply_join_stream(stream, parity_cfg), "replies").filter(
             F.col("conv_id") != CLOSER_CONV
         )
     )
@@ -1587,8 +1366,9 @@ def streamed_tool_rate_peak(
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     ).withWatermark("ts", PARITY_DELAY)
-    out = _drain_append(tool_rate_peak(stream, cfg), "tool_rate_peak")
-    return spark.read.parquet(out).filter(F.col("tool") != CLOSER_CONV)
+    return _drain_append(tool_rate_peak(stream, cfg), "tool_rate_peak").filter(
+        F.col("tool") != CLOSER_CONV
+    )
 
 
 def streamed_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,8 +1391,9 @@ def streamed_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = injected.dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx"]
     ).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    out = _drain_append(deduped, "turn_dedup")
-    return spark.read.parquet(out).filter(F.col("conv_id") != CLOSER_CONV)
+    return _drain_append(deduped, "turn_dedup").filter(
+        F.col("conv_id") != CLOSER_CONV
+    )
 
 
 def streamed_turn_replies_outer(
@@ -1627,26 +1408,13 @@ def streamed_turn_replies_outer(
     from stellar_etl_spark.streaming.replies import reply_join_outer_stream
 
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_replies_outer_")
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2, with_lineage=False
     )
-    with _drain_conf(spark):
-        q = (
-            reply_join_outer_stream(stream, parity_cfg)
-            .writeStream.queryName("parity_replies_outer")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", os.path.join(work, "out"))
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(os.path.join(work, "out")).filter(
-        F.col("conv_id") != CLOSER_CONV
-    )
+    return _drain_append(
+        reply_join_outer_stream(stream, parity_cfg), "replies_outer"
+    ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
 FANOUT_TURNS = "fanout_turns"
@@ -1660,8 +1428,9 @@ def streamed_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     THREE tables inside a single foreachBatch — a row-local projection
     (fanout_turns), a tumbling-window rate partial (fanout_rate, fold =
     SUM), and a per-(tool, conv) count partial (fanout_convs, fold =
-    SUM) — committed all-or-nothing per epoch through
-    streaming/pipeline.start_fanout, the engine's analog of the
+    SUM) — committed all-or-nothing per epoch by the fan-out writer
+    (sink.foreach_batch_writer, as streaming/pipeline.start_fanout
+    runs it), the engine's analog of the
     reference's one-consumer-loop/many-tables demux
     (cmd/export_ledger_entry_changes.go:129-271) with the atomicity it
     lacks. The serve-time fold joins all three tables into one per-tool
@@ -1670,11 +1439,7 @@ def streamed_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated or dropped in ANY of the three tables skews its columns
     (n_turns / rate_total / n_windows / n_convs / conv_turns_total)
     away from the batch oracle."""
-    from stellar_etl_spark.streaming.pipeline import start_fanout
-
     src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_fanout_")
-    sink_root = os.path.join(work, "sink")
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=2
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -1698,18 +1463,9 @@ def streamed_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         ),
     }
-    with _drain_conf(spark):
-        q = start_fanout(
-            stream,
-            sink_root,
-            os.path.join(work, "ckpt"),
-            transforms,
-            available_now=True,
-            query_name="parity_fanout",
-        )
-        q.awaitTermination()
-
-    sink = EpochCommitSink(sink_root)
+    sink = _drain(
+        stream, "fanout", lambda sink: foreach_batch_writer(sink, transforms)
+    )
     a = (
         sink.read_table(spark, FANOUT_TURNS)
         .groupBy("tool")

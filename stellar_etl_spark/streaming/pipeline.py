@@ -1,30 +1,54 @@
-"""Streaming pipeline assembly — the export_ledger_entry_changes analog.
+"""Streaming query assembly — the export_ledger_entry_changes analog.
 
-One transcript stream fans out to N output tables inside a single
-foreachBatch (one checkpoint, one lineage trail, all-or-nothing epoch
-commit), mirroring the reference's one-consumer-loop/many-tables
-dispatch (/root/reference/cmd/export_ledger_entry_changes.go:79-291)
-with the atomicity it lacks.
+`start_query` is the one place the engine starts a streaming query: it
+owns the query name, the output mode, the foreachBatch writer, the
+checkpoint and the trigger (an availableNow drain, or a live
+processing-time trigger every LIVE_TRIGGER). Every query commits
+through the exactly-once `EpochCommitSink` protocol (sink.py).
 
-Two query shapes:
-  * ``run_fanout``  — per-batch projections/compactions via
-    foreachBatch into an EpochCommitSink (tables whose rows are
-    row-local or per-key-in-batch).
-  * ``run_windowed`` — watermarked stateful aggregations (tumbling /
-    sliding / session rollups, pair matching) written in append mode,
-    also through foreachBatch so the same exactly-once commit protocol
-    covers them.
+`start_fanout` is the common writer: one stream fans out to N output
+tables inside a single foreachBatch (one checkpoint, one lineage trail,
+all-or-nothing epoch commit), mirroring the reference's
+one-consumer-loop/many-tables dispatch
+(cmd/export_ledger_entry_changes.go:79-291) with the atomicity it
+lacks. A watermarked stateful aggregation (tumbling /
+sliding / session rollups, pair matching) is a fan-out with one table
+and the identity transform, written in append mode.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.streaming.sink import EpochCommitSink, foreach_batch_writer
+
+LIVE_TRIGGER = "2 seconds"
+
+
+def start_query(
+    stream: DataFrame,
+    writer: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    query_name: str,
+    output_mode: str = "append",
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start `stream` with `writer` as its foreachBatch function. Caller
+    awaits termination (availableNow) or stops the query (live)."""
+    w = (
+        stream.writeStream.queryName(query_name)
+        .outputMode(output_mode)
+        .foreachBatch(writer)
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        w = w.trigger(availableNow=True)
+    else:
+        w = w.trigger(processingTime=LIVE_TRIGGER)
+    return w.start()
 
 
 def start_fanout(
@@ -36,44 +60,7 @@ def start_fanout(
     query_name: str = "fanout",
 ) -> StreamingQuery:
     """Start the multi-table fan-out query. Caller awaits termination."""
-    sink = EpochCommitSink(sink_root)
-    writer = foreach_batch_writer(sink, transforms)
-    w = (
-        stream.writeStream.queryName(query_name)
-        .foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
+    writer = foreach_batch_writer(EpochCommitSink(sink_root), transforms)
+    return start_query(
+        stream, writer, checkpoint, query_name, available_now=available_now
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime="2 seconds")
-    return w.start()
-
-
-def start_windowed(
-    agg_stream: DataFrame,
-    sink_root: str,
-    checkpoint: str,
-    table: str,
-    available_now: bool = True,
-    output_mode: str = "append",
-    query_name: str = "windowed",
-) -> StreamingQuery:
-    """Start one watermarked/stateful aggregation query, exactly-once
-    into its own table via the epoch-commit protocol."""
-    sink = EpochCommitSink(sink_root)
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(epoch_id, {table: batch_df})
-
-    w = (
-        agg_stream.writeStream.queryName(query_name)
-        .outputMode(output_mode)
-        .foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime="2 seconds")
-    return w.start()

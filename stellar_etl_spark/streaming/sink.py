@@ -25,8 +25,8 @@ The manifest also carries per-partition lineage (input files + row
 counts per shuffle partition) and observed metrics — the
 per-partition lineage + per-micro-batch metrics the north_rule
 requires. On a cluster this class is swapped for the Iceberg writer
-(`df.writeStream.format("iceberg")` has the same epoch-id semantics
-via checkpointed batch ids); the commit protocol here exists so the
+(an Iceberg streaming sink has the same epoch-id semantics via
+checkpointed batch ids); the commit protocol here exists so the
 engine is self-contained in this sandbox.
 """
 
@@ -260,28 +260,48 @@ def lineage_of(batch_df: DataFrame) -> dict:
 def foreach_batch_writer(
     sink: EpochCommitSink,
     transforms: Mapping[str, Callable[[DataFrame], DataFrame]],
-    with_lineage: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: one micro-batch -> N tables,
     committed all-or-nothing under one epoch id.
 
-    The batch is persisted so the N table transforms and the lineage
-    pass share one materialization instead of re-reading the source.
-    A replayed, already-committed epoch skips the lineage pass: its
-    manifest is written, and `write_epoch` only re-evaluates the batch.
+    A batch that carries `_source_file` (source.py) gets a lineage pass.
+    The batch is persisted only when more than one consumer reads it
+    (the lineage pass, or more than one table), so the consumers share
+    one materialization instead of re-reading the source; a single
+    table of a windowed query writes straight through. A replayed,
+    already-committed epoch has one consumer: its manifest is written,
+    and `write_epoch` only re-evaluates the batch.
     """
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.persist()
+        replay = sink.committed(epoch_id)
+        has_files = "_source_file" in batch_df.columns
+        trace = has_files and not replay
+        shared = not replay and trace + len(transforms) > 1
+        if shared:
+            batch_df = batch_df.persist()
         try:
-            trace = with_lineage and not sink.committed(epoch_id)
             lineage = lineage_of(batch_df) if trace else None
-            tables = {
-                name: fn(batch_df.drop("_source_file"))
-                for name, fn in transforms.items()
-            }
+            data = batch_df.drop("_source_file") if has_files else batch_df
+            tables = {name: fn(data) for name, fn in transforms.items()}
             sink.write_epoch(epoch_id, tables, lineage=lineage)
         finally:
-            batch_df.unpersist()
+            if shared:
+                batch_df.unpersist()
+
+    return _write
+
+
+def epoch_stamped_writer(
+    sink: EpochCommitSink, table: str
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch function of an update-mode query: each batch's
+    changed rows, stamped with their `epoch_id`, commit as one table.
+    Readers fold the deltas by keeping the latest epoch per key."""
+
+    def _write(batch_df: DataFrame, epoch_id: int) -> None:
+        sink.write_epoch(
+            epoch_id, {table: batch_df.withColumn("epoch_id", F.lit(epoch_id))}
+        )
 
     return _write

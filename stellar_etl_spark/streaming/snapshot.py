@@ -41,7 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
-from stellar_etl_spark.streaming.sink import EpochCommitSink
+from stellar_etl_spark.streaming.pipeline import start_query
+from stellar_etl_spark.streaming.sink import EpochCommitSink, epoch_stamped_writer
 
 SNAPSHOT_TABLE = "snapshot"
 
@@ -180,27 +181,13 @@ def start_snapshot_stream(
     the changed-key snapshot rows (stamped with their epoch) through
     the exactly-once epoch protocol. ttl_s switches to the
     key-retiring stateful form (see module docstring)."""
-    sink = EpochCommitSink(sink_root)
     src = stream.drop("_source_file")
     snap = snapshot_ttl(src, cfg, ttl_s) if ttl_s else snapshot_agg(src)
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        sink.write_epoch(
-            epoch_id,
-            {SNAPSHOT_TABLE: batch_df.withColumn("epoch_id", F.lit(epoch_id))},
-        )
-
-    w = (
-        snap.writeStream.queryName(query_name)
-        .outputMode("update")
-        .foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
+    writer = epoch_stamped_writer(EpochCommitSink(sink_root), SNAPSHOT_TABLE)
+    return start_query(
+        snap, writer, checkpoint, query_name,
+        output_mode="update", available_now=available_now,
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime="2 seconds")
-    return w.start()
 
 
 def read_final_snapshot(spark: SparkSession, sink_root: str) -> DataFrame:

@@ -34,10 +34,22 @@ def test_matcher_disorder_reversed_equals_batch(spark):
     from stellar_etl_spark.operators.pairs import match_pairs
     from stellar_etl_spark.sources.transcripts import load_transcripts
 
+    src_dir = parity.disorder_dir(spark, SF_UNIT, "reverse")
+    # the ordered replay keeps one row per (conv_id, turn_idx)
+    # (streaming/ooo.py, exactness clause): a corpus with a duplicated
+    # index would diverge from the batch operator, so fail on it here
+    dups = (
+        spark.read.parquet(src_dir)
+        .groupBy("conv_id", "turn_idx")
+        .count()
+        .filter(F.col("count") > 1)
+    )
+    assert dups.count() == 0, dups.limit(5).collect()
+
     got = parity.streamed_turn_pairs(
         spark,
         SF_UNIT,
-        src_dir=parity.disorder_dir(spark, SF_UNIT, "reverse"),
+        src_dir=src_dir,
         max_files_per_trigger=1,
         ooo=True,
     )

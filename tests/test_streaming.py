@@ -9,6 +9,7 @@ gate (same input + watermark => identical rows, SURVEY §5) and the
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -21,7 +22,6 @@ from stellar_etl_spark.operators import pairs as batch_pairs
 from stellar_etl_spark.operators import rollups, sessions
 from stellar_etl_spark.sources.generator import write_transcripts
 from stellar_etl_spark.streaming.matcher import match_pairs_stream
-from stellar_etl_spark.streaming.metrics import EngineQueryListener
 
 
 def _hard_kill(q):
@@ -46,8 +46,12 @@ def _hard_kill(q):
     except StreamingQueryException:
         pass
 
-from stellar_etl_spark.streaming.pipeline import start_fanout, start_windowed
-from stellar_etl_spark.streaming.sink import EpochCommitSink
+from stellar_etl_spark.streaming.pipeline import start_fanout
+from stellar_etl_spark.streaming.sink import (
+    EpochCommitSink,
+    epoch_stamped_writer,
+    foreach_batch_writer,
+)
 from stellar_etl_spark.streaming.source import (
     read_transcript_batch,
     read_transcript_stream,
@@ -62,6 +66,11 @@ def data_dir(tmp_path_factory):
     n = write_transcripts(d, n_convs=150, n_files=6, seed=42)
     assert n > 300
     return d
+
+
+def _manifest(sink, epoch_id):
+    with open(os.path.join(sink.root, "_commits", f"{epoch_id:020d}.json")) as f:
+        return json.load(f)
 
 
 def _rows(df, cols=None):
@@ -80,20 +89,19 @@ def _final_watermark(spark, data_dir, delay_s=600):
     return ms - datetime.timedelta(seconds=delay_s)
 
 
+def _identity(df):
+    return df
+
+
 def test_stream_tool_rate_equals_batch(spark, data_dir, tmp_path):
-    listener = EngineQueryListener()
-    spark.streams.addListener(listener)
-    try:
-        stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
-                                        with_lineage=False)
-        agg = rollups.tool_rate(
-            stream.withWatermark("ts", CFG.watermark_delay), CFG, exact=False
-        )
-        q = start_windowed(agg, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
-                           "tool_rate", query_name="t_rate")
-        assert q.awaitTermination(540), "stream did not finish within 540s"
-    finally:
-        spark.streams.removeListener(listener)
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
+                                    with_lineage=False)
+    agg = rollups.tool_rate(
+        stream.withWatermark("ts", CFG.watermark_delay), CFG, exact=False
+    )
+    q = start_fanout(agg, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                     {"tool_rate": _identity}, query_name="t_rate")
+    assert q.awaitTermination(540), "stream did not finish within 540s"
 
     wm = _final_watermark(spark, data_dir)
     got = EpochCommitSink(str(tmp_path / "sink")).read_table(spark, "tool_rate")
@@ -105,17 +113,11 @@ def test_stream_tool_rate_equals_batch(spark, data_dir, tmp_path):
 
 
 def test_stream_sessions_equal_batch(spark, data_dir, tmp_path):
-    listener = EngineQueryListener()
-    spark.streams.addListener(listener)
-    try:
-        stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=3,
-                                        with_lineage=False)
-        agg = sessions.sessionize(stream, CFG, watermark=True)
-        q = start_windowed(agg, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
-                           "sessions", query_name="t_sessions")
-        assert q.awaitTermination(540), "stream did not finish within 540s"
-    finally:
-        spark.streams.removeListener(listener)
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=3)
+    agg = sessions.sessionize(stream, CFG, watermark=True)
+    q = start_fanout(agg, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                     {"sessions": _identity}, query_name="t_sessions")
+    assert q.awaitTermination(540), "stream did not finish within 540s"
 
     wm = _final_watermark(spark, data_dir)
     got = EpochCommitSink(str(tmp_path / "sink")).read_table(spark, "sessions")
@@ -133,19 +135,20 @@ def test_stream_sessions_equal_batch(spark, data_dir, tmp_path):
     closed = sessions.closed_sessions(read_transcript_batch(spark, data_dir), CFG, wm)
     assert _rows(closed, cols) == expected
 
+    # the session aggregate drops the source's _source_file, so its
+    # batches get no lineage pass (and, one table, no persist)
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    manifests = [_manifest(sink, e) for e in sink.committed_epochs()]
+    assert manifests and all(m["lineage"] == {} for m in manifests)
+
 
 def test_matcher_stream_equals_batch(spark, data_dir, tmp_path):
-    listener = EngineQueryListener()
-    spark.streams.addListener(listener)
-    try:
-        stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
-                                        with_lineage=False)
-        matched = match_pairs_stream(stream, CFG)
-        q = start_windowed(matched, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
-                           "turn_pairs", query_name="t_pairs", output_mode="append")
-        assert q.awaitTermination(540), "stream did not finish within 540s"
-    finally:
-        spark.streams.removeListener(listener)
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
+                                    with_lineage=False)
+    matched = match_pairs_stream(stream, CFG)
+    q = start_fanout(matched, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                     {"turn_pairs": _identity}, query_name="t_pairs")
+    assert q.awaitTermination(540), "stream did not finish within 540s"
 
     got = EpochCommitSink(str(tmp_path / "sink")).read_table(spark, "turn_pairs")
     batch = batch_pairs.match_pairs(read_transcript_batch(spark, data_dir), CFG)
@@ -181,11 +184,7 @@ def test_exactly_once_resume(spark, data_dir, tmp_path):
     s1 = read_transcript_stream(spark, data_dir, max_files_per_trigger=1)
     q1 = (
         s1.writeStream.queryName("phase1")
-        .foreachBatch(
-            __import__("stellar_etl_spark.streaming.sink", fromlist=["x"]).foreach_batch_writer(
-                EpochCommitSink(sink_root), transforms
-            )
-        )
+        .foreachBatch(foreach_batch_writer(EpochCommitSink(sink_root), transforms))
         .option("checkpointLocation", ckpt)
         .option("maxFilesPerTrigger", 1)
         .trigger(processingTime="1 second")
@@ -214,12 +213,7 @@ def test_exactly_once_resume(spark, data_dir, tmp_path):
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
     # lineage captured per epoch
-    import json
-
-    manifests = [
-        json.load(open(os.path.join(sink_root, "_commits", f"{e:020d}.json")))
-        for e in sink.committed_epochs()
-    ]
+    manifests = [_manifest(sink, e) for e in sink.committed_epochs()]
     assert all("partitions" in m["lineage"] for m in manifests)
     files = [f for m in manifests for f in m["lineage"].get("input_files", [])]
     assert len(set(files)) == 6  # every input file accounted for exactly once
@@ -286,9 +280,9 @@ def test_default_state_width_is_session_cores(spark, data_dir, tmp_path):
 
     stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=3,
                                     with_lineage=False)
-    q = start_windowed(sessions.sessionize(stream, CFG, watermark=True),
-                       str(tmp_path / "sink"), str(tmp_path / "ckpt"),
-                       "sessions", query_name="t_state_width")
+    q = start_fanout(sessions.sessionize(stream, CFG, watermark=True),
+                     str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                     {"sessions": _identity}, query_name="t_state_width")
     assert q.awaitTermination(540), "stream did not finish within 540s"
     widths = [op["numStateStoreInstances"]
               for p in q.recentProgress for op in p["stateOperators"]]
@@ -540,7 +534,9 @@ def test_dedup_stream_kill_resume_equals_batch(spark, tmp_path):
             parity.dedup_stream_agg(stream)
             .writeStream.queryName("dedup_resume")
             .outputMode("update")
-            .foreachBatch(parity.dedup_epoch_writer(EpochCommitSink(sink_root)))
+            .foreachBatch(
+                epoch_stamped_writer(EpochCommitSink(sink_root), parity.DEDUP_TABLE)
+            )
             .option("checkpointLocation", ckpt)
         )
         w = w.trigger(availableNow=True) if available_now else w.trigger(
@@ -755,34 +751,6 @@ def test_snapshot_fold_survives_compaction(spark, data_dir, tmp_path):
     assert after == before
 
 
-def test_tws_matcher_parity(spark, tmp_path):
-    """transformWithState matcher == batch matcher on the same input
-    (J1 across both stateful APIs), FULL-row parity — matched rows AND
-    the handleExpiredTimer eviction rows (the round-3 gap: only
-    non-evicted rows were compared, leaving the timer path unchecked).
-    Uses the parity construction (closer sentinels + huge delay,
-    streaming/parity.streamed_turn_pairs_tws) so the final watermark
-    deterministically fires every pending timer, exactly like the
-    driver-gated classic matcher. Skips where the TWS state-server
-    protocol's protobuf runtime is absent (this sandbox); runs
-    unmodified on a real Spark 4 cluster."""
-    pytest.importorskip("google.protobuf")
-    from stellar_etl_spark.streaming.parity import streamed_turn_pairs_tws
-    from stellar_etl_spark.sources.transcripts import load_transcripts
-    from tests.conftest import SF_UNIT
-
-    got = streamed_turn_pairs_tws(spark, SF_UNIT)
-    batch = batch_pairs.match_pairs(load_transcripts(spark, SF_UNIT))
-    cols = ["conv_id", "user_turn_idx", "response_turn_idx", "response_role",
-            "response_tool", "evicted_unmatched"]
-    got_all = _rows(got, cols)
-    assert got_all == _rows(batch, cols)
-    # both paths must be non-trivially exercised
-    n_evicted = sum(1 for r in got_all if r[-1])
-    assert n_evicted > 0, "no eviction rows — timer path not exercised"
-    assert len(got_all) - n_evicted > 100
-
-
 def test_transitions_resume_preserves_pattern_state(spark, data_dir, tmp_path):
     """Kill the CEP transition stream mid-input, resume from the same
     checkpoint: the per-conversation last-tool ValueState survives the
@@ -981,13 +949,9 @@ def test_minhash_resume_preserves_bucket_state(spark, tmp_path):
     src_dir = parity._doc_slice_dir(spark, SF_UNIT)
     sink_root = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    sink = EpochCommitSink(sink_root)
-
-    def writer(bdf, eid):
-        sink.write_epoch(
-            eid,
-            {parity.MINHASH_BUCKET_TABLE: bdf.withColumn("epoch_id", F.lit(eid))},
-        )
+    writer = epoch_stamped_writer(
+        EpochCommitSink(sink_root), parity.MINHASH_BUCKET_TABLE
+    )
 
     def start(available_now):
         stream = (
@@ -1558,3 +1522,20 @@ def test_ngram_lm_resume_absorbs_replayed_epochs(spark, tmp_path):
     # exactly-once roster: one doc row per corpus doc
     n_docs = load_corpus(spark, SF_UNIT).count()
     assert sink.read_table(spark, parity.LM_DOCS_TABLE).count() == n_docs
+
+
+def test_one_query_starter():
+    """streaming/pipeline.py is the only module of the package that
+    starts a streaming query, so every query shares one trigger policy
+    and one commit protocol (the epoch sink)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "stellar_etl_spark"
+    starter = pkg / "streaming" / "pipeline.py"
+    assert ".writeStream" in starter.read_text()
+    others = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != starter and ".writeStream" in p.read_text()
+    )
+    assert others == [], others
