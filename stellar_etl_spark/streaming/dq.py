@@ -37,12 +37,14 @@ and emitted immediately, and only the retained suffix plus the
 boundary group's (idx, max_us) stays in state. Emitted rows are
 identical to what the final timeout would have produced, PROVIDED no
 later row arrives with idx <= the finalized boundary; such a row is
-ignored by the order checks (its range was already adjudicated — the
+left out of the order checks (its range was already adjudicated — the
 documented exactness condition: per-conversation idx disorder span
 must stay under the threshold, which the default 4096 makes true for
-any non-adversarial stream). The oracle-parity drains never reach the
-threshold, so driver rows remain exact; the hot-conversation test
-pins the bounded-state behavior with a tiny threshold.
+any non-adversarial stream) and counted instead: each one emits a
+``late_after_finalize`` row whose detail is the boundary idx. The
+oracle-parity drains never reach the threshold, so driver rows remain
+exact; the hot-conversation test pins the bounded-state behavior with
+a tiny threshold.
 
 The two ROW-LOCAL checks (bad_role, empty_text) need no state and no
 watermark wait: they stream through a stateless filter branch of the
@@ -174,6 +176,7 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
             return
 
         groups: dict[int, list[int]] = {}
+        emitted: list[tuple] = []
         b_idx, b_max, high_us = _NO_BOUNDARY, 0, 0
         if state.exists:
             s_idx, s_cnt, s_min, s_max, b_idx, b_max, high_us = state.get
@@ -194,8 +197,13 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
             )
             if b_idx != _NO_BOUNDARY:
                 # rows at or below the finalized boundary were already
-                # adjudicated (see module doc)
-                chunk = chunk[chunk["idx"] > b_idx]
+                # adjudicated: count them, keep them out (see module doc)
+                late = chunk["idx"] <= b_idx
+                emitted.extend(
+                    ("late_after_finalize", conv_id, int(i), str(b_idx))
+                    for i in chunk["idx"][late]
+                )
+                chunk = chunk[~late]
             agg = chunk.groupby("idx")["us"].agg(["count", "min", "max"])
             for idx, c, mn, mx in zip(
                 agg.index, agg["count"], agg["min"], agg["max"]
@@ -210,11 +218,10 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
                     g[2] = max(g[2], mx)
 
         idxs = sorted(groups)
-        emitted: list[tuple] = []
         if len(idxs) > max_open_groups:
             cut = len(idxs) - keep_groups
             head, idxs = idxs[:cut], idxs[cut:]
-            emitted = _adjudicate(
+            emitted += _adjudicate(
                 conv_id,
                 head,
                 [groups[i][0] for i in head],
@@ -260,7 +267,10 @@ def dq_violations_stream(
     watermark passes its last event — or incrementally once the
     conversation's open-group run exceeds ``max_open_groups`` (bounded
     state; see module doc). Output rows equal the batch checker's
-    (operators/dq.DQ_ORACLE_SQL) for the same input."""
+    (operators/dq.DQ_ORACLE_SQL) for the same input, as long as no row
+    arrives at or below a partially finalized boundary; each such row
+    is left out of the order checks and emits one
+    ``late_after_finalize`` row (detail: the boundary idx)."""
     if keep_groups is None:
         keep_groups = max(1, max_open_groups // 2)
     wm = df.withWatermark("ts", cfg.watermark_delay)

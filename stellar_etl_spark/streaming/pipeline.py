@@ -11,9 +11,11 @@ tables inside a single foreachBatch (one checkpoint, one lineage trail,
 all-or-nothing epoch commit), mirroring the reference's
 one-consumer-loop/many-tables dispatch
 (cmd/export_ledger_entry_changes.go:79-291) with the atomicity it
-lacks. A watermarked stateful aggregation (tumbling /
-sliding / session rollups, pair matching) is a fan-out with one table
-and the identity transform, written in append mode.
+lacks. Lineage rides the table writes (sink.foreach_batch_writer), so
+a fan-out of one table runs one Spark job per epoch. A watermarked
+stateful aggregation (tumbling / sliding / session rollups, pair
+matching) is a fan-out with one table and the identity transform,
+written in append mode.
 """
 
 from __future__ import annotations

@@ -21,10 +21,18 @@ invariant structural, Iceberg-style:
     `write_epoch` detects an existing manifest and (re)writes
     deterministically — same input, same epoch id, same rows.
 
-The manifest also carries per-partition lineage (input files + row
-counts per shuffle partition) and observed metrics — the
-per-partition lineage + per-micro-batch metrics the north_rule
-requires. On a cluster this class is swapped for the Iceberg writer
+The manifest also records what each epoch did, without a Spark job of
+its own (the north_rule's per-partition lineage + per-micro-batch
+metrics):
+
+  * per table, `rows` and `partitions` (write-task partition -> rows),
+    read from the Parquet footers of the part files the table write
+    just produced — metadata reads on the driver;
+  * for a stream that carries `_source_file` (source.py), `lineage`:
+    the epoch's distinct `input_files` and input `rows`, observed
+    (`DataFrame.observe`) by the table writes themselves.
+
+On a cluster this class is swapped for the Iceberg writer
 (an Iceberg streaming sink has the same epoch-id semantics via
 checkpointed batch ids); the commit protocol here exists so the
 engine is self-contained in this sandbox.
@@ -38,7 +46,9 @@ import tempfile
 import time
 from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -66,9 +76,14 @@ class EpochCommitSink:
         self,
         epoch_id: int,
         tables: Mapping[str, DataFrame],
-        lineage: dict | None = None,
+        lineage: Callable[[], dict] | None = None,
     ) -> bool:
         """Write all tables for one epoch, then commit atomically.
+
+        Each table's manifest entry carries its `rows` and `partitions`
+        from the footers of the files its write produced. `lineage` is
+        called after the writes (whose pass it may observe) and before
+        the commit; its dict becomes the manifest's `lineage`.
 
         Returns False if the epoch was already committed (idempotent
         replay after checkpoint restart — the exactly-once guarantee).
@@ -96,12 +111,19 @@ class EpochCommitSink:
             "epoch_id": epoch_id,
             "committed_at": time.time(),
             "tables": {},
-            "lineage": lineage or {},
+            "lineage": {},
         }
         for name, df in tables.items():
             path = os.path.join(self.root, "data", name, f"epoch={epoch_id}")
             df.write.mode("overwrite").parquet(path)
-            manifest["tables"][name] = {"path": path}
+            parts = _footer_rows(path)
+            manifest["tables"][name] = {
+                "path": path,
+                "rows": sum(parts.values()),
+                "partitions": parts,
+            }
+        if lineage is not None:
+            manifest["lineage"] = lineage()
         # atomic commit: write-then-rename within the same filesystem
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_commits"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -234,27 +256,56 @@ class EpochCommitSink:
         return spark.read.parquet(*paths)
 
 
-def lineage_of(batch_df: DataFrame) -> dict:
-    """Per-partition lineage of one micro-batch: shuffle-partition ->
-    rows, plus the distinct source files (when the stream carries
-    `_source_file`, source.py). ONE job over the cached batch: the
-    per-partition count and the per-partition file set ride the same
-    aggregation. (An Observation can't replace this — observed metrics
-    are whole-DataFrame aggregates, not a per-partition map.) Output is
-    metadata-sized: #shuffle-partitions rows."""
-    out: dict = {}
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if "_source_file" in batch_df.columns:
-        aggs.append(F.collect_set("_source_file").alias("files"))
-    parts = (
-        batch_df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(*aggs)
-        .collect()
+def _footer_rows(path: str) -> dict[str, int]:
+    """Write-task partition -> rows of the part files one table write
+    left in `path`, read from their Parquet footers. The
+    `part-NNNNN-...` prefix is the task's partition index (a task that
+    rolls over to a new file writes several under one index)."""
+    rows: dict[int, int] = {}
+    for f in os.listdir(path):
+        if f.startswith("part-") and f.endswith(".parquet"):
+            pid = int(f.split("-")[1])
+            n = pq.read_metadata(os.path.join(path, f)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return {str(p): rows[p] for p in sorted(rows)}
+
+
+def _observe(batch_df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`batch_df` (it carries `_source_file`) with its lineage metrics
+    attached: whichever action first reads the result fills the
+    returned observation."""
+    obs = Observation()
+    observed = batch_df.observe(
+        obs,
+        F.collect_set("_source_file").alias("input_files"),
+        F.count(F.lit(1)).alias("rows"),
     )
-    if "_source_file" in batch_df.columns:
-        out["input_files"] = sorted({f for r in parts for f in r["files"]})
-    out["partitions"] = {str(r["pid"]): r["n"] for r in parts}
-    return out
+    return observed, obs
+
+
+def lineage_of(batch_df: DataFrame, observation: Observation) -> dict:
+    """Lineage of one micro-batch that carries `_source_file`: its
+    distinct input files and its row count, read from `observation`,
+    which the table writes filled in their own pass over the observed
+    batch (`_observe`). No Spark job; the dict is metadata-sized. An
+    observation keeps the metrics of the first action that reads it,
+    so the first table must read its whole input (not limit or sample
+    it), as on the replay path.
+
+    When every table's plan prunes the observed scan (a transform that
+    filters on a false literal, say), the optimizer drops the
+    observation and Spark completes it empty, so `get` raises. Then
+    `batch_df` is evaluated once through the noop sink under a fresh
+    observation: the one epoch shape that pays a lineage job."""
+    try:
+        metrics = observation.get
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        observed, observation = _observe(batch_df)
+        observed.write.format("noop").mode("overwrite").save()
+        metrics = observation.get
+    return {"input_files": sorted(metrics["input_files"]), "rows": metrics["rows"]}
 
 
 def foreach_batch_writer(
@@ -264,25 +315,29 @@ def foreach_batch_writer(
     """Build the foreachBatch function: one micro-batch -> N tables,
     committed all-or-nothing under one epoch id.
 
-    A batch that carries `_source_file` (source.py) gets a lineage pass.
-    The batch is persisted only when more than one consumer reads it
-    (the lineage pass, or more than one table), so the consumers share
-    one materialization instead of re-reading the source; a single
-    table of a windowed query writes straight through. A replayed,
-    already-committed epoch has one consumer: its manifest is written,
-    and `write_epoch` only re-evaluates the batch.
+    A batch that carries `_source_file` (source.py) is observed: the
+    table writes collect its input files and row count as they run,
+    and `lineage_of` turns that into the manifest's lineage, so
+    lineage adds no Spark job. The batch is persisted only when more
+    than one table reads it, so the tables share one materialization
+    instead of re-reading the source; one table (a windowed query, or
+    a row-local enrich) writes straight through in one job. A
+    replayed, already-committed epoch is not observed: its manifest
+    already exists, and `write_epoch` only re-evaluates the batch.
     """
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         replay = sink.committed(epoch_id)
-        has_files = "_source_file" in batch_df.columns
-        trace = has_files and not replay
-        shared = not replay and trace + len(transforms) > 1
+        shared = not replay and len(transforms) > 1
         if shared:
             batch_df = batch_df.persist()
         try:
-            lineage = lineage_of(batch_df) if trace else None
-            data = batch_df.drop("_source_file") if has_files else batch_df
+            data, lineage = batch_df, None
+            if "_source_file" in batch_df.columns:
+                if not replay:
+                    data, obs = _observe(batch_df)
+                    lineage = lambda: lineage_of(batch_df, obs)
+                data = data.drop("_source_file")
             tables = {name: fn(data) for name, fn in transforms.items()}
             sink.write_epoch(epoch_id, tables, lineage=lineage)
         finally:

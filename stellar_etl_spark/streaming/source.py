@@ -38,8 +38,9 @@ def read_transcript_stream(
     """readStream over a transcript parquet dir.
 
     with_lineage exposes `_source_file` from the hidden `_metadata`
-    column — per-partition lineage (which input files fed which epoch)
-    rides along to the sink manifest for free, no extra scan.
+    column: the sink observes it during the table writes
+    (sink.foreach_batch_writer), so which input files fed which epoch
+    rides along to the manifest for free, with no extra scan or job.
     """
     reader = spark.readStream.schema(_RAW)
     if max_files_per_trigger:

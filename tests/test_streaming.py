@@ -136,10 +136,14 @@ def test_stream_sessions_equal_batch(spark, data_dir, tmp_path):
     assert _rows(closed, cols) == expected
 
     # the session aggregate drops the source's _source_file, so its
-    # batches get no lineage pass (and, one table, no persist)
+    # batches get no lineage pass (and, one table, no persist); the
+    # per-table row maps come from the written files all the same
     sink = EpochCommitSink(str(tmp_path / "sink"))
     manifests = [_manifest(sink, e) for e in sink.committed_epochs()]
     assert manifests and all(m["lineage"] == {} for m in manifests)
+    for m in manifests:
+        t = m["tables"]["sessions"]
+        assert sum(t["partitions"].values()) == t["rows"]
 
 
 def test_matcher_stream_equals_batch(spark, data_dir, tmp_path):
@@ -212,12 +216,91 @@ def test_exactly_once_resume(spark, data_dir, tmp_path):
     assert got.distinct().count() == exp.distinct().count()
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
-    # lineage captured per epoch
+    # lineage captured per epoch; the per-table partition map sums to
+    # the rows each epoch's data directory reads back
     manifests = [_manifest(sink, e) for e in sink.committed_epochs()]
-    assert all("partitions" in m["lineage"] for m in manifests)
+    for m in manifests:
+        turns = m["tables"]["turns"]
+        n = spark.read.parquet(turns["path"]).count()
+        assert sum(turns["partitions"].values()) == turns["rows"] == n
     files = [f for m in manifests for f in m["lineage"].get("input_files", [])]
     assert len(set(files)) == 6  # every input file accounted for exactly once
     assert len(files) == len(set(files))
+
+
+def _source_files(data_dir):
+    return sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+
+
+def _drain_fanout(spark, data_dir, tmp_path, transforms, name, with_lineage=True):
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
+                                    with_lineage=with_lineage)
+    q = start_fanout(stream, str(tmp_path / name / "sink"),
+                     str(tmp_path / name / "ckpt"), transforms, query_name=name)
+    assert q.awaitTermination(540), f"{name} did not finish within 540s"
+    sink = EpochCommitSink(str(tmp_path / name / "sink"))
+    return q, [_manifest(sink, e) for e in sink.committed_epochs()]
+
+
+def _assert_exact_lineage(spark, data_dir, manifests):
+    """Across epochs every input file is listed exactly once, and each
+    epoch's `lineage.rows` is what its listed files hold."""
+    files = [f for m in manifests for f in m["lineage"]["input_files"]]
+    assert sorted(os.path.basename(f) for f in files) == _source_files(data_dir)
+    for m in manifests:
+        lin = m["lineage"]
+        assert lin["rows"] == spark.read.parquet(*lin["input_files"]).count()
+
+
+def test_lineage_adds_no_spark_job(spark, data_dir, tmp_path):
+    """A one-table fan-out traces lineage inside its write: the drain
+    runs as many Spark jobs per epoch as the same drain without
+    `_source_file`."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_per_epoch(with_lineage):
+        q, manifests = _drain_fanout(spark, data_dir, tmp_path, {"turns": _identity},
+                                     f"t_jobs_{with_lineage}", with_lineage)
+        assert all(("input_files" in m["lineage"]) == with_lineage for m in manifests)
+        return len(tracker.getJobIdsForGroup(str(q.runId))) / len(manifests)
+
+    assert jobs_per_epoch(True) == jobs_per_epoch(False)
+
+
+def test_fanout_pruned_plan_commits_exact_lineage(spark, data_dir, tmp_path):
+    """A transform whose plan prunes the observed scan still commits
+    every epoch with its exact input files."""
+    _, manifests = _drain_fanout(spark, data_dir, tmp_path,
+                                 {"none": lambda df: df.filter(F.lit(False))},
+                                 "t_pruned")
+    _assert_exact_lineage(spark, data_dir, manifests)
+    assert all(m["tables"]["none"]["rows"] == 0 for m in manifests)
+
+
+def test_multi_table_fanout_lineage(spark, data_dir, tmp_path):
+    """Two tables read one persisted batch: lineage stays exact and
+    each table's partition map matches the part files it wrote."""
+    from stellar_etl_spark.operators.enrich import enrich_turns
+
+    transforms = {
+        "turns": lambda df: enrich_turns(df, CFG),
+        "tooled": lambda df: df.filter(F.col("tool").isNotNull()),
+    }
+    _, manifests = _drain_fanout(spark, data_dir, tmp_path, transforms, "t_multi")
+    _assert_exact_lineage(spark, data_dir, manifests)
+    for m in manifests:
+        assert m["tables"]["turns"]["rows"] == m["lineage"]["rows"]
+        for t in m["tables"].values():
+            by_file = (
+                spark.read.parquet(t["path"])
+                .groupBy(F.input_file_name().alias("f")).count().collect()
+            )
+            held: dict[str, int] = {}
+            for r in by_file:
+                pid = str(int(os.path.basename(r["f"]).split("-")[1]))
+                held[pid] = held.get(pid, 0) + r["count"]
+            assert {p: n for p, n in t["partitions"].items() if n} == held
+            assert sum(t["partitions"].values()) == t["rows"]
 
 
 def test_sink_idempotent_epoch(spark, tmp_path):
@@ -1361,6 +1444,57 @@ def test_dq_stream_hot_conversation_bounded_state(spark, tmp_path):
         ).collect()
     }
     assert len(hot_epochs) >= 2, hot_epochs
+
+
+def test_dq_stream_counts_rows_below_finalized_boundary(spark, tmp_path):
+    """A row that arrives at or below a partially finalized boundary is
+    left out of the order checks and counted: exactly one
+    `late_after_finalize` row, whose detail is the boundary idx."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stellar_etl_spark.streaming import parity
+    from stellar_etl_spark.streaming.dq import DQ_OUTPUT_SCHEMA, dq_violations_stream
+
+    base_us = 1_700_000_000 * 1_000_000
+    # 4 hot turns per slice; slice 1 crosses max_open_groups=4 and
+    # finalizes idx 0..5, so turn 1 arriving again in slice 2 is late
+    slices = [[("hot", i, base_us + i * 1_000_000) for i in range(s * 4, s * 4 + 4)]
+              for s in range(3)]
+    slices[2].append(("hot", 1, base_us + 12_000_000))
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    t0 = time.time() - 2.0 * len(slices)
+    for i, rows in enumerate(slices):
+        conv, idx, ts = zip(*rows)
+        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
+        pq.write_table(pa.table({
+            "conv_id": pa.array(conv, pa.string()),
+            "turn_idx": pa.array(idx, pa.int32()),
+            "role": pa.array(["assistant"] * len(rows), pa.string()),
+            "text": pa.array(["ok"] * len(rows), pa.string()),
+            "tool": pa.array([None] * len(rows), pa.string()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+        }), path)
+        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
+
+    stream = read_transcript_stream(
+        spark, src_dir, max_files_per_trigger=1, with_lineage=False
+    )
+    cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
+    q = start_fanout(
+        dq_violations_stream(stream, cfg, max_open_groups=4, keep_groups=2),
+        str(tmp_path / "sink"), str(tmp_path / "ckpt"), {"dq": _identity},
+        query_name="dq_late",
+    )
+    assert q.awaitTermination(540), "late-row DQ stream did not finish"
+
+    got = EpochCommitSink(str(tmp_path / "sink")).read_table(spark, "dq")
+    assert got.schema == DQ_OUTPUT_SCHEMA
+    late = got.filter(F.col("check_name") == "late_after_finalize")
+    assert _rows(late) == [("late_after_finalize", "hot", 1, "5")]
 
 
 def test_reply_join_resume_pairs_straddle_kill(spark, tmp_path):
