@@ -23,7 +23,6 @@ class EngineConfig:
       strict_errors      <- --strict flag (internal/utils/main.go:234,
                             internal/utils/logger.go:17-23)
       limit              <- --limit early exit (internal/utils/main.go:254)
-      salt_buckets       <- no analog; explicit skew handling for hot conv_ids
 
     Two partition widths, both set once by ``session.get_spark``:
       shuffle_partitions  batch width: the partition count a batch shuffle
@@ -60,9 +59,6 @@ class EngineConfig:
     # function-valued config swapped per deployment). None -> the
     # built-in deterministic stub decoder (functions/multimodal.py).
     multimodal_decoder: object = None
-
-    # skew (SURVEY §4: salted two-phase agg)
-    salt_buckets: int = 16
 
     # spark session
     shuffle_partitions: int = 32

@@ -8,7 +8,10 @@ turns is open while errors keep arriving, closes the moment a
 non-error turn for the conversation arrives (emitting the burst if it
 reached MIN_BURST), and a run still open when the watermark passes its
 last error is flushed by EventTimeTimeout (the matcher's eviction
-machinery, reused for pattern finalization).
+machinery, reused for pattern finalization). The pattern is one fold
+(``bursts_fold``) run by either CEP driver (streaming/cep.py); its
+carry is the open run (``si``/``rl``/``su``/``lu``), and is_err arrives
+computed in the JVM by the shared projection.
 
 The whole turn stream flows through (no error pre-filter): the
 non-error turns ARE the pattern's closing events, and turn_idx
@@ -16,26 +19,24 @@ contiguity then needs no explicit gap check — semantics identical to
 the batch gaps-and-islands form (operators/journeys.error_bursts),
 whose SQL is the exact value oracle.
 
-Scale notes: state is one fixed-width row per conversation with an
-OPEN run only (closed-run conversations drop their state, matcher
-discipline); hot conversations stream through one task with O(1)
-state. Reference analog: the per-ledger consecutive-failure scans the
-reference runs in-process (internal/input/changes.go:102-136 keeps
-last-value maps per key), distributed, checkpointed, and finalized by
-watermark instead of end-of-loop.
+Scale notes: state is one small row (replay high-water mark + the
+run's carry) per conversation with an OPEN run only (closed-run
+conversations drop their state, matcher discipline); hot
+conversations stream through one task with O(1) state. Reference
+analog: the per-ledger consecutive-failure scans the reference runs
+in-process (internal/input/changes.go:102-136 keeps last-value maps
+per key), distributed, checkpointed, and finalized by watermark
+instead of end-of-loop.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.operators.journeys import MIN_BURST
+from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
 
 BURST_OUTPUT_SCHEMA = T.StructType(
     [
@@ -47,109 +48,44 @@ BURST_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: the one OPEN error run of this conversation + replay HWM
-BURST_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("max_idx", T.IntegerType()),
-        T.StructField("run_start_idx", T.IntegerType()),
-        T.StructField("run_len", T.IntegerType()),
-        T.StructField("run_start_ts_us", T.LongType()),
-        T.StructField("run_last_ts_us", T.LongType()),
-    ]
-)
 
+def bursts_fold(
+    conv_id: str, rows: list, carry: dict, closing: bool
+) -> tuple[list, dict]:
+    """error{>=MIN_BURST} runs close on a non-error turn or at
+    conversation close. Carry: the open run's start idx, length, and
+    first/last error ts (``si``/``rl``/``su``/``lu``)."""
+    si, rl = carry.get("si", 0), carry.get("rl", 0)
+    su, lu = carry.get("su", 0), carry.get("lu", 0)
+    out: list = []
 
-def _burst_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (conv_id,) = key
-
-    def row(start_idx, run_len, start_us, last_us):
+    def burst():
         # divide each term before subtracting: bit-identical to the
         # batch cast(ts as double) - cast(ts as double) (see matcher)
-        return (
-            conv_id,
-            int(start_idx),
-            int(start_idx + run_len - 1),
-            int(run_len),
-            last_us / 1e6 - start_us / 1e6,
-        )
+        return (conv_id, int(si), int(si + rl - 1), int(rl), lu / 1e6 - su / 1e6)
 
-    def frame(rows):
-        cols = list(zip(*rows))
-        return pd.DataFrame(
-            {
-                "conv_id": pd.array(cols[0], dtype="string"),
-                "start_idx": pd.array(cols[1], dtype="Int32"),
-                "end_idx": pd.array(cols[2], dtype="Int32"),
-                "n_errors": pd.array(cols[3], dtype="Int64"),
-                "span_s": pd.array(cols[4], dtype="Float64"),
-            }
-        )
+    for idx, _role, _tool, err, ts in rows:
+        if err:
+            if rl == 0:
+                si, su = int(idx), int(ts)
+            rl += 1
+            lu = int(ts)
+        else:
+            if rl >= MIN_BURST:
+                out.append(burst())
+            rl = 0
+    if closing:
+        if rl >= MIN_BURST:
+            out.append(burst())
+        rl = 0
+    return out, ({} if rl == 0 else {"si": si, "rl": rl, "su": su, "lu": lu})
 
-    if state.hasTimedOut:
-        _, start_idx, run_len, start_us, last_us = state.get
-        state.remove()
-        if run_len >= MIN_BURST:
-            yield frame([row(start_idx, run_len, start_us, last_us)])
-        return
 
-    max_idx, start_idx, run_len, start_us, last_us = (-1, 0, 0, 0, 0)
-    if state.exists:
-        max_idx, start_idx, run_len, start_us, last_us = state.get
-
-    out: list[tuple] = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("turn_idx")
-        idxs = pdf["turn_idx"].to_numpy()
-        is_err = pdf["text"].str.contains("|error|", regex=False).to_numpy()
-        ts = pdf["ts"]
-        if getattr(ts.dt, "tz", None) is not None:
-            ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-        ts_us = ts.astype("datetime64[us]").astype("int64").to_numpy()
-        for i in range(len(pdf)):
-            if idxs[i] <= max_idx:
-                continue  # replayed row: drop (idempotence)
-            max_idx = int(idxs[i])
-            if is_err[i]:
-                if run_len == 0:
-                    start_idx, start_us = max_idx, int(ts_us[i])
-                run_len += 1
-                last_us = int(ts_us[i])
-            else:
-                if run_len >= MIN_BURST:
-                    out.append(row(start_idx, run_len, start_us, last_us))
-                run_len = 0
-
-    if run_len > 0:
-        state.update((max_idx, start_idx, run_len, start_us, last_us))
-        # finalize the open run when the watermark passes its last
-        # error (timeout must sit strictly above the current watermark)
-        state.setTimeoutTimestamp(
-            max(last_us // 1000, state.getCurrentWatermarkMs() + 1)
-        )
-    elif state.exists:
-        # no open run -> drop state; offsets+state checkpoint together,
-        # so replays re-enter with the matching state version
-        state.remove()
-    if out:
-        yield frame(out)
+# finalize an open run when the watermark passes its last error
+BURSTS = Pattern(bursts_fold, BURST_OUTPUT_SCHEMA, due=lambda carry: carry["lu"])
 
 
 def error_bursts_stream(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """Append-mode error-burst detection over the full turn stream.
     Input must be a streaming DataFrame with event-time column ts."""
-    return (
-        df.withWatermark("ts", cfg.watermark_delay)
-        .select("conv_id", "turn_idx", "text", "ts")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _burst_fn,
-            BURST_OUTPUT_SCHEMA,
-            BURST_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return ordered_stream(df, BURSTS, cfg)

@@ -76,6 +76,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.operators.dq import ROLE_VOCAB
+from stellar_etl_spark.streaming.cep import frame
+from stellar_etl_spark.streaming.source import epoch_us
 
 # Hard ceiling on per-conversation open groups; crossing it triggers a
 # partial finalize down to DQ_KEEP_GROUPS (amortizes the prefix scan).
@@ -144,18 +146,6 @@ def _adjudicate(
     return out
 
 
-def _frame(rows: list[tuple]) -> pd.DataFrame:
-    cols = list(zip(*rows))
-    return pd.DataFrame(
-        {
-            "check_name": pd.array(cols[0], dtype="string"),
-            "conv_id": pd.array(cols[1], dtype="string"),
-            "turn_idx": pd.array(cols[2], dtype="Int32"),
-            "detail": pd.array(cols[3], dtype="string"),
-        }
-    )
-
-
 def _make_dq_fn(max_open_groups: int, keep_groups: int):
     def _dq_fn(
         key: tuple,
@@ -172,7 +162,7 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
                 list(max_us), b_idx, b_max,
             )
             if rows:
-                yield _frame(rows)
+                yield frame(DQ_OUTPUT_SCHEMA, rows)
             return
 
         groups: dict[int, list[int]] = {}
@@ -187,10 +177,7 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
         for pdf in pdf_iter:
             if not len(pdf):
                 continue
-            ts = pdf["ts"]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-            us = ts.astype("datetime64[us]").astype("int64")
+            us = epoch_us(pdf["ts"])
             high_us = max(high_us, int(us.max()))
             chunk = pd.DataFrame(
                 {"idx": pdf["turn_idx"].astype("int64").values, "us": us.values}
@@ -249,7 +236,7 @@ def _make_dq_fn(max_open_groups: int, keep_groups: int):
             max(high_us // 1000, state.getCurrentWatermarkMs() + 1)
         )
         if emitted:
-            yield _frame(emitted)
+            yield frame(DQ_OUTPUT_SCHEMA, emitted)
 
     return _dq_fn
 

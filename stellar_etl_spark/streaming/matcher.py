@@ -8,10 +8,11 @@ stream the "zip" becomes a per-conversation stateful join: a user turn
 waits in state until its response arrives (possibly in a later
 micro-batch) or the watermark evicts it.
 
-Implementation: ``applyInPandasWithState`` keyed by conv_id with
-EventTimeTimeout — state is one pending user turn per conversation
-(bounded, unlike the reference's unbounded seen-maps,
-internal/input/orderbooks.go:26-33):
+Implementation: one fold (``matcher_fold``) run by either CEP driver
+(streaming/cep.py) — here the ordered driver, applyInPandasWithState
+keyed by conv_id with EventTimeTimeout; the carry is one pending user
+turn per conversation (bounded, unlike the reference's unbounded
+seen-maps, internal/input/orderbooks.go:26-33):
 
   * non-user turn while a user is pending  -> emit matched pair
   * user turn while a user is pending      -> emit previous unmatched
@@ -29,14 +30,11 @@ the skew lever for this op is state-store partitioning, not salting
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
+from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -50,122 +48,39 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: the single pending user turn + a high-water mark of processed idx
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("pending_idx", T.IntegerType()),
-        T.StructField("pending_ts_us", T.LongType()),
-        T.StructField("max_idx", T.IntegerType()),
-    ]
-)
 
-_EVICT_GRACE_US = 0  # evict as soon as the watermark passes the user turn
+def matcher_fold(
+    conv_id: str, rows: list, carry: dict, closing: bool
+) -> tuple[list, dict]:
+    """User waits, the next turn matches it; user-over-user and closing
+    evict the pending user unmatched. Carry: the pending user turn's
+    idx and ts (``pi``/``pt``)."""
+    pi, pt = carry.get("pi"), carry.get("pt")
+    out: list = []
+    for idx, role, tool, _err, ts in rows:
+        if role == "user":
+            if pi is not None:
+                out.append((conv_id, pi, None, None, None, None, True))
+            pi, pt = int(idx), int(ts)
+        elif pi is not None:
+            # divide each term before subtracting: bit-identical to
+            # the batch form cast(ts as double) - cast(ts as double)
+            # (subtract-then-divide rounds differently at µs
+            # fractions and can flip the 6-dp oracle hash)
+            lat = int(ts) / 1e6 - pt / 1e6
+            out.append((conv_id, pi, int(idx), role, tool, lat, False))
+            pi, pt = None, None
+    if closing and pi is not None:
+        out.append((conv_id, pi, None, None, None, None, True))
+        pi = pt = None
+    return out, ({} if pi is None else {"pi": pi, "pt": pt})
 
-# Prebuilt 1-row eviction template: the final no-data batch fires one
-# timeout per pending key, and a fresh per-key pd.DataFrame({...}) with
-# pd.array columns measured ~10x the cost of copy-and-fill (~125 µs).
-_EVICT_TMPL = pd.DataFrame(
-    {
-        "conv_id": pd.array([""], dtype="string"),
-        "user_turn_idx": pd.array([0], dtype="Int32"),
-        "response_turn_idx": pd.array([None], dtype="Int32"),
-        "response_role": pd.array([None], dtype="string"),
-        "response_tool": pd.array([None], dtype="string"),
-        "latency_s": pd.array([None], dtype="Float64"),
-        "evicted_unmatched": pd.array([True], dtype="boolean"),
-    }
-)
 
-
-def _match_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (conv_id,) = key
-
-    if state.hasTimedOut:
-        pending_idx, pending_ts_us, _ = state.get
-        state.remove()
-        d = _EVICT_TMPL.copy()
-        d.iat[0, 0] = conv_id
-        d.iat[0, 1] = pending_idx
-        yield d
-        return
-
-    pending_idx, pending_ts_us, max_idx = (None, None, -1)
-    if state.exists:
-        pending_idx, pending_ts_us, max_idx = state.get
-
-    out: list[tuple] = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("turn_idx")
-        # vectorized column pulls; the per-row loop below touches only
-        # this key's rows in this batch (typically a handful)
-        idxs = pdf["turn_idx"].to_numpy()
-        roles = pdf["role"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        ts = pdf["ts"]
-        if getattr(ts.dt, "tz", None) is not None:
-            ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-        ts_us = ts.astype("datetime64[us]").astype("int64").to_numpy()
-        for i in range(len(pdf)):
-            if idxs[i] <= max_idx:
-                continue  # duplicate/replayed row: drop (idempotence)
-            max_idx = int(idxs[i])
-            if roles[i] == "user":
-                if pending_idx is not None:
-                    out.append((conv_id, pending_idx, None, None, None, None, True))
-                pending_idx, pending_ts_us = int(idxs[i]), int(ts_us[i])
-            elif pending_idx is not None:
-                # divide each term before subtracting: bit-identical to
-                # the batch form cast(ts as double) - cast(ts as double)
-                # (subtract-then-divide rounds differently at µs
-                # fractions and can flip the 6-dp oracle hash)
-                lat = int(ts_us[i]) / 1e6 - pending_ts_us / 1e6
-                out.append(
-                    (conv_id, pending_idx, int(idxs[i]), roles[i], tools[i], lat, False)
-                )
-                pending_idx, pending_ts_us = None, None
-
-    if pending_idx is not None:
-        state.update((pending_idx, pending_ts_us, max_idx))
-        # evict when the watermark passes the pending turn's event time
-        # (timeout must sit strictly above the current watermark)
-        want_ms = pending_ts_us // 1000 + _EVICT_GRACE_US
-        state.setTimeoutTimestamp(max(want_ms, state.getCurrentWatermarkMs() + 1))
-    elif state.exists:
-        # nothing pending -> drop state; offsets+state are checkpointed
-        # together so replays re-enter with the matching state version
-        state.remove()
-    if out:
-        cols = list(zip(*out))
-        # explicit dtypes: object-dtype all-NA columns trip pandas
-        # concat FutureWarnings inside Spark's Arrow serializer
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.array(cols[0], dtype="string"),
-                "user_turn_idx": pd.array(cols[1], dtype="Int32"),
-                "response_turn_idx": pd.array(cols[2], dtype="Int32"),
-                "response_role": pd.array(cols[3], dtype="string"),
-                "response_tool": pd.array(cols[4], dtype="string"),
-                "latency_s": pd.array(cols[5], dtype="Float64"),
-                "evicted_unmatched": pd.array(cols[6], dtype="boolean"),
-            }
-        )
+# evict as soon as the watermark passes the pending user turn
+PAIRS = Pattern(matcher_fold, OUTPUT_SCHEMA, due=lambda carry: carry["pt"])
 
 
 def match_pairs_stream(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """Streaming turn-pair matcher. Input must be a streaming DataFrame
     with event-time column ts; output is append-mode."""
-    return (
-        df.withWatermark("ts", cfg.watermark_delay)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _match_fn,
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return ordered_stream(df, PAIRS, cfg)

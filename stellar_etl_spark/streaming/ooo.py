@@ -1,21 +1,24 @@
-"""Watermark-ordered replay — delivery-order-invariant forms of the
-sequential CEP processors (VERDICT r04 "Next round" #5).
+"""Watermark-ordered replay — the second CEP driver, which runs the
+sequential patterns' folds delivery-order-invariantly (VERDICT r04
+"Next round" #5).
 
-The ordered processors (streaming/matcher.py, transitions.py,
-bursts.py) are forward-only: a row with turn_idx at or below the
-replay high-water mark is dropped. That is the right idempotence rule
-for in-order delivery, but it makes them delivery-order SENSITIVE — a
-reversed or shuffled file-delivery order silently drops most of the
-input. This module restores order-invariance with the one tool Spark's
-model provides for it, the watermark: rows buffer per conversation in
-state (sorted by turn_idx), and whenever the watermark passes a prefix
+The ordered driver (streaming/cep.py, behind streaming/matcher.py,
+transitions.py, bursts.py) is forward-only: a row with turn_idx at or
+below the replay high-water mark is dropped. That is the right
+idempotence rule for in-order delivery, but it makes the ordered
+processors delivery-order SENSITIVE — a reversed or shuffled
+file-delivery order silently drops most of the input. This module
+restores order-invariance with the one tool Spark's model provides
+for it, the watermark: rows buffer per conversation in state (sorted
+by turn_idx), and whenever the watermark passes a prefix
 of them — meaning no row that could precede that prefix can still
 arrive, because Spark late-drops events below the watermark — the
-prefix replays through the processor's sequential fold in exact
-turn_idx order. The fold's carry (pending user turn / last tool / open
-error run) rides between replays; the conversation closes when the
-watermark passes its last buffered event (EventTimeTimeout — the
-matcher's eviction machinery as ordered-replay finalization).
+prefix replays through the pattern's one fold (the same fold the
+ordered driver runs) in exact turn_idx order. The fold's carry
+(pending user turn / last tool / open error run) rides between
+replays; the conversation closes when the watermark passes its last
+buffered event (EventTimeTimeout — the matcher's eviction machinery
+as ordered-replay finalization).
 
 Exactness: the emitted rows equal the ordered processor's output on
 ANY delivery permutation of the same input, provided (1) event time is
@@ -47,19 +50,18 @@ the watermark horizon, replay in order).
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
-from stellar_etl_spark.operators.journeys import MIN_BURST
-from stellar_etl_spark.streaming.matcher import OUTPUT_SCHEMA as PAIRS_OUTPUT_SCHEMA
-from stellar_etl_spark.streaming.bursts import BURST_OUTPUT_SCHEMA
-from stellar_etl_spark.streaming.transitions import START, TRANS_OUTPUT_SCHEMA
+from stellar_etl_spark.streaming.bursts import BURSTS
+from stellar_etl_spark.streaming.cep import Pattern, frame, project, rows_of
+from stellar_etl_spark.streaming.matcher import PAIRS
+from stellar_etl_spark.streaming.transitions import TRANSITIONS
 
 # One buffered row = (turn_idx, role, tool, is_err, ts_us); is_err is
 # precomputed JVM-side so the error-burst fold never buffers text.
@@ -74,9 +76,6 @@ OOO_STATE_SCHEMA = T.StructType(
     ]
 )
 
-# fold(conv_id, rows, carry, closing) -> (out_rows, carry)
-Fold = Callable[[str, list, dict, bool], tuple[list, dict]]
-
 
 def _pack(rows: list, carry: dict) -> tuple:
     return (
@@ -89,7 +88,9 @@ def _pack(rows: list, carry: dict) -> tuple:
     )
 
 
-def make_ooo_fn(fold: Fold, frame: Callable[[list], pd.DataFrame]):
+def make_ooo_fn(pattern: Pattern):
+    fold, schema = pattern.fold, pattern.schema
+
     def _fn(
         key: tuple,
         pdf_iter: Iterator[pd.DataFrame],
@@ -116,7 +117,7 @@ def make_ooo_fn(fold: Fold, frame: Callable[[list], pd.DataFrame]):
             else:
                 state.remove()
             if out:
-                yield frame(out)
+                yield frame(schema, out)
             return
 
         rows: list = []
@@ -127,27 +128,9 @@ def make_ooo_fn(fold: Fold, frame: Callable[[list], pd.DataFrame]):
             rows = list(zip(idxs, roles, tools, errs, ts_us))
 
         for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            ts = pdf["ts"]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-            us = ts.astype("datetime64[us]").astype("int64")
-            tools = pdf["tool"]
-            roles = pdf["role"]
-            for i in range(len(pdf)):
-                tool = tools.iat[i]
-                rows.append(
-                    (
-                        int(pdf["turn_idx"].iat[i]),
-                        str(roles.iat[i]),
-                        None if pd.isna(tool) else str(tool),
-                        bool(pdf["is_err"].iat[i]),
-                        int(us.iat[i]),
-                    )
-                )
+            rows.extend(rows_of(pdf))
 
-        # deterministic order + per-idx dedupe (the ordered processors'
+        # deterministic order + per-idx dedupe (the ordered driver's
         # forward-only guard keeps exactly one row per idx; under
         # disorder "first arrival" is nondeterministic, so keep the
         # (idx, ts)-least row instead)
@@ -174,143 +157,19 @@ def make_ooo_fn(fold: Fold, frame: Callable[[list], pd.DataFrame]):
     return _fn
 
 
-# --- the three sequential folds (exact replicas of the ordered loops) ------
-
-def matcher_fold(
-    conv_id: str, rows: list, carry: dict, closing: bool
-) -> tuple[list, dict]:
-    """streaming/matcher._match_fn's loop over an in-order final
-    prefix: user waits, next turn matches, user-over-user and closing
-    evict unmatched."""
-    pi, pt = carry.get("pi"), carry.get("pt")
-    out: list = []
-    for idx, role, tool, _err, ts in rows:
-        if role == "user":
-            if pi is not None:
-                out.append((conv_id, pi, None, None, None, None, True))
-            pi, pt = int(idx), int(ts)
-        elif pi is not None:
-            # divide each term before subtracting: bit-identical to the
-            # batch cast-to-double form (see matcher.py)
-            lat = int(ts) / 1e6 - pt / 1e6
-            out.append((conv_id, pi, int(idx), role, tool, lat, False))
-            pi, pt = None, None
-    if closing and pi is not None:
-        out.append((conv_id, pi, None, None, None, None, True))
-        pi = pt = None
-    return out, ({} if pi is None else {"pi": pi, "pt": pt})
-
-
-def _pairs_frame(rows: list) -> pd.DataFrame:
-    cols = list(zip(*rows))
-    return pd.DataFrame(
-        {
-            "conv_id": pd.array(cols[0], dtype="string"),
-            "user_turn_idx": pd.array(cols[1], dtype="Int32"),
-            "response_turn_idx": pd.array(cols[2], dtype="Int32"),
-            "response_role": pd.array(cols[3], dtype="string"),
-            "response_tool": pd.array(cols[4], dtype="string"),
-            "latency_s": pd.array(cols[5], dtype="Float64"),
-            "evicted_unmatched": pd.array(cols[6], dtype="boolean"),
-        }
-    )
-
-
-def transitions_fold(
-    conv_id: str, rows: list, carry: dict, closing: bool
-) -> tuple[list, dict]:
-    """streaming/transitions._trans_fn's loop: adjacency bigrams over
-    the tool-bearing subsequence, START-marked."""
-    last = carry.get("lt")
-    out: list = []
-    for idx, _role, tool, _err, _ts in rows:
-        if tool is None:
-            continue
-        out.append((conv_id, last if last is not None else START, tool, int(idx)))
-        last = tool
-    return out, ({} if last is None else {"lt": last})
-
-
-def _trans_frame(rows: list) -> pd.DataFrame:
-    cols = list(zip(*rows))
-    return pd.DataFrame(
-        {
-            "conv_id": pd.array(cols[0], dtype="string"),
-            "prev_tool": pd.array(cols[1], dtype="string"),
-            "tool": pd.array(cols[2], dtype="string"),
-            "turn_idx": pd.array(cols[3], dtype="Int32"),
-        }
-    )
-
-
-def bursts_fold(
-    conv_id: str, rows: list, carry: dict, closing: bool
-) -> tuple[list, dict]:
-    """streaming/bursts._burst_fn's loop: error{>=MIN_BURST} runs close
-    on a non-error turn or at conversation close."""
-    si, rl = carry.get("si", 0), carry.get("rl", 0)
-    su, lu = carry.get("su", 0), carry.get("lu", 0)
-    out: list = []
-
-    def burst():
-        return (conv_id, int(si), int(si + rl - 1), int(rl), lu / 1e6 - su / 1e6)
-
-    for idx, _role, _tool, err, ts in rows:
-        if err:
-            if rl == 0:
-                si, su = int(idx), int(ts)
-            rl += 1
-            lu = int(ts)
-        else:
-            if rl >= MIN_BURST:
-                out.append(burst())
-            rl = 0
-    if closing:
-        if rl >= MIN_BURST:
-            out.append(burst())
-        rl = 0
-    return out, ({} if rl == 0 else {"si": si, "rl": rl, "su": su, "lu": lu})
-
-
-def _bursts_frame(rows: list) -> pd.DataFrame:
-    cols = list(zip(*rows))
-    return pd.DataFrame(
-        {
-            "conv_id": pd.array(cols[0], dtype="string"),
-            "start_idx": pd.array(cols[1], dtype="Int32"),
-            "end_idx": pd.array(cols[2], dtype="Int32"),
-            "n_errors": pd.array(cols[3], dtype="Int64"),
-            "span_s": pd.array(cols[4], dtype="Float64"),
-        }
-    )
-
-
-# --- stream builders -------------------------------------------------------
-
-def _prep(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    return (
-        df.withWatermark("ts", cfg.watermark_delay)
-        .select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            F.col("text").contains("|error|").alias("is_err"),
-            "ts",
-        )
-        .groupBy("conv_id")
+def _replay_stream(df: DataFrame, pattern: Pattern, cfg: EngineConfig) -> DataFrame:
+    return project(df, cfg).applyInPandasWithState(
+        make_ooo_fn(pattern),
+        pattern.schema,
+        OOO_STATE_SCHEMA,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
 def match_pairs_stream_ooo(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """Delivery-order-invariant turn-pair matcher (see module doc)."""
-    return _prep(df, cfg).applyInPandasWithState(
-        make_ooo_fn(matcher_fold, _pairs_frame),
-        PAIRS_OUTPUT_SCHEMA,
-        OOO_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _replay_stream(df, PAIRS, cfg)
 
 
 def tool_transitions_stream_ooo(
@@ -321,21 +180,9 @@ def tool_transitions_stream_ooo(
     pre-filtered (a pushed-down filter below the watermark node would
     starve the replay timers — the snapshot_ttl lesson); null-tool
     rows are skipped inside the fold instead."""
-    return _prep(df, cfg).applyInPandasWithState(
-        make_ooo_fn(transitions_fold, _trans_frame),
-        TRANS_OUTPUT_SCHEMA,
-        OOO_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _replay_stream(df, TRANSITIONS, cfg)
 
 
 def error_bursts_stream_ooo(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """Delivery-order-invariant quantified-CEP burst detector."""
-    return _prep(df, cfg).applyInPandasWithState(
-        make_ooo_fn(bursts_fold, _bursts_frame),
-        BURST_OUTPUT_SCHEMA,
-        OOO_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _replay_stream(df, BURSTS, cfg)

@@ -43,6 +43,7 @@ from pyspark.sql.streaming import StreamingQuery
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.streaming.pipeline import start_query
 from stellar_etl_spark.streaming.sink import EpochCommitSink, epoch_stamped_writer
+from stellar_etl_spark.streaming.source import epoch_us
 
 SNAPSHOT_TABLE = "snapshot"
 
@@ -129,10 +130,7 @@ def _ttl_snapshot_fn(ttl_s: int):
         for pdf in pdf_iter:
             if not len(pdf):
                 continue
-            ts = pdf["ts"]
-            if getattr(ts.dt, "tz", None) is not None:
-                ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
-            us = ts.astype("datetime64[us]").astype("int64")
+            us = epoch_us(pdf["ts"])
             n += len(pdf)
             i = pdf["turn_idx"].idxmax()
             if turn_idx is None or int(pdf["turn_idx"][i]) > turn_idx:

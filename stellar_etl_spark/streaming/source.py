@@ -52,6 +52,14 @@ def read_transcript_stream(
     return df
 
 
+def epoch_us(ts):
+    """A pandas batch's event-time column (naive or tz-aware, as Arrow
+    delivers it to a stateful processor) as int64 UTC epoch µs."""
+    if getattr(ts.dt, "tz", None) is not None:
+        ts = ts.dt.tz_convert("UTC").dt.tz_localize(None)
+    return ts.astype("datetime64[us]").astype("int64")
+
+
 def read_rate_transcript_stream(
     spark: SparkSession,
     rows_per_second: int = 100,

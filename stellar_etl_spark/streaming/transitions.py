@@ -4,7 +4,10 @@ emits the (previous tool -> tool) bigram the moment it arrives, with
 '__start__' marking the first tool use. A per-conversation ValueState
 (last tool + replay high-water mark) carries the pattern context
 across micro-batches, so a bigram that straddles a batch boundary is
-detected exactly like one inside a batch.
+detected exactly like one inside a batch. The pattern is one fold
+(``transitions_fold``) run by either CEP driver (streaming/cep.py);
+its carry is the last tool (``lt``), and turns without a tool are
+skipped inside the fold.
 
 This is the simplest instance of the engine's CEP pattern family: the
 matcher (streaming/matcher.py) detects user->response pairs with
@@ -19,8 +22,9 @@ seen — for bounded state under unbounded conversation churn, arm the
 same EventTimeTimeout the matcher uses (evicting last_tool only
 forgets context for a conversation idle past the watermark; its next
 tool turn re-enters as '__start__', the standard CEP session-reset
-trade). The parity drain runs NoTimeout because its input is bounded
-and the batch oracle has no reset semantics.
+trade). The pattern has no ``due``, so the ordered form runs NoTimeout
+and without a watermark: the parity drain's input is bounded and the
+batch oracle has no reset semantics.
 
 Reference analog: the in-process previous-value loops the reference
 runs per ledger entry (/root/reference/internal/input/changes.go:102-136
@@ -30,12 +34,10 @@ checkpointed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
 
 TRANS_OUTPUT_SCHEMA = T.StructType(
     [
@@ -46,67 +48,30 @@ TRANS_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-TRANS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("max_idx", T.IntegerType()),
-        T.StructField("last_tool", T.StringType()),
-    ]
-)
-
 START = "__start__"
 
 
-def _trans_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (conv_id,) = key
-    max_idx, last_tool = (-1, None)
-    if state.exists:
-        max_idx, last_tool = state.get
+def transitions_fold(
+    conv_id: str, rows: list, carry: dict, closing: bool
+) -> tuple[list, dict]:
+    """Adjacency bigrams over the tool-bearing subsequence, START-marked.
+    Nothing is open at close: every bigram emits on arrival."""
+    last = carry.get("lt")
+    out: list = []
+    for idx, _role, tool, _err, _ts in rows:
+        if tool is None:
+            continue
+        out.append((conv_id, last if last is not None else START, tool, int(idx)))
+        last = tool
+    return out, ({} if last is None else {"lt": last})
 
-    out: list[tuple] = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("turn_idx")
-        idxs = pdf["turn_idx"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-        for i in range(len(pdf)):
-            if idxs[i] <= max_idx:
-                continue  # replayed row: drop (idempotence)
-            max_idx = int(idxs[i])
-            out.append(
-                (conv_id, last_tool if last_tool is not None else START,
-                 tools[i], max_idx)
-            )
-            last_tool = tools[i]
 
-    state.update((max_idx, last_tool))
-    if out:
-        cols = list(zip(*out))
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.array(cols[0], dtype="string"),
-                "prev_tool": pd.array(cols[1], dtype="string"),
-                "tool": pd.array(cols[2], dtype="string"),
-                "turn_idx": pd.array(cols[3], dtype="Int32"),
-            }
-        )
+TRANSITIONS = Pattern(transitions_fold, TRANS_OUTPUT_SCHEMA, due=None)
 
 
 def tool_transitions_stream(df: DataFrame) -> DataFrame:
-    """Append-mode bigram emission over the tool-bearing turn stream.
-    Input: a streaming DataFrame already filtered to tool IS NOT NULL
-    (the filter stays outside so the watermark column choice is the
-    caller's)."""
-    return (
-        df.select("conv_id", "turn_idx", "tool")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _trans_fn,
-            TRANS_OUTPUT_SCHEMA,
-            TRANS_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    """Append-mode bigram emission over the turn stream, NoTimeout and no
+    watermark. Null-tool turns are skipped inside the fold, so a
+    ``tool IS NOT NULL`` pre-filter is optional: it only trims what
+    crosses to Python."""
+    return ordered_stream(df, TRANSITIONS, None)

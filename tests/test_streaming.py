@@ -1013,6 +1013,69 @@ def test_bursts_resume_preserves_run_state(spark, tmp_path):
     )
 
 
+def test_ordered_matcher_rejects_old_state_layout(spark, data_dir, tmp_path):
+    """The ordered CEP tier keeps (max_idx, carry_json) per conversation.
+    A matcher checkpoint written with the earlier per-pattern layout
+    (pending_idx, pending_ts_us, max_idx) must fail at start with
+    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE instead of misreading the
+    old rows: ordered-tier streams need a fresh checkpoint across the
+    layout change (docs/deploy.md)."""
+    import shutil
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from stellar_etl_spark.streaming.matcher import OUTPUT_SCHEMA
+    from stellar_etl_spark.streaming.pipeline import start_query
+
+    old_state = T.StructType(
+        [
+            T.StructField("pending_idx", T.IntegerType()),
+            T.StructField("pending_ts_us", T.LongType()),
+            T.StructField("max_idx", T.IntegerType()),
+        ]
+    )
+
+    def old_fn(key, pdf_iter, state):
+        for pdf in pdf_iter:
+            state.update((0, 0, int(pdf["turn_idx"].max())))
+        return
+        yield
+
+    files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    inp = tmp_path / "in"
+    inp.mkdir()
+    shutil.copy2(os.path.join(data_dir, files[0]), inp / files[0])
+    ckpt = str(tmp_path / "ckpt")
+
+    def stream():
+        return read_transcript_stream(spark, str(inp), with_lineage=False)
+
+    old = (
+        stream()
+        .withWatermark("ts", CFG.watermark_delay)
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            old_fn, OUTPUT_SCHEMA, old_state, "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    def drain(df, eid):  # evaluate every partition, keep nothing
+        df.write.format("noop").mode("overwrite").save()
+
+    start_query(old, drain, ckpt, "cep_old_layout").awaitTermination()
+
+    shutil.copy2(os.path.join(data_dir, files[1]), inp / files[1])
+    q = start_query(
+        match_pairs_stream(stream(), CFG), drain, ckpt, "cep_new_layout"
+    )
+    with pytest.raises(
+        StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
+    ):
+        q.awaitTermination(300)
+
+
 def test_minhash_resume_preserves_bucket_state(spark, tmp_path):
     """Kill the streamed minhash-LSH drain mid-corpus, resume from the
     same checkpoint: per-bucket membership state survives the restart
