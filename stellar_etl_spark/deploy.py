@@ -6,7 +6,10 @@ names). Functions used inside applyInPandasWithState / pandas UDFs are
 cloudpickled *by reference* to this package, so every Python worker
 must be able to import it — ``ship_package`` zips the package once per
 application and registers it with ``sc.addPyFile``, which is exactly
-what --py-files does. Idempotent; cheap (<50 ms, ~40 KB zip).
+what --py-files does. Idempotent and cheap: the zip holds the
+package's 53 .py files, stored uncompressed (~527 KB); building it
+takes ~5 ms and a first ship_package, zip plus addPyFile, 17-27 ms on a
+4-vCPU host (perfbench's traced `deploy.ship_package_s`).
 """
 
 from __future__ import annotations

@@ -85,6 +85,12 @@ class EpochCommitSink:
         called after the writes (whose pass it may observe) and before
         the commit; its dict becomes the manifest's `lineage`.
 
+        The manifest's `committed_at` (epoch seconds) marks the START of
+        the epoch's write, before any table is written; `write_ms` is
+        the time from that stamp to just before the manifest is
+        written and renamed. The epoch is durable, and visible to
+        readers, at about `committed_at + write_ms / 1000`.
+
         Returns False if the epoch was already committed (idempotent
         replay after checkpoint restart — the exactly-once guarantee).
 
@@ -107,9 +113,10 @@ class EpochCommitSink:
         if self.committed(epoch_id):
             next(iter(tables.values())).write.format("noop").mode("overwrite").save()
             return False
+        started = time.time()
         manifest: dict = {
             "epoch_id": epoch_id,
-            "committed_at": time.time(),
+            "committed_at": started,
             "tables": {},
             "lineage": {},
         }
@@ -124,6 +131,7 @@ class EpochCommitSink:
             }
         if lineage is not None:
             manifest["lineage"] = lineage()
+        manifest["write_ms"] = (time.time() - started) * 1000.0
         # atomic commit: write-then-rename within the same filesystem
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_commits"), suffix=".tmp")
         with os.fdopen(fd, "w") as f:

@@ -12,6 +12,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -301,6 +303,73 @@ def test_multi_table_fanout_lineage(spark, data_dir, tmp_path):
                 held[pid] = held.get(pid, 0) + r["count"]
             assert {p: n for p, n in t["partitions"].items() if n} == held
             assert sum(t["partitions"].values()) == t["rows"]
+
+
+def _land(files, watched, staging):
+    """Land `files` in the watched dir whole: copy to staging, then
+    rename."""
+    for f in files:
+        tmp = os.path.join(staging, os.path.basename(f))
+        shutil.copyfile(f, tmp)
+        os.rename(tmp, os.path.join(watched, os.path.basename(f)))
+
+
+def _await_committed(sink, q, files, timeout_s=120):
+    want = {os.path.basename(f) for f in files}
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline and q.isActive:
+        got = {
+            os.path.basename(f)
+            for e in sink.committed_epochs()
+            for f in _manifest(sink, e)["lineage"]["input_files"]
+        }
+        if want <= got:
+            return
+        time.sleep(0.05)
+    raise AssertionError(f"{sorted(want)} not committed: {q.exception()}")
+
+
+def test_live_fanout_resumes_and_idles(spark, data_dir, tmp_path, monkeypatch):
+    """A live fan-out, resumed on a checkpoint that a query under a 2 s
+    trigger started, commits every file of two landing waves in exactly
+    one epoch, and commits nothing while its source stays idle."""
+    from stellar_etl_spark.streaming import pipeline
+
+    files = [os.path.join(data_dir, f) for f in _source_files(data_dir)]
+    watched, staging = tmp_path / "landed", tmp_path / "staging"
+    watched.mkdir()
+    staging.mkdir()
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    ckpt = str(tmp_path / "ckpt")
+
+    def start():
+        stream = read_transcript_stream(spark, str(watched), max_files_per_trigger=None)
+        return start_fanout(stream, sink.root, ckpt, {"turns": _identity},
+                            available_now=False, query_name="t_live")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "LIVE_TRIGGER", "2 seconds")
+        q = start()
+        _land(files[:1], watched, staging)
+        _await_committed(sink, q, files[:1])
+        q.stop()
+
+    q = start()
+    try:
+        for wave in (files[1:3], files[3:]):
+            _land(wave, watched, staging)
+            _await_committed(sink, q, wave)
+        epochs = sink.committed_epochs()
+        time.sleep(2.5)
+        assert q.isActive and sink.committed_epochs() == epochs
+    finally:
+        q.stop()
+
+    manifests = [_manifest(sink, e) for e in epochs]
+    _assert_exact_lineage(spark, data_dir, manifests)
+    assert all(m["write_ms"] > 0 for m in manifests)
+    assert _rows(sink.read_table(spark, "turns")) == _rows(
+        read_transcript_batch(spark, data_dir))
 
 
 def test_sink_idempotent_epoch(spark, tmp_path):
