@@ -17,27 +17,33 @@ Exact-equality construction (no flake window, unlike a timing-tuned
 test):
 
   1. The derived transcripts are materialized once per sf_dir as
-     time-range-sliced parquet files with strictly increasing mtimes
-     (Spark's file source orders pickup by mtime), so per-conversation
-     turn order is preserved across micro-batches.
+     time-range slices by ``write_pinned``, the one writer of a
+     delivery-ordered input: name order is delivery order and mtimes
+     rise strictly (Spark's file source orders pickup by mtime), so
+     per-conversation turn order is preserved across micro-batches.
   2. The matcher runs with a watermark delay far larger than the corpus
      time span — **zero mid-stream eviction is guaranteed by
      construction**, so every matched pair equals the batch join.
   3. Two sentinel rows (a dedicated ``__closer__`` conversation, event
-     time past max_ts + delay) are appended as the two last files with
-     ``maxFilesPerTrigger=1``: the first sentinel batch pushes the
-     final watermark past every real event; the second batch then fires
-     the EventTimeTimeout for every still-pending user turn, emitting
+     time past max_ts + delay) are the two last files. Drains take 2
+     files per trigger, so both closers ride the last batch that reads
+     files: it pushes the final watermark past every real event, and
+     Spark's no-data micro-batch that follows fires the
+     EventTimeTimeout for every still-pending user turn, emitting
      exactly the ``evicted_unmatched`` rows the batch operator produces
-     for response-less user turns. One pass, documented semantics only
-     (watermark monotonicity + event-time timeout), no state peeking.
+     for response-less user turns (at 1 file per trigger, the second
+     closer's batch fires them). One pass, documented semantics only
+     (watermark monotonicity + event-time timeout + no-data
+     micro-batches), no state peeking.
   4. The snapshot stream needs no watermark: update-mode deltas land in
      the EpochCommitSink and ``read_final_snapshot`` folds
-     latest-epoch-per-key — equal to batch compaction for ANY slicing.
+     latest-epoch-per-key (``EpochCommitSink.read_latest``) — equal to
+     batch compaction for ANY slicing.
 
-Every drain starts through ``streaming/pipeline.start_query`` and
-commits through the EpochCommitSink, the engine's one commit protocol;
-results are read back from committed epochs only (``read_table``).
+Every drain runs through ``_drain``: it ships the package, starts the
+query through ``streaming/pipeline.start_query`` and commits through
+the EpochCommitSink, the engine's one commit protocol; results are
+read back from committed epochs only (``read_table``).
 
 Scale note: the slicing/materialization exists only to drive the file
 stream deterministically in-sandbox; a real deployment streams the
@@ -49,8 +55,12 @@ from __future__ import annotations
 
 import hashlib
 import os
+import random
+import shutil
 import tempfile
-from collections.abc import Callable
+import time
+from collections.abc import Callable, Sequence
+from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -58,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
+from stellar_etl_spark.deploy import ship_package
 from stellar_etl_spark.sources.transcripts import load_transcripts
 from stellar_etl_spark.streaming.pipeline import start_query
 from stellar_etl_spark.streaming.sink import (
@@ -80,15 +91,14 @@ _SLACK_US = 30 * 86400 * 1_000_000
 N_SLICES = 6
 
 # Streaming state-store partition count for the parity drains. They
-# run in whatever session the caller built. A `session.get_spark`
-# session already sizes the state width to its cores (session.py), but
-# a session sized for batch work (Spark's own default is 200 shuffle
-# partitions) gives each micro-batch one task and one state-store
-# commit per partition, most of them empty, and the drain pays pure
+# run in whatever session the caller built, and a harness session is
+# not built by `session.get_spark` (which sizes the state width to its
+# cores): it starts at Spark's own default of 200 shuffle partitions.
+# Each micro-batch would then run one task and one state-store commit
+# per partition, most of them empty, and the drain would pay pure
 # per-partition overhead. Pinning 8 keeps the evidence identical
-# (results are partition-count independent; tests already run at 8)
-# and cuts per-trigger cost ~4x against 32. It is a drain-local
-# override, not an engine default.
+# (results are partition-count independent) and the per-trigger cost
+# small. It is a drain-local override, not an engine default.
 DRAIN_PARTITIONS = "8"
 
 # Python-stateful drains (applyInPandasWithState) are bottlenecked by
@@ -104,166 +114,178 @@ DRAIN_PARTITIONS = "8"
 # independent either way — this is wall-clock only.
 DRAIN_PARTITIONS_STATEFUL = "16"
 
-from contextlib import contextmanager
+# The file layout of a transcript slice; the stream's read schema
+# (source.py) casts ts to TimestampType on read.
+TRANSCRIPT_ARROW_SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
+        ("role", pa.string()),
+        ("text", pa.string()),
+        ("tool", pa.string()),
+        ("ts", pa.timestamp("us")),
+    ]
+)
 
 
-@contextmanager
-def _drain_conf(spark: SparkSession, partitions: str = DRAIN_PARTITIONS):
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, partitions)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prior)
+def write_pinned(
+    out: str,
+    slices: Sequence[Sequence[tuple] | str] | Callable[[], Sequence],
+    closers_after_us: int | Callable[[], int] | None = None,
+) -> str:
+    """Write a file-stream input whose delivery order is pinned, and
+    return `out`. Spark's file source picks files up by mtime, name
+    breaking ties, so:
+
+      * slice i lands as ``slice-{i:05d}.parquet``: name order is
+        delivery order;
+      * mtimes rise strictly, 2 s apart, and all lie in the past (ties
+        at ms granularity scramble the pickup order);
+      * with `closers_after_us`, the last two files are the
+        ``__closer__`` sentinels (``zz-closer-{k}.parquet``) at event
+        time closers_after_us + _DELAY_US + _SLACK_US + k s: whichever
+        batch carries them pushes the final watermark past every real
+        event, and the batch after it fires every pending timeout.
+
+    A slice is a list of transcript row tuples (conv_id, turn_idx,
+    role, text, tool, ts in epoch µs), written with
+    TRANSCRIPT_ARROW_SCHEMA, or the path of a parquet file to copy.
+    `out` is a cache: when its ``_COMPLETE`` marker exists it is
+    returned untouched, and a dir without one (a build that died) is
+    wiped and rebuilt. `slices` and `closers_after_us` may be
+    callables, so a cached dir builds neither."""
+    marker = os.path.join(out, "_COMPLETE")
+    if os.path.exists(marker):
+        return out
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    os.makedirs(out)
+    if callable(slices):
+        slices = slices()
+    if callable(closers_after_us):
+        closers_after_us = closers_after_us()
+    closers = [] if closers_after_us is None else [
+        (f"zz-closer-{k}.parquet", [(
+            CLOSER_CONV, k, "assistant", "closer",
+            # non-null tool, and a reserved one: Catalyst pushes
+            # dimension filters (e.g. tool IS NOT NULL) BELOW the
+            # EventTimeWatermark node into the scan, so a sentinel a
+            # downstream filter can drop would never reach the
+            # watermark collector and the stream would never close
+            CLOSER_CONV,
+            closers_after_us + _DELAY_US + _SLACK_US + k * 1_000_000,
+        )])
+        for k in range(2)
+    ]
+    files = [(f"slice-{i:05d}.parquet", s) for i, s in enumerate(slices)]
+    t0 = time.time() - 2.0 * (len(files) + len(closers) + 1)
+    for i, (name, body) in enumerate(files + closers):
+        path = os.path.join(out, name)
+        if isinstance(body, str):
+            shutil.copyfile(body, path)
+        else:
+            cols = dict(zip(TRANSCRIPT_ARROW_SCHEMA.names, zip(*body)))
+            pq.write_table(pa.table(cols, schema=TRANSCRIPT_ARROW_SCHEMA), path)
+        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
+    with open(marker, "w") as f:
+        f.write(str(len(files) + len(closers)))
+    return out
+
+
+def _cache_dir(tag: str, key: str) -> str:
+    digest = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), "spark_graft_parity", f"{tag}-{digest}")
+
+
+def _range_slices(
+    out: str,
+    frame: Callable[[], DataFrame],
+    col: str,
+    n_files: int,
+    closers_after_us: Callable[[], int] | None = None,
+) -> str:
+    """`write_pinned` over `frame()` range-partitioned on `col` into
+    n_files slices, delivered in ascending `col` order: range
+    partition i holds the i-th range and task i writes part-{i:05d}-*,
+    so sorted part names are range order."""
+    stage = out + ".stage"
+
+    def slices() -> list[str]:
+        frame().repartitionByRange(n_files, col).write.mode("overwrite").parquet(stage)
+        return sorted(
+            os.path.join(stage, f)
+            for f in os.listdir(stage)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+
+    write_pinned(out, slices, closers_after_us)
+    shutil.rmtree(stage, ignore_errors=True)
+    return out
 
 
 def _slice_dir(spark: SparkSession, sf_dir: str, n_files: int = N_SLICES) -> str:
     """Materialize the derived transcripts as n_files time-range slices
-    plus two closer-sentinel files, mtime-ordered. Cached per sf_dir
-    (the driver's parquet inputs are immutable)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_parity", f"slices-v3-{key}-{n_files}"
-    )
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.exists(marker):
-        return out
-    import shutil
+    plus the two closer sentinels. Cached per sf_dir (the driver's
+    parquet inputs are immutable)."""
 
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-
-    t = load_transcripts(spark, sf_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp_ntz")
-    )
-    max_ts = t.agg(F.max("ts")).collect()[0][0]  # 1-row scalar, not corpus
-
-    stage = out + ".stage"
-    (
-        t.repartitionByRange(n_files, "ts")
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    # range partition i holds the i-th ascending ts range and task i
-    # writes part-{i:05d}-*; sorted names == time order. Assign strictly
-    # increasing mtimes so the file stream's pickup order is pinned
-    # (ties at ms granularity scramble it — the round-2 flake).
-    parts = sorted(
-        f for f in os.listdir(stage) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    import time as _time
-
-    t0 = _time.time() - 2.0 * (len(parts) + 3)
-    for i, f in enumerate(parts):
-        dst = os.path.join(out, f"slice-{i:05d}.parquet")
-        shutil.move(os.path.join(stage, f), dst)
-        os.utime(dst, (t0 + 2.0 * i, t0 + 2.0 * i))
-    shutil.rmtree(stage)
-
-    # two sentinels, two files, event time past max_ts + delay: batch A
-    # advances the final watermark, batch B fires every pending timeout
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    from datetime import timezone
-
-    # max_ts is a naive (NTZ/UTC-wall) datetime; pin UTC explicitly so
-    # the host TZ can never shift the sentinel event time
-    base_us = int(max_ts.replace(tzinfo=timezone.utc).timestamp() * 1_000_000)
-    for k in range(2):
-        tbl = pa.table(
-            {
-                "conv_id": [CLOSER_CONV],
-                "turn_idx": [k],
-                "role": ["assistant"],
-                "text": ["closer"],
-                # non-null tool, and a reserved one: Catalyst pushes
-                # dimension filters (e.g. tool IS NOT NULL) BELOW the
-                # EventTimeWatermark node into the scan, so a sentinel a
-                # downstream filter can drop would never reach the
-                # watermark collector and the stream would never close
-                "tool": [CLOSER_CONV],
-                "ts": [base_us + _DELAY_US + _SLACK_US + k * 1_000_000],
-            },
-            schema=schema,
+    def transcripts() -> DataFrame:
+        return load_transcripts(spark, sf_dir).withColumn(
+            "ts", F.col("ts").cast("timestamp_ntz")
         )
-        path = os.path.join(out, f"zz-closer-{k}.parquet")
-        pq.write_table(tbl, path)
-        os.utime(path, (t0 + 2.0 * (len(parts) + k), t0 + 2.0 * (len(parts) + k)))
 
-    with open(marker, "w") as f:
-        f.write(str(len(parts)))
-    return out
+    def max_ts_us() -> int:
+        # 1-row scalar, not corpus. max_ts is a naive (NTZ/UTC-wall)
+        # datetime; pin UTC explicitly so the host TZ can never shift
+        # the sentinel event time
+        max_ts = transcripts().agg(F.max("ts")).collect()[0][0]
+        return int(max_ts.replace(tzinfo=timezone.utc).timestamp() * 1_000_000)
+
+    out = _cache_dir("slices-v3", sf_dir) + f"-{n_files}"
+    return _range_slices(out, transcripts, "ts", n_files, max_ts_us)
+
+
+def _doc_slice_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
+    """Materialize the dedup corpus as doc_id-range slices (no
+    sentinels). Cached per sf_dir."""
+    from stellar_etl_spark.functions.corpus import load_corpus
+
+    out = _cache_dir("docs-v1", sf_dir) + f"-{n_files}"
+    return _range_slices(out, lambda: load_corpus(spark, sf_dir), "doc_id", n_files)
+
+
+def _permuted(src: str, mode: str) -> str:
+    """Permuted-delivery copy of a pinned input: the same parquet
+    files, with the ``slice-*`` files delivered in reversed (or seeded-
+    shuffled) order and any closer sentinels still last. Cached per
+    (src, mode)."""
+    names = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    data = [f for f in names if f.startswith("slice-")]
+    if mode == "reverse":
+        data.reverse()
+    elif mode == "shuffle":
+        random.Random(7).shuffle(data)
+    else:  # pragma: no cover - guard against typo'd modes
+        raise ValueError(f"unknown disorder mode: {mode}")
+    closers = [f for f in names if not f.startswith("slice-")]
+    return write_pinned(
+        _cache_dir("disorder-v2", f"{src}|{mode}"),
+        [os.path.join(src, f) for f in data + closers],
+    )
 
 
 def disorder_dir(
     spark: SparkSession, sf_dir: str, mode: str = "reverse"
 ) -> str:
     """Permuted-delivery copy of the parity slices (VERDICT r04 "Next
-    round" #5): same parquet files, but the DATA slices are renamed and
-    re-mtimed so the file stream delivers them in reversed (or seeded-
-    shuffled) event-time order — every micro-batch boundary now crosses
-    state that was built from FUTURE events. The closer sentinels keep
-    their terminal delivery slots: they carry the watermark push that
-    finalizes every pending timeout, and delivering them first would
-    advance the watermark past the real events and late-drop the whole
-    input (which is the disorder bound the parity delay is sized
-    against — see PARITY_DELAY). Cached per (sf_dir, mode)."""
-    src = _slice_dir(spark, sf_dir)
-    key = hashlib.md5(f"{sf_dir}|{mode}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_parity", f"disorder-v1-{key}"
-    )
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.exists(marker):
-        return out
-    import random
-    import shutil
-    import time as _time
-
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-    data = sorted(
-        f for f in os.listdir(src)
-        if f.startswith("slice-") and f.endswith(".parquet")
-    )
-    closers = sorted(
-        f for f in os.listdir(src)
-        if f.startswith("zz-closer-") and f.endswith(".parquet")
-    )
-    order = list(data)
-    if mode == "reverse":
-        order.reverse()
-    elif mode == "shuffle":
-        random.Random(7).shuffle(order)
-    else:  # pragma: no cover - guard against typo'd modes
-        raise ValueError(f"unknown disorder mode: {mode}")
-    t0 = _time.time() - 2.0 * (len(order) + len(closers) + 1)
-    for i, f in enumerate(order):
-        # delivery position i now carries the i-th PERMUTED slice; the
-        # new name keeps name order == delivery order (the stream picks
-        # up by mtime, with the name as tiebreak)
-        dst = os.path.join(out, f"slice-{i:05d}.parquet")
-        shutil.copyfile(os.path.join(src, f), dst)
-        os.utime(dst, (t0 + 2.0 * i, t0 + 2.0 * i))
-    for k, f in enumerate(closers):
-        dst = os.path.join(out, f)
-        shutil.copyfile(os.path.join(src, f), dst)
-        mt = t0 + 2.0 * (len(order) + k)
-        os.utime(dst, (mt, mt))
-    with open(marker, "w") as fh:
-        fh.write(mode)
-    return out
+    round" #5): the file stream delivers the data slices in reversed
+    (or seeded-shuffled) event-time order — every micro-batch boundary
+    now crosses state that was built from FUTURE events. The closer
+    sentinels keep their terminal delivery slots: they carry the
+    watermark push that finalizes every pending timeout, and
+    delivering them first would advance the watermark past the real
+    events and late-drop the whole input (which is the disorder bound
+    the parity delay is sized against — see PARITY_DELAY)."""
+    return _permuted(_slice_dir(spark, sf_dir), mode)
 
 
 def disorder_doc_dir(
@@ -271,37 +293,7 @@ def disorder_doc_dir(
 ) -> str:
     """disorder_dir for the doc-corpus slices (_doc_slice_dir): full
     permutation, no sentinels to protect."""
-    src = _doc_slice_dir(spark, sf_dir)
-    key = hashlib.md5(f"docs|{sf_dir}|{mode}".encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_parity", f"disorder-docs-v1-{key}"
-    )
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.exists(marker):
-        return out
-    import random
-    import shutil
-    import time as _time
-
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-    data = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
-    order = list(data)
-    if mode == "reverse":
-        order.reverse()
-    elif mode == "shuffle":
-        random.Random(7).shuffle(order)
-    else:  # pragma: no cover
-        raise ValueError(f"unknown disorder mode: {mode}")
-    t0 = _time.time() - 2.0 * (len(order) + 1)
-    for i, f in enumerate(order):
-        dst = os.path.join(out, f"slice-{i:05d}.parquet")
-        shutil.copyfile(os.path.join(src, f), dst)
-        os.utime(dst, (t0 + 2.0 * i, t0 + 2.0 * i))
-    with open(marker, "w") as fh:
-        fh.write(mode)
-    return out
+    return _permuted(_doc_slice_dir(spark, sf_dir), mode)
 
 
 def streamed_turn_pairs(
@@ -314,13 +306,10 @@ def streamed_turn_pairs(
 ) -> DataFrame:
     """Drain the stateful matcher over the sliced driver input; result
     equals operators/pairs.match_pairs row-for-row (same oracle)."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.streaming.matcher import match_pairs_stream
     from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
 
-    ship_package(spark)
     matcher = match_pairs_stream_ooo if ooo else match_pairs_stream
-    src_dir = src_dir or _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
@@ -329,10 +318,7 @@ def streamed_turn_pairs(
     # advance from the closer batch fires every pending EventTimeTimeout
     # in an extra empty batch - documented noDataMicroBatches behavior),
     # so the two closer files no longer need separate triggers.
-    stream = read_transcript_stream(
-        spark, src_dir,
-        max_files_per_trigger=max_files_per_trigger, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir, src_dir, max_files_per_trigger)
     return _drain_append(
         matcher(stream, parity_cfg), "pairs", DRAIN_PARTITIONS_STATEFUL
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -346,14 +332,24 @@ def _drain(
     partitions: str = DRAIN_PARTITIONS,
 ) -> EpochCommitSink:
     """Run a streaming DataFrame to completion (availableNow drain)
-    through `writer(sink)` into a fresh epoch sink; return the sink."""
+    through `writer(sink)` into a fresh epoch sink; return the sink.
+    Ships the package first: harness sessions are not built by
+    `get_spark`, and the drains' Python operators and transforms run
+    on the session's workers."""
+    spark = stream.sparkSession
+    ship_package(spark)
     work = tempfile.mkdtemp(prefix=f"parity_{name}_")
     sink = EpochCommitSink(os.path.join(work, "sink"))
-    with _drain_conf(stream.sparkSession, partitions):
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, partitions)
+    try:
         start_query(
             stream, writer(sink), os.path.join(work, "ckpt"),
             f"parity_{name}", output_mode,
         ).awaitTermination()
+    finally:
+        spark.conf.set(key, prior)
     return sink
 
 
@@ -370,11 +366,40 @@ def _drain_append(
     return sink.read_table(stream.sparkSession, name)
 
 
-def _drain_stamped(stream: DataFrame, table: str) -> EpochCommitSink:
+def _drain_stamped(
+    stream: DataFrame, table: str, partitions: str = DRAIN_PARTITIONS
+) -> EpochCommitSink:
     """Drain an update-mode aggregation: each epoch's changed rows,
-    stamped with their epoch_id, commit as `table`."""
+    stamped with their epoch_id, commit as `table`; fold them back
+    with `EpochCommitSink.read_latest`."""
     return _drain(
-        stream, table, lambda sink: epoch_stamped_writer(sink, table), "update"
+        stream, table, lambda sink: epoch_stamped_writer(sink, table), "update",
+        partitions,
+    )
+
+
+def _transcripts(
+    spark: SparkSession,
+    sf_dir: str,
+    src_dir: str | None = None,
+    max_files_per_trigger: int = 2,
+) -> DataFrame:
+    """The transcript stream over the parity slices (or `src_dir`),
+    without lineage."""
+    return read_transcript_stream(
+        spark, src_dir or _slice_dir(spark, sf_dir),
+        max_files_per_trigger=max_files_per_trigger, with_lineage=False,
+    )
+
+
+def doc_stream(
+    spark: SparkSession, src_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """The doc-corpus stream over doc slices (_doc_slice_dir)."""
+    return (
+        spark.readStream.schema(DOC_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
     )
 
 
@@ -396,13 +421,10 @@ def streamed_sessions(
     watermark)."""
     from stellar_etl_spark.operators.sessions import sessionize
 
-    src_dir = _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir)
     return _drain_append(
         sessionize(stream, parity_cfg, watermark=True), "sessions"
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -426,53 +448,10 @@ def streamed_tool_rate(
     watermark), and the defensive filter below guards the invariant."""
     from stellar_etl_spark.operators.rollups import tool_rate
 
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).withWatermark("ts", PARITY_DELAY)
+    stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
     return _drain_append(tool_rate(stream, cfg, exact="set"), "tool_rate").filter(
         F.col("tool") != CLOSER_CONV
     )
-
-
-def _doc_slice_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Materialize the dedup corpus as doc_id-range parquet slices with
-    strictly increasing mtimes (same pickup-order pinning as
-    _slice_dir). Cached per sf_dir."""
-    from stellar_etl_spark.functions.corpus import load_corpus
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_parity", f"docs-v1-{key}-{n_files}"
-    )
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.exists(marker):
-        return out
-    import shutil
-    import time as _time
-
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    os.makedirs(out, exist_ok=True)
-    stage = out + ".stage"
-    (
-        load_corpus(spark, sf_dir)
-        .repartitionByRange(n_files, "doc_id")
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    parts = sorted(
-        f for f in os.listdir(stage) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    t0 = _time.time() - 2.0 * (len(parts) + 1)
-    for i, f in enumerate(parts):
-        dst = os.path.join(out, f"slice-{i:05d}.parquet")
-        shutil.move(os.path.join(stage, f), dst)
-        os.utime(dst, (t0 + 2.0 * i, t0 + 2.0 * i))
-    shutil.rmtree(stage)
-    with open(marker, "w") as f:
-        f.write(str(len(parts)))
-    return out
 
 
 DEDUP_TABLE = "dedup"
@@ -500,16 +479,7 @@ def fold_dedup_sink(spark: SparkSession, sink_root: str, sf_dir: str) -> DataFra
     from stellar_etl_spark.functions.corpus import load_corpus
     from stellar_etl_spark.functions.dedup import exact_fingerprint
 
-    deltas = EpochCommitSink(sink_root).read_table(spark, DEDUP_TABLE)
-    latest = F.max_by(
-        F.struct("keep_doc_id", "n_copies"), F.col("epoch_id")
-    ).alias("s")
-    folded = (
-        deltas.groupBy("fp64")
-        .agg(latest)
-        .select("fp64", F.col("s.keep_doc_id").alias("keep_doc_id"),
-                F.col("s.n_copies").alias("n_copies"))
-    )
+    folded = EpochCommitSink(sink_root).read_latest(spark, DEDUP_TABLE, ["fp64"])
     docs = load_corpus(spark, sf_dir).select(
         "doc_id", exact_fingerprint().alias("fp64")
     )
@@ -534,12 +504,7 @@ def streamed_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation IS the seen-map — distributed, checkpointed, and
     exactly-once, vs the reference's in-process seen-hash map
     (/root/reference/cmd/export_assets.go:40-58)."""
-    src_dir = _doc_slice_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 1)
     sink = _drain_stamped(dedup_stream_agg(stream), DEDUP_TABLE)
     return fold_dedup_sink(spark, sink.root, sf_dir)
 
@@ -554,10 +519,7 @@ def streamed_tool_rate_sliding(
     windows can never finalize, and its reserved tool filters out."""
     from stellar_etl_spark.operators.rollups import tool_rate_sliding
 
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).withWatermark("ts", PARITY_DELAY)
+    stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
     return _drain_append(
         tool_rate_sliding(stream, cfg, exact="set"), "tool_rate_sliding"
     ).filter(F.col("tool") != CLOSER_CONV)
@@ -567,28 +529,15 @@ def streamed_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the update-mode snapshot stream through the exactly-once
     epoch sink and fold it; result equals operators/state.
     compact_last_state row-for-row (same oracle)."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.streaming.snapshot import (
+        SNAPSHOT_TABLE,
         read_final_snapshot,
-        start_snapshot_stream,
+        snapshot_agg,
     )
 
-    ship_package(spark)
-    src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_snap_")
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).filter(F.col("conv_id") != CLOSER_CONV)
-    with _drain_conf(spark):
-        q = start_snapshot_stream(
-            stream,
-            os.path.join(work, "sink"),
-            os.path.join(work, "ckpt"),
-            available_now=True,
-            query_name="parity_snapshot",
-        )
-        q.awaitTermination()
-    return read_final_snapshot(spark, os.path.join(work, "sink"))
+    stream = _transcripts(spark, sf_dir).filter(F.col("conv_id") != CLOSER_CONV)
+    sink = _drain_stamped(snapshot_agg(stream), SNAPSHOT_TABLE)
+    return read_final_snapshot(spark, sink.root)
 
 
 # TTL for the key-retiring snapshot drain: chosen so the final watermark
@@ -615,35 +564,20 @@ def streamed_snapshot_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every key idle > 48h before max_ts. Oracle: the batch
     compaction restricted to keys active within the 48h window
     (ms-exact boundary, see SNAPSHOT_TTL_S)."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.streaming.snapshot import (
+        SNAPSHOT_TABLE,
         read_final_snapshot,
-        start_snapshot_stream,
+        snapshot_ttl,
     )
 
-    ship_package(spark)
-    src_dir = _slice_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="parity_snap_ttl_")
     # no pre-filter: the sentinels must reach the watermark collector
     # (a conv_id filter would be pushed below EventTimeWatermark and the
     # timers would never fire); the closer key itself never retires and
     # is dropped at fold time.
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
-    with _drain_conf(spark, DRAIN_PARTITIONS_STATEFUL):
-        q = start_snapshot_stream(
-            stream,
-            os.path.join(work, "sink"),
-            os.path.join(work, "ckpt"),
-            cfg=parity_cfg,
-            available_now=True,
-            query_name="parity_snapshot_ttl",
-            ttl_s=SNAPSHOT_TTL_S,
-        )
-        q.awaitTermination()
-    return read_final_snapshot(spark, os.path.join(work, "sink")).filter(
+    snap = snapshot_ttl(_transcripts(spark, sf_dir), parity_cfg, SNAPSHOT_TTL_S)
+    sink = _drain_stamped(snap, SNAPSHOT_TABLE, DRAIN_PARTITIONS_STATEFUL)
+    return read_final_snapshot(spark, sink.root).filter(
         F.col("conv_id") != CLOSER_CONV
     )
 
@@ -683,21 +617,13 @@ def streamed_tool_conv_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_registers,
     )
 
-    src_dir = _slice_dir(spark, sf_dir)
     stream = (
-        read_transcript_stream(
-            spark, src_dir, max_files_per_trigger=2, with_lineage=False
-        )
+        _transcripts(spark, sf_dir)
         .filter(F.col("conv_id") != CLOSER_CONV)
         .filter(F.col("tool").isNotNull())
     )
     sink = _drain_stamped(hll_registers(stream, "conv_id", "tool"), HLL_TABLE)
-
-    deltas = sink.read_table(spark, HLL_TABLE)
-    regs = (
-        deltas.groupBy("tool", "bucket")
-        .agg(F.max_by("rho", F.col("epoch_id")).alias("rho"))
-    )
+    regs = sink.read_latest(spark, HLL_TABLE, ["tool", "bucket"])
     batch = load_transcripts(spark, sf_dir).filter(F.col("tool").isNotNull())
     return hll_join_exact(
         hll_estimate(regs, "tool"), batch, "conv_id", "tool", "tool"
@@ -729,18 +655,13 @@ def streamed_latency_quantiles(
     count. The matcher (stateful) and the histogram (per-batch batch
     aggregation inside foreachBatch) never chain two stateful streaming
     operators, so the plan stays within documented semantics."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.operators.pairs import QUANTILES_PERMILLE
     from stellar_etl_spark.streaming.matcher import match_pairs_stream
 
-    ship_package(spark)
-    src_dir = _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir)
 
     def _hist(batch_df: DataFrame) -> DataFrame:
         return (
@@ -817,16 +738,9 @@ def streamed_conv_turns_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_counters,
     )
 
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).filter(F.col("conv_id") != CLOSER_CONV)
+    stream = _transcripts(spark, sf_dir).filter(F.col("conv_id") != CLOSER_CONV)
     sink = _drain_stamped(cms_counters(stream, "conv_id"), CMS_TABLE)
-
-    deltas = sink.read_table(spark, CMS_TABLE)
-    counters = deltas.groupBy("d", "bucket").agg(
-        F.max_by("c", F.col("epoch_id")).alias("c")
-    )
+    counters = sink.read_latest(spark, CMS_TABLE, ["d", "bucket"])
     hmod = _cms_hmod("conv_id", spark=True)
     keys = (
         load_transcripts(spark, sf_dir)
@@ -895,10 +809,7 @@ def streamed_conv_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct pair set, then the cohort assignment and matrix reshape —
     pure functions of the fold — run batch-side. Oracle: the batch
     conv_retention SQL."""
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).filter(F.col("conv_id") != CLOSER_CONV)
+    stream = _transcripts(spark, sf_dir).filter(F.col("conv_id") != CLOSER_CONV)
     days_stream = (
         stream.select("conv_id", F.to_date("ts").alias("activity_day"))
         .groupBy("conv_id", "activity_day")
@@ -934,12 +845,9 @@ def streamed_turn_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode; oracle = the batch join of the same two inputs."""
     from stellar_etl_spark.operators.dims import dim_tools
 
-    src_dir = _slice_dir(spark, sf_dir)
     dim = dim_tools(load_transcripts(spark, sf_dir), surrogate="rank")
     stream = (
-        read_transcript_stream(
-            spark, src_dir, max_files_per_trigger=2, with_lineage=False
-        )
+        _transcripts(spark, sf_dir)
         .filter(F.col("tool").isNotNull())
         .filter(F.col("conv_id") != CLOSER_CONV)
     )
@@ -985,17 +893,9 @@ def streamed_tool_transitions(
     Oracle: the batch tool_transitions SQL — the cross-batch pattern
     context (a bigram whose two turns land in different micro-batches)
     must reconstruct exactly."""
-    from stellar_etl_spark.deploy import ship_package
-    from stellar_etl_spark.streaming.transitions import (
-        START,
-        tool_transitions_stream,
-    )
+    from stellar_etl_spark.streaming.transitions import tool_transitions_stream
 
-    ship_package(spark)
-    src_dir = src_dir or _slice_dir(spark, sf_dir)
-    raw = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    raw = _transcripts(spark, sf_dir, src_dir)
     if ooo:
         # the watermark-ordered form is timer-driven: closers must
         # reach the watermark node, and null-tool rows are skipped
@@ -1048,17 +948,12 @@ def streamed_error_bursts(
     anyway be pushed below EventTimeWatermark and starve the timers
     (the snapshot_ttl lesson). Oracle: the batch gaps-and-islands SQL
     (operators/journeys.ERROR_BURSTS_ORACLE_SQL)."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.streaming.bursts import error_bursts_stream
     from stellar_etl_spark.streaming.ooo import error_bursts_stream_ooo
 
-    ship_package(spark)
     detector = error_bursts_stream_ooo if ooo else error_bursts_stream
-    src_dir = src_dir or _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir, src_dir)
     return _drain_append(
         detector(stream, parity_cfg), "bursts", DRAIN_PARTITIONS_STATEFUL
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -1081,20 +976,13 @@ def streamed_dedup_minhash(
     through the epoch sink, folded to the final bucket table (latest
     epoch per key), pairs generated row-locally and Jaccard-verified
     against the batch signature map. Oracle: the batch minhash SQL."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.streaming.lshstate import minhash_bucket_stream
 
-    ship_package(spark)
-    src_dir = src_dir or _doc_slice_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        # 2 files/trigger: halves the state-store commits and the
-        # duplicate bucket invocations vs 1-file triggers (the matcher
-        # drain's cadence rationale); the kill/resume test keeps its
-        # own 1-file stream so the restart still lands mid-corpus
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
+    # 2 files/trigger: halves the state-store commits and the
+    # duplicate bucket invocations vs 1-file triggers (the matcher
+    # drain's cadence rationale); the kill/resume test keeps its own
+    # 1-file stream so the restart still lands mid-corpus
+    stream = doc_stream(spark, src_dir or _doc_slice_dir(spark, sf_dir), 2)
     sink = _drain_stamped(minhash_bucket_stream(stream), MINHASH_BUCKET_TABLE)
     return fold_minhash_sink(spark, sink.root, sf_dir)
 
@@ -1106,13 +994,8 @@ def fold_minhash_sink(spark: SparkSession, sink_root: str, sf_dir: str) -> DataF
     from stellar_etl_spark.functions.dedup import _hashes_df
     from stellar_etl_spark.streaming.lshstate import pairs_from_bucket_table
 
-    deltas = EpochCommitSink(sink_root).read_table(spark, MINHASH_BUCKET_TABLE)
-    latest = F.max_by(F.struct("n", "members"), F.col("epoch_id")).alias("s")
-    buckets = (
-        deltas.groupBy("band_idx", "band_key")
-        .agg(latest)
-        .select("band_idx", "band_key", F.col("s.n").alias("n"),
-                F.col("s.members").alias("members"))
+    buckets = EpochCommitSink(sink_root).read_latest(
+        spark, MINHASH_BUCKET_TABLE, ["band_idx", "band_key"]
     )
     sigs = _hashes_df(load_corpus(spark, sf_dir))
     return pairs_from_bucket_table(buckets, sigs)
@@ -1148,12 +1031,9 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent epoch commit alone (replayed epochs are skipped), which
     the kill/resume suite proves for this sink; there is no operator
     state to reconstruct."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.functions import hashing as H
     from stellar_etl_spark.functions import retrieval as fret
 
-    ship_package(spark)
-    src_dir = _doc_slice_dir(spark, sf_dir)
     qstructs = ", ".join(
         f"named_struct('query_id', CAST({qid} AS BIGINT), 'token', '{t}')"
         for qid, q in fret.BM25_QUERIES
@@ -1189,11 +1069,7 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "token", "doc_id", "dl", "tf"
         ),
     }
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
+    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
     sink = _drain(
         index_rows(stream), "bm25",
         lambda sink: foreach_batch_writer(sink, transforms),
@@ -1241,11 +1117,7 @@ def streamed_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateless append streaming: exactly-once comes from the sink's
     idempotent epoch commit alone (replayed epochs are skipped) — no
     operator state, no watermark."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.functions import scoring as fscore
-
-    ship_package(spark)
-    src_dir = _doc_slice_dir(spark, sf_dir)
 
     def writer(sink: EpochCommitSink) -> Callable[[DataFrame, int], None]:
         # lm_parts stages the batch once (an eager local checkpoint), so
@@ -1264,11 +1136,7 @@ def streamed_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return _write
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
+    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
     return fold_lm_sink(spark, _drain(stream, "ngram_lm", writer).root)
 
 
@@ -1309,16 +1177,11 @@ def streamed_dq_violations(
     branch, order checks finalize per conversation when the closer
     sentinels push the final watermark past every real event. Oracle:
     the batch checker's SQL (operators/dq.DQ_ORACLE_SQL), value-exact."""
-    from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.operators.dq import inject_dq_violations
     from stellar_etl_spark.streaming.dq import dq_violations_stream
 
-    ship_package(spark)
-    src_dir = src_dir or _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir, src_dir)
     return _drain_append(
         dq_violations_stream(inject_dq_violations(stream), parity_cfg), "dq"
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -1337,11 +1200,8 @@ def streamed_turn_replies(
     (streaming/replies.TURN_REPLIES_ORACLE_SQL) for any slicing."""
     from stellar_etl_spark.streaming.replies import reply_join_stream, reply_pairs
 
-    src_dir = _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir)
     return reply_pairs(
         _drain_append(reply_join_stream(stream, parity_cfg), "replies").filter(
             F.col("conv_id") != CLOSER_CONV
@@ -1362,10 +1222,7 @@ def streamed_tool_rate_peak(
     two-level SQL (PEAK_ORACLE_SQL), value-exact."""
     from stellar_etl_spark.operators.rollups import tool_rate_peak
 
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    ).withWatermark("ts", PARITY_DELAY)
+    stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
     return _drain_append(tool_rate_peak(stream, cfg), "tool_rate_peak").filter(
         F.col("tool") != CLOSER_CONV
     )
@@ -1382,10 +1239,7 @@ def streamed_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity delay no suppression window expires mid-stream, so the
     drained rows equal the batch DISTINCT — i.e. exactly the original
     transcript table."""
-    src_dir = _slice_dir(spark, sf_dir)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir)
     dup = stream.filter(F.col("turn_idx") % 7 == 3)
     injected = stream.unionByName(dup).withWatermark("ts", PARITY_DELAY)
     deduped = injected.dropDuplicatesWithinWatermark(
@@ -1407,11 +1261,8 @@ def streamed_turn_replies_outer(
     Oracle: the batch LEFT JOIN (TURN_REPLIES_OUTER_ORACLE_SQL)."""
     from stellar_etl_spark.streaming.replies import reply_join_outer_stream
 
-    src_dir = _slice_dir(spark, sf_dir)
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
-    stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2, with_lineage=False
-    )
+    stream = _transcripts(spark, sf_dir)
     return _drain_append(
         reply_join_outer_stream(stream, parity_cfg), "replies_outer"
     ).filter(F.col("conv_id") != CLOSER_CONV)
@@ -1439,9 +1290,8 @@ def streamed_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated or dropped in ANY of the three tables skews its columns
     (n_turns / rate_total / n_windows / n_convs / conv_turns_total)
     away from the batch oracle."""
-    src_dir = _slice_dir(spark, sf_dir)
     stream = read_transcript_stream(
-        spark, src_dir, max_files_per_trigger=2
+        spark, _slice_dir(spark, sf_dir), max_files_per_trigger=2
     ).filter(F.col("conv_id") != CLOSER_CONV)
 
     def _tooled(df: DataFrame) -> DataFrame:

@@ -44,7 +44,7 @@ import json
 import os
 import tempfile
 import time
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Mapping, Sequence
 
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
@@ -263,6 +263,23 @@ class EpochCommitSink:
             raise FileNotFoundError(f"no committed epochs for table {name}")
         return spark.read.parquet(*paths)
 
+    def read_latest(
+        self, spark: SparkSession, name: str, keys: Sequence[str]
+    ) -> DataFrame:
+        """Fold an update-mode table (each epoch's changed rows, stamped
+        with `epoch_id`; `epoch_stamped_writer`): per key, the row from
+        the latest epoch that touched it, without `epoch_id`. Read
+        through `read_table`, so compaction snapshots are transparent."""
+        deltas = self.read_table(spark, name)
+        cols = [c for c in deltas.columns if c != "epoch_id"]
+        vals = [c for c in cols if c not in keys]
+        latest = F.max_by(F.struct(*vals), F.col("epoch_id")).alias("s")
+        return (
+            deltas.groupBy(*keys)
+            .agg(latest)
+            .select(*[c if c in keys else F.col(f"s.{c}").alias(c) for c in cols])
+        )
+
 
 def _footer_rows(path: str) -> dict[str, int]:
     """Write-task partition -> rows of the part files one table write
@@ -360,7 +377,7 @@ def epoch_stamped_writer(
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch function of an update-mode query: each batch's
     changed rows, stamped with their `epoch_id`, commit as one table.
-    Readers fold the deltas by keeping the latest epoch per key."""
+    `EpochCommitSink.read_latest` folds them back."""
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         sink.write_epoch(

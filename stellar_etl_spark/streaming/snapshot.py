@@ -191,15 +191,10 @@ def start_snapshot_stream(
 def read_final_snapshot(spark: SparkSession, sink_root: str) -> DataFrame:
     """Fold the committed snapshot deltas: per key, the row from the
     latest epoch that touched it — the current materialized state."""
-    deltas = EpochCommitSink(sink_root).read_table(spark, SNAPSHOT_TABLE)
-    cols = [c for c in deltas.columns if c != "epoch_id"]
-    latest = F.max_by(F.struct(*cols), F.col("epoch_id")).alias("s")
-    folded = (
-        deltas.groupBy("conv_id", "role")
-        .agg(latest)
-        .select(*[F.col(f"s.{c}").alias(c) for c in cols])
+    folded = EpochCommitSink(sink_root).read_latest(
+        spark, SNAPSHOT_TABLE, ["conv_id", "role"]
     )
-    if "retired" in cols:
+    if "retired" in folded.columns:
         # a key whose latest delta is a tombstone is gone from the
         # materialized state; drop the marker so the folded schema
         # matches the batch compactor's

@@ -195,9 +195,6 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     normal-ts rows arrive exactly at the watermark boundary (kept —
     Spark drops strictly-below only). The final fold must equal the
     batch matcher on the same rows."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from stellar_etl_spark.operators.pairs import match_pairs
     from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
     from stellar_etl_spark.streaming.source import read_transcript_stream
@@ -218,26 +215,7 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
         [("zzc", 1, "assistant", "closer", None,
           base_us + 100_001 * 1_000_000)],
     ]
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    t0 = time.time() - 2.0 * (len(slices) + 1)
-    for i, rows in enumerate(slices):
-        cols = list(zip(*rows))
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(
-            pa.table(dict(zip(schema.names, cols)), schema=schema), path
-        )
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices)
 
     out = str(tmp_path / "out")
     stream = read_transcript_stream(

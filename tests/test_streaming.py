@@ -677,11 +677,7 @@ def test_dedup_stream_kill_resume_equals_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def start(available_now):
-        stream = (
-            spark.readStream.schema(parity.DOC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        stream = parity.doc_stream(spark, src_dir, 1)
         w = (
             parity.dedup_stream_agg(stream)
             .writeStream.queryName("dedup_resume")
@@ -880,6 +876,25 @@ def test_sink_compact_preserves_content_and_vacuums(spark, tmp_path):
     assert sorted(r.x for r in sink.read_table(spark, "t").collect()) == now
 
 
+def test_read_latest_folds_across_compaction(spark, tmp_path):
+    """read_latest keeps each key's row from its latest epoch and drops
+    epoch_id, whether that epoch sits in a compaction snapshot or
+    after it: key A is written in epochs 0 and 2, key B only in 1."""
+    sink = EpochCommitSink(str(tmp_path / "s"))
+    write = epoch_stamped_writer(sink, "t")
+
+    def delta(k, v):
+        return spark.createDataFrame([(k, v)], "k string, v long")
+
+    write(delta("A", 0), 0)
+    write(delta("B", 1), 1)
+    assert sink.compact(spark) is not None
+    write(delta("A", 2), 2)
+    got = sink.read_latest(spark, "t", ["k"])
+    assert got.columns == ["k", "v"]
+    assert _rows(got) == [("A", 2), ("B", 1)]
+
+
 def test_snapshot_fold_survives_compaction(spark, data_dir, tmp_path):
     """The update-mode snapshot stream's fold (latest epoch_id per key)
     must be unchanged by compaction — rows keep their epoch_id column,
@@ -958,6 +973,51 @@ def test_transitions_resume_preserves_pattern_state(spark, data_dir, tmp_path):
     assert _rows(got) == _rows(exp)
 
 
+def test_write_pinned_orders_delivery(tmp_path):
+    """The pinned writer (no Spark): name order is mtime order, mtimes
+    rise strictly 2 s apart and lie in the past, the two closers come
+    last at the sentinel event time, and a complete dir is returned
+    untouched while a partial one is rebuilt."""
+    import pyarrow.parquet as pq
+
+    from stellar_etl_spark.streaming import parity
+
+    base_us = 1_700_000_000 * 1_000_000
+    slices = [[("c", i, "user", "t", None, base_us + i * 1_000_000)] for i in range(3)]
+    out = str(tmp_path / "in")
+    assert parity.write_pinned(out, slices, base_us) == out
+
+    names = sorted(f for f in os.listdir(out) if not f.startswith("_"))
+    assert names == [
+        "slice-00000.parquet", "slice-00001.parquet", "slice-00002.parquet",
+        "zz-closer-0.parquet", "zz-closer-1.parquet",
+    ]
+    mtimes = [os.stat(os.path.join(out, f)).st_mtime for f in names]
+    assert [b - a for a, b in zip(mtimes, mtimes[1:])] == pytest.approx([2.0] * 4)
+    assert mtimes[-1] < time.time()
+    assert pq.read_table(os.path.join(out, names[1])).to_pylist()[0]["turn_idx"] == 1
+    for k, f in enumerate(names[-2:]):
+        row = pq.read_table(os.path.join(out, f))
+        assert row.column("conv_id")[0].as_py() == parity.CLOSER_CONV
+        assert row.column("ts")[0].value == (
+            base_us + parity._DELAY_US + parity._SLACK_US + k * 1_000_000
+        )
+
+    def untouched():
+        return {f: os.stat(os.path.join(out, f)).st_mtime_ns for f in os.listdir(out)}
+
+    def rebuilt():
+        raise AssertionError("a complete dir was rebuilt")
+
+    before = untouched()
+    assert parity.write_pinned(out, rebuilt, rebuilt) == out
+    assert untouched() == before
+
+    os.remove(os.path.join(out, "_COMPLETE"))
+    parity.write_pinned(out, slices[:1])
+    assert sorted(os.listdir(out)) == ["_COMPLETE", "slice-00000.parquet"]
+
+
 def test_bursts_resume_preserves_run_state(spark, tmp_path):
     """Kill the quantified-CEP burst stream mid-input, resume from the
     same checkpoint: the per-conversation open-run state survives the
@@ -970,9 +1030,6 @@ def test_bursts_resume_preserves_run_state(spark, tmp_path):
     needs this planted input; the driver-gated error_bursts_streamed
     query covers the inline-close path on real data."""
     import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from stellar_etl_spark.operators.journeys import error_bursts
     from stellar_etl_spark.streaming import parity
@@ -988,48 +1045,17 @@ def test_bursts_resume_preserves_run_state(spark, tmp_path):
         "c2": [e, e, e, ok, e],
         "c3": [e, e, ok, ok],
     }
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
     # slice by turn_idx: turns 0-1 / 2-3 / 4 — c1's open run straddles
     # the file (and therefore the kill) boundary
-    slices = [(0, 1), (2, 3), (4, 4)]
-    t0 = time.time() - 2.0 * (len(slices) + 3)
-    for i, (lo, hi) in enumerate(slices):
-        rows = [
+    slices = [
+        [
             (c, k, "assistant", txts[k], None, base_us + k * 1_000_000)
             for c, txts in convs.items()
             for k in range(lo, min(hi, len(txts) - 1) + 1)
         ]
-        cols = list(zip(*rows))
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(pa.table(dict(zip(schema.names, cols)), schema=schema), path)
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
-    for k in range(2):
-        tbl = pa.table(
-            {
-                "conv_id": [parity.CLOSER_CONV],
-                "turn_idx": [k],
-                "role": ["assistant"],
-                "text": ["closer"],
-                "tool": [parity.CLOSER_CONV],
-                "ts": [base_us + parity._DELAY_US + parity._SLACK_US + k * 1_000_000],
-            },
-            schema=schema,
-        )
-        path = os.path.join(src_dir, f"zz-closer-{k}.parquet")
-        pq.write_table(tbl, path)
-        mt = t0 + 2.0 * (len(slices) + k)
-        os.utime(path, (mt, mt))
+        for lo, hi in [(0, 1), (2, 3), (4, 4)]
+    ]
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices, base_us)
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -1169,11 +1195,7 @@ def test_minhash_resume_preserves_bucket_state(spark, tmp_path):
     )
 
     def start(available_now):
-        stream = (
-            spark.readStream.schema(parity.DOC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        stream = parity.doc_stream(spark, src_dir, 1)
         w = (
             minhash_bucket_stream(stream)
             .writeStream.queryName("minhash_resume")
@@ -1270,11 +1292,7 @@ def test_bm25_resume_absorbs_replayed_index_epochs(spark, tmp_path):
             bdf.unpersist()
 
     def start(available_now):
-        stream = (
-            spark.readStream.schema(parity.DOC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        stream = parity.doc_stream(spark, src_dir, 1)
         w = (
             index_rows(stream)
             .writeStream.queryName("bm25_resume")
@@ -1320,9 +1338,6 @@ def test_dq_stream_kill_resume_equals_batch(spark, tmp_path):
     batch checker (operators/dq.dq_violations) on the same input."""
     import time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from stellar_etl_spark.operators.dq import dq_violations
     from stellar_etl_spark.streaming import parity
     from stellar_etl_spark.streaming.dq import dq_violations_stream
@@ -1360,40 +1375,7 @@ def test_dq_stream_kill_resume_equals_batch(spark, tmp_path):
             turn("c1", 2),
         ],
     ]
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    t0 = time.time() - 2.0 * (len(slices) + 3)
-    for i, rows in enumerate(slices):
-        cols = list(zip(*rows))
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(pa.table(dict(zip(schema.names, cols)), schema=schema), path)
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
-    for k in range(2):
-        tbl = pa.table(
-            {
-                "conv_id": [parity.CLOSER_CONV],
-                "turn_idx": [k],
-                "role": ["assistant"],
-                "text": ["closer"],
-                "tool": [parity.CLOSER_CONV],
-                "ts": [base_us + parity._DELAY_US + parity._SLACK_US + k * 1_000_000],
-            },
-            schema=schema,
-        )
-        path = os.path.join(src_dir, f"zz-closer-{k}.parquet")
-        pq.write_table(tbl, path)
-        mt = t0 + 2.0 * (len(slices) + k)
-        os.utime(path, (mt, mt))
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices, base_us)
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -1459,11 +1441,6 @@ def test_dq_stream_hot_conversation_bounded_state(spark, tmp_path):
     exactly the batch checker's rows (VERDICT r04 "What's wrong" #4 /
     "Next round" #4: bounded DQ state, same oracle, one hot
     conversation spanning every micro-batch)."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from stellar_etl_spark.operators.dq import dq_violations
     from stellar_etl_spark.streaming import parity
     from stellar_etl_spark.streaming.dq import dq_violations_stream
@@ -1497,42 +1474,7 @@ def test_dq_stream_hot_conversation_bounded_state(spark, tmp_path):
         rows.append(turn("ctl", s))  # clean control conversation
         slices.append(rows)
 
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    t0 = time.time() - 2.0 * (len(slices) + 3)
-    for i, rows in enumerate(slices):
-        cols = list(zip(*rows))
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(
-            pa.table(dict(zip(schema.names, cols)), schema=schema), path
-        )
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
-    for k in range(2):
-        tbl = pa.table(
-            {
-                "conv_id": [parity.CLOSER_CONV],
-                "turn_idx": [k],
-                "role": ["assistant"],
-                "text": ["closer"],
-                "tool": [parity.CLOSER_CONV],
-                "ts": [base_us + parity._DELAY_US + parity._SLACK_US + k * 1_000_000],
-            },
-            schema=schema,
-        )
-        path = os.path.join(src_dir, f"zz-closer-{k}.parquet")
-        pq.write_table(tbl, path)
-        mt = t0 + 2.0 * (len(slices) + k)
-        os.utime(path, (mt, mt))
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices, base_us)
 
     out = str(tmp_path / "out")
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
@@ -1582,35 +1524,20 @@ def test_dq_stream_counts_rows_below_finalized_boundary(spark, tmp_path):
     """A row that arrives at or below a partially finalized boundary is
     left out of the order checks and counted: exactly one
     `late_after_finalize` row, whose detail is the boundary idx."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from stellar_etl_spark.streaming import parity
     from stellar_etl_spark.streaming.dq import DQ_OUTPUT_SCHEMA, dq_violations_stream
 
     base_us = 1_700_000_000 * 1_000_000
+
+    def turn(i, ts_us):
+        return ("hot", i, "assistant", "ok", None, ts_us)
+
     # 4 hot turns per slice; slice 1 crosses max_open_groups=4 and
     # finalizes idx 0..5, so turn 1 arriving again in slice 2 is late
-    slices = [[("hot", i, base_us + i * 1_000_000) for i in range(s * 4, s * 4 + 4)]
+    slices = [[turn(i, base_us + i * 1_000_000) for i in range(s * 4, s * 4 + 4)]
               for s in range(3)]
-    slices[2].append(("hot", 1, base_us + 12_000_000))
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    t0 = time.time() - 2.0 * len(slices)
-    for i, rows in enumerate(slices):
-        conv, idx, ts = zip(*rows)
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(pa.table({
-            "conv_id": pa.array(conv, pa.string()),
-            "turn_idx": pa.array(idx, pa.int32()),
-            "role": pa.array(["assistant"] * len(rows), pa.string()),
-            "text": pa.array(["ok"] * len(rows), pa.string()),
-            "tool": pa.array([None] * len(rows), pa.string()),
-            "ts": pa.array(ts, pa.timestamp("us")),
-        }), path)
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
+    slices[2].append(turn(1, base_us + 12_000_000))
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices)
 
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=1, with_lineage=False
@@ -1638,9 +1565,6 @@ def test_reply_join_resume_pairs_straddle_kill(spark, tmp_path):
     and the range bound (a reply outside REPLY_WINDOW never pairs)."""
     import time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from stellar_etl_spark.streaming import parity
     from stellar_etl_spark.streaming.replies import reply_join_stream, reply_pairs
 
@@ -1656,24 +1580,7 @@ def test_reply_join_resume_pairs_straddle_kill(spark, tmp_path):
         # 2h reply window
         [turn("c1", 1, "assistant", 10), turn("c1", 3, "assistant", 7300)],
     ]
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    t0 = time.time() - 2.0 * (len(slices) + 1)
-    for i, rows in enumerate(slices):
-        cols = list(zip(*rows))
-        path = os.path.join(src_dir, f"slice-{i:05d}.parquet")
-        pq.write_table(pa.table(dict(zip(schema.names, cols)), schema=schema), path)
-        os.utime(path, (t0 + 2.0 * i, t0 + 2.0 * i))
+    src_dir = parity.write_pinned(str(tmp_path / "src"), slices)
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -1751,11 +1658,7 @@ def test_ngram_lm_resume_absorbs_replayed_epochs(spark, tmp_path):
         )
 
     def start(available_now):
-        stream = (
-            spark.readStream.schema(parity.DOC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        stream = parity.doc_stream(spark, src_dir, 1)
         w = (
             stream.writeStream.queryName("lm_resume")
             .outputMode("append")
