@@ -244,6 +244,40 @@ def _dq_violations_table(df: DataFrame) -> DataFrame:
     return dq_violations(df)
 
 
+# Row-local transcript tables: each output row is computed from its own
+# input row, so one micro-batch's rows are the batch table's rows for
+# that batch's input, and under --stream these tables share the one
+# fan-out query. Every other table streams only through a stateful
+# form in _windowed_builders, or not at all.
+STREAM_ROW_LOCAL = frozenset({
+    "turns", "fact_tool_events", "tool_event_details",
+    "successful_tool_calls", "derived_events", "explode_tokens",
+})
+
+
+def _windowed_builders(cfg: EngineConfig):
+    """The streaming forms of the watermarked / stateful tables: each
+    runs as its own stateful query (a per-batch transform would break
+    its cross-batch semantics)."""
+    from stellar_etl_spark.operators import rollups, sessions
+    from stellar_etl_spark.streaming.matcher import match_pairs_stream
+
+    return {
+        "sessions": lambda s: sessions.sessionize(s, cfg, watermark=True),
+        "tool_rate": lambda s: rollups.tool_rate(
+            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+        "role_rate": lambda s: rollups.role_rate(
+            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+        "tool_rate_sliding": lambda s: rollups.tool_rate_sliding(
+            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+        "pairs": lambda s: match_pairs_stream(s, cfg),
+        # native chained time-window aggregation (two stateful
+        # aggs, one watermark finalizes both)
+        "tool_rate_peak": lambda s: rollups.tool_rate_peak(
+            s.withWatermark("ts", cfg.watermark_delay), cfg),
+    }
+
+
 def _apply_range(df: DataFrame, args, streaming: bool = False) -> DataFrame:
     """Event-time range restriction — applied identically to batch and
     streaming inputs (a pushed-down ts predicate; in streaming it rides
@@ -401,41 +435,19 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         # defined output — skip it in the fan-out rather than failing
         selected = {n: f for n, f in selected.items() if n != "closed_sessions"}
 
-    # global (non-incremental) aggregates: running them per micro-batch
-    # in the fan-out would silently change their semantics to per-batch,
-    # so stream mode rejects (explicit table) or skips (export-all) them
-    batch_only = {"latency_quantiles", "conv_retention", "tool_transitions",
-                  "conv_documents", "conv_doc_dedup",
-                  # per-micro-batch islands would split consecutive runs
-                  # at batch boundaries; the real streaming form is
-                  # streaming/bursts.py (stateful, watermark-finalized)
-                  "error_bursts",
-                  # both need whole-input stats (population z / corpus N)
-                  "tool_lift", "latency_outliers",
-                  # dup/gap checks need cross-batch visibility; the
-                  # real streaming form is streaming/dq.py (stateful,
-                  # watermark-finalized)
-                  "dq_violations",
-                  # needs the whole session-interval set on both sides
-                  "burst_concurrency",
-                  # iterative whole-graph fixpoint
-                  "tool_pagerank",
-                  # window functions over full conversation history /
-                  # global orderings — per-batch forms would silently
-                  # change semantics
-                  "asof_last_tool", "initiating_user", "top_convs",
-                  "conv_funnel", "transform_stats",
-                  # global dedup / sketch / salted two-phase aggregates:
-                  # their real streaming forms are the stateful queries
-                  # in streaming/ (snapshot, parity drains), not a
-                  # per-batch re-run
-                  "dim_tools", "conv_turns_cms",
-                  "salted_tool_rate", "closed_sessions"}
     if args.stream:
-        if args.table in batch_only:
+        # a table streams only in a form whose micro-batches add up to
+        # its batch output; every other table (a per-key aggregate, a
+        # conversation window, a global aggregate) would silently emit
+        # per-micro-batch results, so stream mode refuses it (explicit
+        # table) or skips it (export-all)
+        windowed_builders = _windowed_builders(cfg)
+        streamable = STREAM_ROW_LOCAL | windowed_builders.keys()
+        if args.table != "all" and args.table not in streamable:
             raise SystemExit(f"--stream not supported for {args.table} "
-                             "(global aggregate; run it in batch mode)")
-        selected = {n: f for n, f in selected.items() if n not in batch_only}
+                             "(not row-local and no streaming form; run it "
+                             "in batch mode)")
+        selected = {n: f for n, f in selected.items() if n in streamable}
 
     own_session = spark is None
     if own_session:
@@ -450,8 +462,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.stream:
             if not args.checkpoint:
                 raise SystemExit("--checkpoint is required with --stream")
-            from stellar_etl_spark.operators import rollups, sessions
-            from stellar_etl_spark.streaming.matcher import match_pairs_stream
             from stellar_etl_spark.streaming.pipeline import start_fanout
             from stellar_etl_spark.streaming.source import read_transcript_stream
 
@@ -465,23 +475,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 )
 
             # row-local tables share ONE fan-out query/checkpoint (all-or-
-            # nothing per epoch); watermarked/stateful tables each need
-            # their own stateful query (per-batch transforms would break
-            # their cross-batch semantics): a fan-out of one table
-            windowed_builders = {
-                "sessions": lambda s: sessions.sessionize(s, cfg, watermark=True),
-                "tool_rate": lambda s: rollups.tool_rate(
-                    s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
-                "role_rate": lambda s: rollups.role_rate(
-                    s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
-                "tool_rate_sliding": lambda s: rollups.tool_rate_sliding(
-                    s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
-                "pairs": lambda s: match_pairs_stream(s, cfg),
-                # native chained time-window aggregation (two stateful
-                # aggs, one watermark finalizes both)
-                "tool_rate_peak": lambda s: rollups.tool_rate_peak(
-                    s.withWatermark("ts", cfg.watermark_delay), cfg),
-            }
+            # nothing per epoch); each windowed table is its own stateful
+            # query: a fan-out of one table
             queries = []
             fanout = {n: f for n, f in selected.items() if n not in windowed_builders}
             if fanout:

@@ -912,18 +912,25 @@ def streamed_tool_transitions(
             .filter(F.col("tool").isNotNull())
         )
 
-    def _partial(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy("prev_tool", "tool").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-
     sink = _drain(
         detected, "trans",
-        lambda sink: foreach_batch_writer(sink, {TRANS_TABLE: _partial}),
+        lambda sink: foreach_batch_writer(sink, {TRANS_TABLE: transitions_partial}),
+    )
+    return fold_transitions_sink(spark, sink.root)
+
+
+def transitions_partial(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch's detected bigrams as SUM partials."""
+    return batch_df.groupBy("prev_tool", "tool").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
     )
 
+
+def fold_transitions_sink(spark: SparkSession, sink_root: str) -> DataFrame:
+    """SUM-merge the committed per-epoch partials into the batch
+    tool_transitions counts."""
     return (
-        sink.read_table(spark, TRANS_TABLE)
+        EpochCommitSink(sink_root).read_table(spark, TRANS_TABLE)
         .groupBy("prev_tool", "tool")
         .agg(F.sum("n").cast("long").alias("n_transitions"))
     )
@@ -1031,6 +1038,17 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent epoch commit alone (replayed epochs are skipped), which
     the kill/resume suite proves for this sink; there is no operator
     state to reconstruct."""
+    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
+    sink = _drain(
+        bm25_index_rows(stream), "bm25",
+        lambda sink: foreach_batch_writer(sink, BM25_TRANSFORMS),
+    )
+    return fold_bm25_sink(spark, sink.root)
+
+
+def bm25_index_rows(stream: DataFrame) -> DataFrame:
+    """Per document, one (doc_id, dl, query_id, token, tf) row for each
+    query term, tf counted inside the row."""
     from stellar_etl_spark.functions import hashing as H
     from stellar_etl_spark.functions import retrieval as fret
 
@@ -1039,42 +1057,35 @@ def streamed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         for qid, q in fret.BM25_QUERIES
         for t in sorted(set(q.lower().split()))
     )
-    tok = H.tokens("text", spark=True)
-
-    def index_rows(stream: DataFrame) -> DataFrame:
-        toks = stream.select(
-            "doc_id",
-            F.expr(tok).alias("toks"),
-        ).withColumn("dl", F.size("toks").cast("long"))
-        return (
-            toks.select(
-                "doc_id", "dl", "toks",
-                F.explode(F.expr(f"array({qstructs})")).alias("q"),
-            )
-            .withColumn(
-                "tf",
-                F.expr("CAST(size(filter(toks, x -> x = q.token)) AS LONG)"),
-            )
-            .select(
-                "doc_id", "dl",
-                F.col("q.query_id").alias("query_id"),
-                F.col("q.token").alias("token"),
-                "tf",
-            )
+    toks = stream.select(
+        "doc_id",
+        F.expr(H.tokens("text", spark=True)).alias("toks"),
+    ).withColumn("dl", F.size("toks").cast("long"))
+    return (
+        toks.select(
+            "doc_id", "dl", "toks",
+            F.explode(F.expr(f"array({qstructs})")).alias("q"),
         )
-
-    transforms = {
-        BM25_DL_TABLE: lambda df: df.select("doc_id", "dl").distinct(),
-        BM25_TF_TABLE: lambda df: df.filter(F.col("tf") > 0).select(
-            "query_id", "token", "doc_id", "dl", "tf"
-        ),
-    }
-    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
-    sink = _drain(
-        index_rows(stream), "bm25",
-        lambda sink: foreach_batch_writer(sink, transforms),
+        .withColumn(
+            "tf",
+            F.expr("CAST(size(filter(toks, x -> x = q.token)) AS LONG)"),
+        )
+        .select(
+            "doc_id", "dl",
+            F.col("q.query_id").alias("query_id"),
+            F.col("q.token").alias("token"),
+            "tf",
+        )
     )
-    return fold_bm25_sink(spark, sink.root)
+
+
+# the two index tables, as a fan-out of bm25_index_rows' micro-batches
+BM25_TRANSFORMS = {
+    BM25_DL_TABLE: lambda df: df.select("doc_id", "dl").distinct(),
+    BM25_TF_TABLE: lambda df: df.filter(F.col("tf") > 0).select(
+        "query_id", "token", "doc_id", "dl", "tf"
+    ),
+}
 
 
 def fold_bm25_sink(spark: SparkSession, sink_root: str) -> DataFrame:
@@ -1117,27 +1128,30 @@ def streamed_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateless append streaming: exactly-once comes from the sink's
     idempotent epoch commit alone (replayed epochs are skipped) — no
     operator state, no watermark."""
+    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
+    return fold_lm_sink(spark, _drain(stream, "ngram_lm", lm_writer).root)
+
+
+def lm_writer(sink: EpochCommitSink) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch function of the LM index stream: one micro-batch
+    of documents -> its four lm_parts tables, committed as one epoch.
+    lm_parts stages the batch once (an eager local checkpoint), so all
+    four tables come from one call rather than one per table."""
     from stellar_etl_spark.functions import scoring as fscore
 
-    def writer(sink: EpochCommitSink) -> Callable[[DataFrame, int], None]:
-        # lm_parts stages the batch once (an eager local checkpoint), so
-        # all four tables come from one call rather than one per table
-        def _write(batch_df: DataFrame, epoch_id: int) -> None:
-            parts = fscore.lm_parts(batch_df)
-            sink.write_epoch(
-                epoch_id,
-                {
-                    LM_DOCS_TABLE: parts["docs"],
-                    LM_OCC_TABLE: parts["occ"],
-                    LM_UNI_TABLE: parts["uni"],
-                    LM_BIG_TABLE: parts["big"],
-                },
-            )
+    def _write(batch_df: DataFrame, epoch_id: int) -> None:
+        parts = fscore.lm_parts(batch_df)
+        sink.write_epoch(
+            epoch_id,
+            {
+                LM_DOCS_TABLE: parts["docs"],
+                LM_OCC_TABLE: parts["occ"],
+                LM_UNI_TABLE: parts["uni"],
+                LM_BIG_TABLE: parts["big"],
+            },
+        )
 
-        return _write
-
-    stream = doc_stream(spark, _doc_slice_dir(spark, sf_dir), 2)
-    return fold_lm_sink(spark, _drain(stream, "ngram_lm", writer).root)
+    return _write
 
 
 def fold_lm_sink(spark: SparkSession, sink_root: str) -> DataFrame:

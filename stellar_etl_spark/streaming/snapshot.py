@@ -16,19 +16,21 @@ seen-maps, orderbooks.go:26-33).
 Key retirement: the default agg form keeps state for every key ever
 seen — fine when key cardinality is the dimension table, the
 reference's unbounded-seen-map anti-pattern when keys are
-conversations at 10^9 scale. ``start_snapshot_stream(..., ttl_s=N)``
-switches to the TTL form (``applyInPandasWithState`` +
-EventTimeTimeout): a key idle for ttl_s of EVENT time after its last
-change emits a tombstone delta (``retired=true``) and leaves the state
-store — session-scoped eviction, the session-gap analog of closing a
-ledger. State is then bounded by the number of keys ACTIVE within one
-TTL window, not keys ever seen. ``read_final_snapshot`` folds
+conversations at 10^9 scale. ``snapshot_ttl(df, cfg, ttl_s)`` is the
+TTL form (``applyInPandasWithState`` + EventTimeTimeout): a key idle
+for ttl_s of EVENT time after its last change emits a tombstone delta
+(``retired=true``) and leaves the state store — session-scoped
+eviction, the session-gap analog of closing a ledger. State is then
+bounded by the number of keys ACTIVE within one TTL window, not keys
+ever seen. ``read_final_snapshot`` folds
 tombstones like any delta: a retired key vanishes from the snapshot
 unless it re-appeared later (which recreates it fresh, n_changes
 restarting — exactly a new session).
 
-The epoch-stamped deltas land in the EpochCommitSink exactly-once;
-``read_final_snapshot`` folds them back (latest epoch wins per key),
+Either form runs as an update-mode query (``pipeline.start_query``)
+whose deltas, stamped with their epoch by
+``sink.epoch_stamped_writer``, land in the EpochCommitSink
+exactly-once; ``read_final_snapshot`` folds them back (latest epoch wins per key),
 and tests prove the folded result equals the batch operator
 ``operators/state.compact_last_state`` on the drained input — the
 snapshot==compaction determinism gate.
@@ -38,11 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from stellar_etl_spark.config import DEFAULT, EngineConfig
-from stellar_etl_spark.streaming.pipeline import start_query
-from stellar_etl_spark.streaming.sink import EpochCommitSink, epoch_stamped_writer
+from stellar_etl_spark.config import EngineConfig
+from stellar_etl_spark.streaming.sink import EpochCommitSink
 from stellar_etl_spark.streaming.source import epoch_us
 
 SNAPSHOT_TABLE = "snapshot"
@@ -163,28 +163,6 @@ def snapshot_ttl(df: DataFrame, cfg: EngineConfig, ttl_s: int) -> DataFrame:
             "update",
             GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def start_snapshot_stream(
-    stream: DataFrame,
-    sink_root: str,
-    checkpoint: str,
-    cfg: EngineConfig = DEFAULT,
-    available_now: bool = True,
-    query_name: str = "snapshot",
-    ttl_s: int | None = None,
-) -> StreamingQuery:
-    """Start the update-mode snapshot query: each micro-batch commits
-    the changed-key snapshot rows (stamped with their epoch) through
-    the exactly-once epoch protocol. ttl_s switches to the
-    key-retiring stateful form (see module docstring)."""
-    src = stream.drop("_source_file")
-    snap = snapshot_ttl(src, cfg, ttl_s) if ttl_s else snapshot_agg(src)
-    writer = epoch_stamped_writer(EpochCommitSink(sink_root), SNAPSHOT_TABLE)
-    return start_query(
-        snap, writer, checkpoint, query_name,
-        output_mode="update", available_now=available_now,
     )
 
 

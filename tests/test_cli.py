@@ -281,16 +281,63 @@ def test_cli_journeys_tables_export(spark, small_input, tmp_path):
         assert spark.read.parquet(f"{out}/{table}").count() > 0
 
 
+# The tables --stream may export: the row-local ones share the fan-out
+# query, the windowed ones run their own stateful query. Pinned here,
+# not read from the CLI, so that a change to its allowlist fails a test.
+STREAM_ROW_LOCAL = ("turns", "fact_tool_events", "tool_event_details",
+                    "successful_tool_calls", "derived_events", "explode_tokens")
+STREAM_WINDOWED = ("sessions", "tool_rate", "role_rate", "tool_rate_sliding",
+                   "pairs", "tool_rate_peak")
+
+
 def test_cli_stream_rejects_global_aggregates(spark, small_input, tmp_path):
-    """Global (non-incremental) aggregate tables are batch-only: an
-    explicit --stream export must refuse rather than silently emit
+    """Every transcript table that is neither row-local nor windowed
+    (global aggregates, per-key aggregates, conversation windows) is
+    refused under an explicit --stream rather than silently emitting
     per-micro-batch semantics."""
-    with pytest.raises(SystemExit):
-        cli.main(
-            ["export-latency-quantiles", "--stream", "--input", small_input,
-             "--out", str(tmp_path / "s"), "--checkpoint", str(tmp_path / "c")],
-            spark=spark,
-        )
+    refused = sorted(set(cli._tables(EngineConfig()))
+                     - set(STREAM_ROW_LOCAL) - set(STREAM_WINDOWED))
+    assert {"latency_quantiles", "last_state", "exchanges"} <= set(refused)
+    for table in refused:
+        with pytest.raises(SystemExit, match="--stream not supported"):
+            cli.main(
+                [f"export-{table.replace('_', '-')}", "--stream",
+                 "--input", small_input, "--out", str(tmp_path / "s"),
+                 "--checkpoint", str(tmp_path / "c")],
+                spark=spark,
+            )
+            pytest.fail(f"--stream accepted for {table}")
+
+
+@pytest.mark.parametrize("table", STREAM_ROW_LOCAL)
+def test_cli_stream_row_local_equals_batch(spark, tmp_path, table):
+    """A row-local table streamed one file per micro-batch equals its
+    batch export. The input is the driver-derived transcripts in four
+    files: unlike the generator's, they carry successful tool calls."""
+    from pyspark.sql import functions as F
+
+    from stellar_etl_spark.sources.transcripts import load_transcripts
+    from tests.conftest import SF_UNIT
+
+    src = str(tmp_path / "in")
+    (load_transcripts(spark, SF_UNIT)
+     .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+     .repartition(4).write.parquet(src))
+    cmd = [f"export-{table.replace('_', '-')}", "--input", src]
+    assert cli.main(cmd + ["--out", str(tmp_path / "b")], spark=spark) == 0
+    assert cli.main(
+        cmd + ["--stream", "--out", str(tmp_path / "s"),
+               "--checkpoint", str(tmp_path / "c"), "--files-per-trigger", "1"],
+        spark=spark,
+    ) == 0
+    sink = EpochCommitSink(str(tmp_path / "s"))
+    assert len(sink.committed_epochs()) == 4  # one epoch per input file
+    got = sink.read_table(spark, table)
+    exp = spark.read.parquet(str(tmp_path / "b" / table))
+    assert sorted(got.columns) == sorted(exp.columns)
+    exp = exp.select(*got.columns)
+    assert got.count() == exp.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 
 def test_cli_emb_table_exports(spark, tmp_path):

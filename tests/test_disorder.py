@@ -13,17 +13,15 @@ kill/resume mid-disorder.
 
 from __future__ import annotations
 
-import os
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from stellar_etl_spark.config import EngineConfig
 from stellar_etl_spark.streaming import parity
+from stellar_etl_spark.streaming.pipeline import start_query
+from stellar_etl_spark.streaming.sink import EpochCommitSink, foreach_batch_writer
+from stellar_etl_spark.streaming.source import read_transcript_stream
 
-from tests.conftest import SF_UNIT
-from tests.test_streaming import _hard_kill, _rows
+from tests.conftest import SF_UNIT, _rows, kill_resume
 
 
 def test_matcher_disorder_reversed_equals_batch(spark):
@@ -134,46 +132,24 @@ def test_matcher_disorder_kill_resume(spark, tmp_path):
     from stellar_etl_spark.operators.pairs import match_pairs
     from stellar_etl_spark.sources.transcripts import load_transcripts
     from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
-    from stellar_etl_spark.streaming.source import read_transcript_stream
 
     ship_package(spark)
-    src_dir = parity.disorder_dir(spark, SF_UNIT, "reverse")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    stream = read_transcript_stream(
+        spark, parity.disorder_dir(spark, SF_UNIT, "reverse"),
+        max_files_per_trigger=1, with_lineage=False,
+    )
+    sink = EpochCommitSink(str(tmp_path / "sink"))
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
+    at_kill, after = kill_resume(
+        match_pairs_stream_ooo(stream, cfg),
+        foreach_batch_writer(sink, {"pairs": lambda df: df}),
+        sink, str(tmp_path / "ckpt"), "ooo_resume",
+    )
+    assert after > at_kill
 
-    def start(available_now):
-        stream = read_transcript_stream(
-            spark, src_dir, max_files_per_trigger=1, with_lineage=False
-        )
-        w = (
-            match_pairs_stream_ooo(stream, cfg)
-            .writeStream.queryName("ooo_resume")
-            .outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-        )
-        w = (
-            w.trigger(availableNow=True)
-            if available_now
-            else w.trigger(processingTime="1 second")
-        )
-        return w.start()
-
-    commits = os.path.join(ckpt, "commits")
-    q1 = start(available_now=False)
-    while (
-        not os.path.isdir(commits)
-        or len([f for f in os.listdir(commits) if not f.startswith(".")]) < 2
-    ):
-        time.sleep(0.2)
-    _hard_kill(q1)
-
-    q2 = start(available_now=True)
-    assert q2.awaitTermination(540), "resumed disorder matcher did not finish"
-
-    got = spark.read.parquet(out).filter(F.col("conv_id") != parity.CLOSER_CONV)
+    got = sink.read_table(spark, "pairs").filter(
+        F.col("conv_id") != parity.CLOSER_CONV
+    )
     exp = match_pairs(load_transcripts(spark, SF_UNIT), EngineConfig())
     cols = [
         "conv_id", "user_turn_idx", "response_turn_idx",
@@ -197,7 +173,6 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     batch matcher on the same rows."""
     from stellar_etl_spark.operators.pairs import match_pairs
     from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
-    from stellar_etl_spark.streaming.source import read_transcript_stream
 
     base_us = 1_700_000_000 * 1_000_000
 
@@ -217,23 +192,18 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     ]
     src_dir = parity.write_pinned(str(tmp_path / "src"), slices)
 
-    out = str(tmp_path / "out")
     stream = read_transcript_stream(
         spark, src_dir, max_files_per_trigger=1, with_lineage=False
     )
-    q = (
-        match_pairs_stream_ooo(stream, EngineConfig(watermark_delay="5 minutes"))
-        .writeStream.queryName("ooo_monotonicity")
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    q = start_query(
+        match_pairs_stream_ooo(stream, EngineConfig(watermark_delay="5 minutes")),
+        foreach_batch_writer(sink, {"pairs": lambda df: df}),
+        str(tmp_path / "ckpt"), "ooo_monotonicity",
     )
     assert q.awaitTermination(540), "monotonicity-violation drain did not finish"
 
-    got = spark.read.parquet(out).filter(F.col("conv_id") == "m")
+    got = sink.read_table(spark, "pairs").filter(F.col("conv_id") == "m")
     batch_in = spark.read.parquet(src_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     ).filter(F.col("conv_id") == "m")
