@@ -32,10 +32,17 @@ TURN_MASK = (1 << TURN_BITS) - 1
 CONV_BITS = 43  # keeps turn_id positive in a signed int64
 
 
+# a conv_id that conv_num_from_suffix maps to a number: non-digits,
+# then digits to the end
+NUMERIC_SUFFIX = "^[^0-9]*[0-9]+$"
+
+
 def conv_num_from_suffix(conv_id: Column | str) -> Column:
-    """conv_id 'c<digits>' -> <digits> as bigint (SQL-portable)."""
+    """conv_id 'c<digits>' -> <digits> as bigint (SQL-portable); NULL
+    for an id without a numeric suffix (``NUMERIC_SUFFIX``), so one
+    such row does not fail an ANSI cast for its whole batch."""
     c = F.col(conv_id) if isinstance(conv_id, str) else conv_id
-    return F.regexp_replace(c, "^[^0-9]*", "").cast("long")
+    return F.regexp_replace(c, "^[^0-9]*", "").try_cast("long")
 
 
 def conv_num_hashed(conv_id: Column | str) -> Column:

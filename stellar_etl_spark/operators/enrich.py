@@ -40,12 +40,14 @@ def _validate_turn(
     """
     err = pd.Series([None] * len(conv_id), dtype=object)
     bad_conv = conv_id.isna() | (conv_id.astype(str).str.len() == 0)
+    bad_suffix = ~conv_id.str.contains(ids.NUMERIC_SUFFIX, na=False)
     bad_idx = turn_idx.isna() | (turn_idx < 0)
     bad_role = ~role.isin(VALID_ROLES)
     bad_ts = ~ts_ok.astype(bool)
     err[bad_ts] = "null ts"
     err[bad_role.fillna(True)] = "invalid role"
     err[bad_idx.fillna(True)] = "negative or null turn_idx"
+    err[bad_suffix] = "conv_id has no numeric suffix"
     err[bad_conv] = "empty conv_id"
     return err
 
@@ -53,13 +55,15 @@ def _validate_turn(
 def _validate_turn_jvm() -> F.Column:
     """The same guards as a pure F.when chain — whole-stage codegen,
     no Arrow round-trip. Identical precedence to the pandas UDF
-    (conv > idx > role > ts: the UDF assigns in reverse order so
-    earlier guards overwrite later ones)."""
+    (conv > suffix > idx > role > ts: the UDF assigns in reverse order
+    so earlier guards overwrite later ones)."""
     role = F.col("role")
     return (
         F.when(
             F.col("conv_id").isNull() | (F.length("conv_id") == 0), "empty conv_id"
         )
+        .when(~F.col("conv_id").rlike(ids.NUMERIC_SUFFIX),
+              "conv_id has no numeric suffix")
         .when(
             F.col("turn_idx").isNull() | (F.col("turn_idx") < 0),
             "negative or null turn_idx",

@@ -52,13 +52,17 @@ CONV_BITS = 63 - CONV_SHIFT  # 31 usable bits; keeps exchange_id positive
 def _range_checked(col: Column, bits: int, name: str) -> Column:
     """Range guard for one packed field — the Column form of
     ids.pack_py's ValueError (toid/main.go silently truncates; we
-    fail loudly, SURVEY §1.3)."""
+    fail loudly, SURVEY §1.3). A NULL field fails too (a conv_id
+    without a numeric suffix has no conv_num)."""
     ok = (col >= 0) & (col < (1 << bits))
     return F.when(ok, col).otherwise(
         F.raise_error(
-            F.concat(
-                F.lit(f"{name} exceeds {bits}-bit field capacity: "),
-                col.cast("string"),
+            F.coalesce(
+                F.concat(
+                    F.lit(f"{name} exceeds {bits}-bit field capacity: "),
+                    col.cast("string"),
+                ),
+                F.lit(f"{name} is NULL"),
             )
         )
     )

@@ -52,6 +52,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
+# Hadoop's committer writes a `_SUCCESS` marker (plus its `.crc`) per
+# job; the manifest rename is this sink's commit point and nothing reads
+# the marker, so the sink's writes turn it off.
+_SUCCESS_MARKER = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+
 class EpochCommitSink:
     def __init__(self, root: str):
         self.root = root
@@ -122,7 +128,7 @@ class EpochCommitSink:
         }
         for name, df in tables.items():
             path = os.path.join(self.root, "data", name, f"epoch={epoch_id}")
-            df.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").option(_SUCCESS_MARKER, "false").parquet(path)
             parts = _footer_rows(path)
             manifest["tables"][name] = {
                 "path": path,
@@ -206,6 +212,7 @@ class EpochCommitSink:
                 spark.read.parquet(*parts)
                 .coalesce(max(1, target_files))
                 .write.mode("overwrite")
+                .option(_SUCCESS_MARKER, "false")
                 .parquet(dst)
             )
             snap["tables"][name] = {"path": dst}

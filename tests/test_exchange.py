@@ -77,3 +77,21 @@ def test_exchange_id_range_guard(spark):
     )
     with pytest.raises(Exception, match="capacity"):
         exchanges(df).collect()
+
+
+def test_exchange_id_fails_on_conv_id_without_numeric_suffix(spark):
+    """enrich_turns quarantines a digit-free conv_id with a NULL
+    turn_id; exchanges, whose exchange_id has no NULL slot, still fails
+    the batch, naming the field."""
+    import pytest
+
+    rows = [
+        ("c9", 0, "user", "user||c9|0|view|1", None, _t(0)),
+        ("__closer__", 0, "user", "user||x|0|view|1", None, _t(0)),
+        ("__closer__", 1, "tool", "tool|tool_1|x|1|purchase|2", "tool_1", _t(1)),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    with pytest.raises(Exception, match="conv_num is NULL"):
+        exchanges(df).collect()

@@ -14,11 +14,13 @@ import os
 import re
 import shutil
 import time
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from stellar_etl_spark import session
 from stellar_etl_spark.config import EngineConfig
 from stellar_etl_spark.operators import pairs as batch_pairs
 from stellar_etl_spark.operators import rollups, sessions
@@ -263,6 +265,46 @@ def test_multi_table_fanout_lineage(spark, data_dir, tmp_path):
             assert sum(t["partitions"].values()) == t["rows"]
 
 
+@pytest.mark.parametrize("validator", ["jvm", "pandas"])
+def test_enrich_turns_quarantines_conv_id_without_numeric_suffix(
+        spark, tmp_path, validator):
+    """A conv_id without a numeric suffix (the closer sentinels' among
+    them) gets a NULL turn_id and its own quarantine error, in batch
+    and in a stream, instead of failing its whole micro-batch on an
+    ANSI cast. Both validators rank it right after an empty conv_id."""
+    from stellar_etl_spark.operators.enrich import enrich_turns
+    from stellar_etl_spark.streaming import parity
+
+    t0 = 1_767_225_600_000_000  # 2026-01-01 in epoch µs
+    slices = [
+        [("c3", 0, "user", "hi there", None, t0),
+         ("x-7-a", -1, "user", "no suffix", None, t0 + 1)],
+        [("c3", 1, "assistant", "hello", None, t0 + 2),
+         ("", 0, "user", "empty id", None, t0 + 3)],
+    ]
+    src = parity.write_pinned(str(tmp_path / "src"), slices, t0 + 3)
+    cfg = EngineConfig(validator=validator)
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    q = start_fanout(_pinned_stream(spark, src), sink.root, str(tmp_path / "ckpt"),
+                     {"turns": lambda df: enrich_turns(df, cfg)},
+                     query_name="t_no_suffix")
+    assert q.awaitTermination(540), "stream did not finish within 540s"
+
+    batch = enrich_turns(read_transcript_batch(spark, src), cfg)
+    got = sink.read_table(spark, "turns")
+    assert _rows(got) == _rows(batch)
+    errors = {(r.conv_id, r.turn_idx): (r.turn_id, r.error) for r in got.collect()}
+    no_suffix = "conv_id has no numeric suffix"
+    assert errors == {
+        ("c3", 0): (3 << 20, None),
+        ("c3", 1): ((3 << 20) + 1, None),
+        ("x-7-a", -1): (None, no_suffix),
+        ("", 0): (None, "empty conv_id"),
+        (parity.CLOSER_CONV, 0): (None, no_suffix),
+        (parity.CLOSER_CONV, 1): (None, no_suffix),
+    }
+
+
 def _land(files, watched, staging):
     """Land `files` in the watched dir whole: copy to staging, then
     rename."""
@@ -336,6 +378,21 @@ def test_sink_idempotent_epoch(spark, tmp_path):
     assert sink.write_epoch(7, {"t": df}) is True
     assert sink.write_epoch(7, {"t": spark.range(500).toDF("x")}) is False  # replay: no-op
     assert sink.read_table(spark, "t").count() == 5
+
+
+def test_sink_writes_no_success_marker(spark, tmp_path):
+    """The manifest rename is the sink's commit point, so its writes
+    leave no `_SUCCESS` marker: a committed epoch dir and a compaction
+    snapshot hold only part files and their .crc files."""
+    sink = EpochCommitSink(str(tmp_path / "s"))
+    for e in (0, 1):
+        assert sink.write_epoch(e, {"t": spark.range(5).toDF("x")}) is True
+    snap = sink.compact(spark)
+    dirs = [os.path.join(sink.root, "data", "t", f"epoch={e}") for e in (0, 1)]
+    for d in dirs + [snap["tables"]["t"]["path"]]:
+        names = os.listdir(d)
+        assert any(f.startswith("part-") for f in names), names
+        assert all(re.fullmatch(r"\.?part-.+\.parquet(\.crc)?", f) for f in names), names
 
 
 def test_sink_replay_evaluates_one_table(spark, tmp_path):
@@ -496,6 +553,66 @@ def test_resume_keeps_checkpoint_state_width(spark, data_dir, tmp_path):
     assert len(expected) > 0
 
 
+def test_checkpoint_manager_follows_master():
+    """A local master checkpoints through Hadoop's FileSystem API; any
+    other master gets no setting, so Spark's default stands."""
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        assert session.checkpoint_manager(master) == session.FS_CHECKPOINT_MANAGER
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:6443",
+                   "local-cluster[2,1,1024]"):
+        assert session.checkpoint_manager(master) is None
+
+
+def test_sessions_resume_across_checkpoint_manager_change(spark, data_dir, tmp_path):
+    """A stateful sessionize fan-out whose checkpoint (offsets, commits,
+    source log, state deltas) was written through Spark's
+    FileContext-based manager, hard-killed mid-input, resumes under the
+    local default, the FileSystem-based manager: the sink equals batch
+    sessionize for the closed sessions. The test session (a local
+    master) reports that default, and `extra_conf` overrides it."""
+    key = session.CHECKPOINT_MANAGER_CONF
+    file_context = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                    "FileContextBasedCheckpointFileManager")
+    cfg = EngineConfig(master=spark.sparkContext.master, shuffle_partitions=8)
+    assert spark.conf.get(key) == session.FS_CHECKPOINT_MANAGER
+
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    ckpt = str(tmp_path / "ckpt")
+    stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=1,
+                                    with_lineage=False)
+
+    def start(available_now):
+        return start_fanout(sessions.sessionize(stream, CFG, watermark=True),
+                            sink.root, ckpt, {"sessions": _identity},
+                            available_now=available_now, query_name="t_ckpt_manager")
+
+    try:
+        overridden = replace(cfg, extra_conf={key: file_context})
+        assert session.get_spark(overridden, app_name="pytest") is spark
+        assert spark.conf.get(key) == file_context
+        q = start(available_now=False)
+        while len(sink.committed_epochs()) < 2:
+            assert q.isActive, f"died before its kill: {q.exception()}"
+            time.sleep(0.05)
+        _hard_kill(q)
+    finally:
+        assert session.get_spark(cfg, app_name="pytest") is spark
+    assert spark.conf.get(key) == session.FS_CHECKPOINT_MANAGER
+    at_kill = len(sink.committed_epochs())
+
+    q = start(available_now=True)
+    assert q.awaitTermination(540), "resumed stream did not finish within 540s"
+    assert len(sink.committed_epochs()) > at_kill
+
+    cols = ["conv_id", "session_start", "session_end", "turn_count",
+            "user_turns", "assistant_turns", "tool_turns"]
+    wm = _final_watermark(spark, data_dir)
+    batch = sessions.sessionize(read_transcript_batch(spark, data_dir), CFG)
+    expected = [r for r in _rows(batch, cols) if r[2] <= wm]
+    assert _rows(sink.read_table(spark, "sessions"), cols) == expected
+    assert len(expected) > 0
+
+
 def _start_snapshot(snap, tmp_path, name, available_now=True):
     """Start the update-mode snapshot query `snap` (snapshot_agg or
     snapshot_ttl) into an epoch sink at tmp_path/sink."""
@@ -630,7 +747,7 @@ def test_dedup_stream_kill_resume_equals_batch(spark, tmp_path):
     from stellar_etl_spark.streaming import parity
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
-    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT), 1)
+    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT, n_files=8), 1)
     at_kill, after = kill_resume(
         parity.dedup_stream_agg(stream),
         epoch_stamped_writer(sink, parity.DEDUP_TABLE),
@@ -741,7 +858,10 @@ def test_replayed_committed_epoch_recommits_state(spark, tmp_path):
     )
     os.remove(os.path.join(commits_dir, entries[-1]))
     crc = os.path.join(commits_dir, f".{entries[-1]}.crc")
-    if os.path.exists(crc):  # ChecksumFs would refuse the re-write rename
+    # a stale .crc would make Spark's FileContext-based checkpoint
+    # manager (ChecksumFs) refuse the replayed batch's commit rename; the
+    # FileSystem-based one that local sessions use renames over it
+    if os.path.exists(crc):
         os.remove(crc)
 
     q2 = _start_snapshot(snap, tmp_path, "ttl_replay")
@@ -1041,7 +1161,7 @@ def test_minhash_resume_preserves_bucket_state(spark, tmp_path):
     from stellar_etl_spark.streaming.lshstate import minhash_bucket_stream
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
-    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT), 1)
+    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT, n_files=8), 1)
     at_kill, after = kill_resume(
         minhash_bucket_stream(stream),
         epoch_stamped_writer(sink, parity.MINHASH_BUCKET_TABLE),
@@ -1067,7 +1187,7 @@ def test_bm25_resume_absorbs_replayed_index_epochs(spark, tmp_path):
     from stellar_etl_spark.streaming import parity
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
-    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT), 1)
+    stream = parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT, n_files=8), 1)
     at_kill, after = kill_resume(
         parity.bm25_index_rows(stream),
         foreach_batch_writer(sink, parity.BM25_TRANSFORMS),
@@ -1324,7 +1444,7 @@ def test_ngram_lm_resume_absorbs_replayed_epochs(spark, tmp_path):
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
     at_kill, after = kill_resume(
-        parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT), 1),
+        parity.doc_stream(spark, parity._doc_slice_dir(spark, SF_UNIT, n_files=8), 1),
         parity.lm_writer(sink), sink, str(tmp_path / "ckpt"), "lm_resume",
     )
     assert after > at_kill
