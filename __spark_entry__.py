@@ -716,9 +716,9 @@ def _q_turn_pairs_streamed(spark, sf):
 def _q_turn_pairs_disorder_streamed(spark, sf):
     """Adversarial out-of-order ingestion behind the hard gate
     (VERDICT r04 "Next round" #5): the watermark-ordered matcher
-    (streaming/ooo.py — rows buffer per conversation and replay in
-    turn_idx order as the watermark passes them) drained over the
-    REVERSED file-delivery copy of the sliced input
+    (streaming/cep.py::replay_stream — rows buffer per conversation
+    and replay in turn_idx order as the watermark passes them) drained
+    over the REVERSED file-delivery copy of the sliced input
     (parity.disorder_dir) at one file per trigger — every micro-batch
     delivers events earlier than everything already buffered, so
     replies arrive before their user turns and correctness rests

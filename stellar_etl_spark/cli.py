@@ -260,7 +260,8 @@ def _windowed_builders(cfg: EngineConfig):
     runs as its own stateful query (a per-batch transform would break
     its cross-batch semantics)."""
     from stellar_etl_spark.operators import rollups, sessions
-    from stellar_etl_spark.streaming.matcher import match_pairs_stream
+    from stellar_etl_spark.streaming.cep import ordered_stream
+    from stellar_etl_spark.streaming.matcher import PAIRS
 
     return {
         "sessions": lambda s: sessions.sessionize(s, cfg, watermark=True),
@@ -270,7 +271,7 @@ def _windowed_builders(cfg: EngineConfig):
             s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
         "tool_rate_sliding": lambda s: rollups.tool_rate_sliding(
             s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
-        "pairs": lambda s: match_pairs_stream(s, cfg),
+        "pairs": lambda s: ordered_stream(s, PAIRS, cfg),
         # native chained time-window aggregation (two stateful
         # aggs, one watermark finalizes both)
         "tool_rate_peak": lambda s: rollups.tool_rate_peak(

@@ -33,31 +33,21 @@ from pyspark.sql.window import Window
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 
-def _distinct_tools(mode: str):
-    # streaming disallows exact count_distinct. Two streaming-legal
-    # alternatives, chosen by per-group cardinality:
-    #   "set"    size(collect_set(...)) — exact; state per group grows
-    #            with the distinct count, so right when that count is
-    #            small and bounded (a session touches at most the tool
-    #            vocabulary, ~10) — keeps exact-oracle parity streamed
-    #   "approx" HLL++ sketch — constant state, mergeable; the scale
-    #            path when per-group cardinality is unbounded
-    if mode == "exact":
-        return F.count_distinct(F.col("tool"))
-    if mode == "set":
-        return F.size(F.collect_set("tool")).cast("long")
-    if mode == "approx":
-        return F.approx_count_distinct("tool")
-    raise ValueError(f"unknown distinct mode {mode!r}")
-
-
-def _aggs(distinct: str = "exact"):
+def _aggs(streamed: bool = False):
+    # streaming disallows exact count_distinct; size(collect_set(...))
+    # is exact and streaming-legal. Its state per session grows with
+    # the distinct count, which the tool vocabulary (~10) bounds.
+    distinct_tools = (
+        F.size(F.collect_set("tool")).cast("long")
+        if streamed
+        else F.count_distinct(F.col("tool"))
+    )
     return [
         F.count(F.lit(1)).cast("long").alias("turn_count"),
         F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).cast("long").alias("user_turns"),
         F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).cast("long").alias("assistant_turns"),
         F.sum(F.when(F.col("role") == "tool", 1).otherwise(0)).cast("long").alias("tool_turns"),
-        _distinct_tools(distinct).alias("distinct_tools"),
+        distinct_tools.alias("distinct_tools"),
         F.min("turn_idx").alias("first_turn_idx"),
         F.max("turn_idx").alias("last_turn_idx"),
     ]
@@ -67,7 +57,6 @@ def sessionize(
     df: DataFrame,
     cfg: EngineConfig = DEFAULT,
     watermark: bool = False,
-    distinct: str | None = None,
 ) -> DataFrame:
     """transcripts -> sessions via native session_window.
 
@@ -86,16 +75,12 @@ def sessionize(
     window-function lineage blocks the rewrite), or filter after a
     materialization boundary (e.g. on re-read of the sessions table).
 
-    ``distinct`` picks the distinct_tools implementation (see
-    :func:`_distinct_tools`); None = "exact" in batch, "set" when
-    streaming (exact values, streaming-legal — per-session tool
-    cardinality is bounded by the tool vocabulary)."""
-    if distinct is None:
-        distinct = "set" if watermark else "exact"
+    distinct_tools is count_distinct in batch and size(collect_set)
+    under ``watermark`` (see :func:`_aggs`): the same values."""
     src = df.withWatermark("ts", cfg.watermark_delay) if watermark else df
     return (
         src.groupBy(F.session_window("ts", cfg.session_gap), "conv_id")
-        .agg(*_aggs(distinct))
+        .agg(*_aggs(streamed=watermark))
         .select(
             "conv_id",
             F.col("session_window.start").alias("session_start"),

@@ -31,12 +31,10 @@ instead of end-of-loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.operators.journeys import MIN_BURST
-from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
+from stellar_etl_spark.streaming.cep import Pattern
 
 BURST_OUTPUT_SCHEMA = T.StructType(
     [
@@ -83,9 +81,3 @@ def bursts_fold(
 
 # finalize an open run when the watermark passes its last error
 BURSTS = Pattern(bursts_fold, BURST_OUTPUT_SCHEMA, due=lambda carry: carry["lu"])
-
-
-def error_bursts_stream(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Append-mode error-burst detection over the full turn stream.
-    Input must be a streaming DataFrame with event-time column ts."""
-    return ordered_stream(df, BURSTS, cfg)

@@ -8,11 +8,12 @@ stream the "zip" becomes a per-conversation stateful join: a user turn
 waits in state until its response arrives (possibly in a later
 micro-batch) or the watermark evicts it.
 
-Implementation: one fold (``matcher_fold``) run by either CEP driver
-(streaming/cep.py) — here the ordered driver, applyInPandasWithState
-keyed by conv_id with EventTimeTimeout; the carry is one pending user
-turn per conversation (bounded, unlike the reference's unbounded
-seen-maps, internal/input/orderbooks.go:26-33):
+Implementation: one fold (``matcher_fold``), the pattern ``PAIRS``, run
+by either CEP driver (streaming/cep.py) — ``ordered_stream(df, PAIRS,
+cfg)`` is applyInPandasWithState keyed by conv_id with
+EventTimeTimeout. The carry is one pending user turn per conversation
+(bounded, unlike the reference's unbounded seen-maps,
+internal/input/orderbooks.go:26-33):
 
   * non-user turn while a user is pending  -> emit matched pair
   * user turn while a user is pending      -> emit previous unmatched
@@ -30,11 +31,9 @@ the skew lever for this op is state-store partitioning, not salting
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from stellar_etl_spark.config import DEFAULT, EngineConfig
-from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
+from stellar_etl_spark.streaming.cep import Pattern
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -78,9 +77,3 @@ def matcher_fold(
 
 # evict as soon as the watermark passes the pending user turn
 PAIRS = Pattern(matcher_fold, OUTPUT_SCHEMA, due=lambda carry: carry["pt"])
-
-
-def match_pairs_stream(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Streaming turn-pair matcher. Input must be a streaming DataFrame
-    with event-time column ts; output is append-mode."""
-    return ordered_stream(df, PAIRS, cfg)

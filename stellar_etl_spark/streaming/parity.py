@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 from stellar_etl_spark.config import DEFAULT, EngineConfig
 from stellar_etl_spark.deploy import ship_package
 from stellar_etl_spark.sources.transcripts import load_transcripts
+from stellar_etl_spark.streaming.cep import ordered_stream, replay_stream
 from stellar_etl_spark.streaming.pipeline import start_query
 from stellar_etl_spark.streaming.sink import (
     EpochCommitSink,
@@ -306,10 +307,9 @@ def streamed_turn_pairs(
 ) -> DataFrame:
     """Drain the stateful matcher over the sliced driver input; result
     equals operators/pairs.match_pairs row-for-row (same oracle)."""
-    from stellar_etl_spark.streaming.matcher import match_pairs_stream
-    from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
+    from stellar_etl_spark.streaming.matcher import PAIRS
 
-    matcher = match_pairs_stream_ooo if ooo else match_pairs_stream
+    driver = replay_stream if ooo else ordered_stream
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
     )
@@ -320,7 +320,7 @@ def streamed_turn_pairs(
     # so the two closer files no longer need separate triggers.
     stream = _transcripts(spark, sf_dir, src_dir, max_files_per_trigger)
     return _drain_append(
-        matcher(stream, parity_cfg), "pairs", DRAIN_PARTITIONS_STATEFUL
+        driver(stream, PAIRS, parity_cfg), "pairs", DRAIN_PARTITIONS_STATEFUL
     ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
@@ -417,8 +417,7 @@ def streamed_sessions(
     final watermark to max_ts + 30d, past every real session's end
     (max_ts + gap), finalizing all of them in one availableNow drain.
     distinct_tools streams as size(collect_set(...)) — exact values,
-    streaming-legal (sessionize distinct="set" default under
-    watermark)."""
+    streaming-legal (sessionize under watermark)."""
     from stellar_etl_spark.operators.sessions import sessionize
 
     parity_cfg = EngineConfig(
@@ -656,7 +655,7 @@ def streamed_latency_quantiles(
     aggregation inside foreachBatch) never chain two stateful streaming
     operators, so the plan stays within documented semantics."""
     from stellar_etl_spark.operators.pairs import QUANTILES_PERMILLE
-    from stellar_etl_spark.streaming.matcher import match_pairs_stream
+    from stellar_etl_spark.streaming.matcher import PAIRS
 
     parity_cfg = EngineConfig(
         session_gap=cfg.session_gap, watermark_delay=PARITY_DELAY
@@ -675,7 +674,7 @@ def streamed_latency_quantiles(
         )
 
     sink = _drain(
-        match_pairs_stream(stream, parity_cfg), "latq",
+        ordered_stream(stream, PAIRS, parity_cfg), "latq",
         lambda sink: foreach_batch_writer(sink, {LAT_HIST_TABLE: _hist}),
     )
 
@@ -893,23 +892,22 @@ def streamed_tool_transitions(
     Oracle: the batch tool_transitions SQL — the cross-batch pattern
     context (a bigram whose two turns land in different micro-batches)
     must reconstruct exactly."""
-    from stellar_etl_spark.streaming.transitions import tool_transitions_stream
+    from stellar_etl_spark.streaming.transitions import TRANSITIONS
 
     raw = _transcripts(spark, sf_dir, src_dir)
     if ooo:
-        # the watermark-ordered form is timer-driven: closers must
-        # reach the watermark node, and null-tool rows are skipped
-        # inside the fold — no pre-filters (the snapshot_ttl lesson);
-        # closer bigrams drop in the per-batch partial instead
-        from stellar_etl_spark.streaming.ooo import tool_transitions_stream_ooo
-
-        detected = tool_transitions_stream_ooo(
-            raw, EngineConfig(watermark_delay=PARITY_DELAY)
+        # the replay tier is timer-driven: closers must reach the
+        # watermark node, and null-tool rows are skipped inside the
+        # fold — no pre-filters (the snapshot_ttl lesson); closer
+        # bigrams are filtered from its output instead
+        detected = replay_stream(
+            raw, TRANSITIONS, EngineConfig(watermark_delay=PARITY_DELAY)
         ).filter(F.col("conv_id") != CLOSER_CONV)
     else:
-        detected = tool_transitions_stream(
+        detected = ordered_stream(
             raw.filter(F.col("conv_id") != CLOSER_CONV)
-            .filter(F.col("tool").isNotNull())
+            .filter(F.col("tool").isNotNull()),
+            TRANSITIONS,
         )
 
     sink = _drain(
@@ -955,14 +953,13 @@ def streamed_error_bursts(
     anyway be pushed below EventTimeWatermark and starve the timers
     (the snapshot_ttl lesson). Oracle: the batch gaps-and-islands SQL
     (operators/journeys.ERROR_BURSTS_ORACLE_SQL)."""
-    from stellar_etl_spark.streaming.bursts import error_bursts_stream
-    from stellar_etl_spark.streaming.ooo import error_bursts_stream_ooo
+    from stellar_etl_spark.streaming.bursts import BURSTS
 
-    detector = error_bursts_stream_ooo if ooo else error_bursts_stream
+    driver = replay_stream if ooo else ordered_stream
     parity_cfg = EngineConfig(watermark_delay=PARITY_DELAY)
     stream = _transcripts(spark, sf_dir, src_dir)
     return _drain_append(
-        detector(stream, parity_cfg), "bursts", DRAIN_PARTITIONS_STATEFUL
+        driver(stream, BURSTS, parity_cfg), "bursts", DRAIN_PARTITIONS_STATEFUL
     ).filter(F.col("conv_id") != CLOSER_CONV)
 
 

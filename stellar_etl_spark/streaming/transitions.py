@@ -7,7 +7,9 @@ across micro-batches, so a bigram that straddles a batch boundary is
 detected exactly like one inside a batch. The pattern is one fold
 (``transitions_fold``) run by either CEP driver (streaming/cep.py);
 its carry is the last tool (``lt``), and turns without a tool are
-skipped inside the fold.
+skipped inside the fold, so before ``ordered_stream(df, TRANSITIONS)``
+a ``tool IS NOT NULL`` pre-filter is optional: it only trims what
+crosses to Python.
 
 This is the simplest instance of the engine's CEP pattern family: the
 matcher (streaming/matcher.py) detects user->response pairs with
@@ -34,10 +36,9 @@ checkpointed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from stellar_etl_spark.streaming.cep import Pattern, ordered_stream
+from stellar_etl_spark.streaming.cep import Pattern
 
 TRANS_OUTPUT_SCHEMA = T.StructType(
     [
@@ -67,11 +68,3 @@ def transitions_fold(
 
 
 TRANSITIONS = Pattern(transitions_fold, TRANS_OUTPUT_SCHEMA, due=None)
-
-
-def tool_transitions_stream(df: DataFrame) -> DataFrame:
-    """Append-mode bigram emission over the turn stream, NoTimeout and no
-    watermark. Null-tool turns are skipped inside the fold, so a
-    ``tool IS NOT NULL`` pre-filter is optional: it only trims what
-    crosses to Python."""
-    return ordered_stream(df, TRANSITIONS, None)

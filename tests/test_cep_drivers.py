@@ -1,6 +1,8 @@
 """The two CEP drivers without Spark: each pattern's one fold run by the
 ordered driver (in-order micro-batches) and by the watermark-ordered
-replay driver (shuffled delivery) gives the same, hand-computed rows.
+replay driver (shuffled delivery) gives the same, hand-computed rows,
+also when a call's rows come split over several frames or carry a
+duplicated turn_idx.
 
 A fake GroupState stands in for Spark's; the drivers are called the
 way applyInPandasWithState calls them (key tuple, iterator of pandas
@@ -14,9 +16,8 @@ import pandas as pd
 import pytest
 
 from stellar_etl_spark.streaming.bursts import BURSTS
-from stellar_etl_spark.streaming.cep import make_ordered_fn
+from stellar_etl_spark.streaming.cep import make_ordered_fn, make_replay_fn
 from stellar_etl_spark.streaming.matcher import PAIRS
-from stellar_etl_spark.streaming.ooo import make_ooo_fn
 from stellar_etl_spark.streaming.transitions import START, TRANSITIONS
 
 BASE_S = 1_700_000_000
@@ -160,7 +161,7 @@ def _ordered(pattern):
 
 
 def _replay(pattern):
-    fn = make_ooo_fn(pattern)
+    fn = make_replay_fn(pattern)
     state = FakeGroupState(event_time=True)
     shuffled = random.Random(7).sample(TURNS, len(TURNS))
     for lo, hi in ((0, 6), (6, 9), (9, 16)):
@@ -178,3 +179,36 @@ def test_ordered_and_replay_drivers_agree(name):
     assert ordered == EXPECTED[name]
     # the replay folds the whole conversation once, in turn_idx order
     assert _replay(pattern) == EXPECTED[name]
+
+
+# turn 4 again, 0.5 s later and with another tool and no error: keeping
+# this row instead of the original changes every pattern's output
+LATER_DUP = (4, "assistant", "calc", False, 6.5)
+
+# one call's frames, as applyInPandasWithState may hand them over
+CALLS = {
+    # a group that straddles an Arrow batch arrives as several frames;
+    # here the higher turn_idxs come first
+    "split_frames": [TURNS[8:], TURNS[:8]],
+    # a turn_idx twice in one call, the later-ts row first
+    "later_dup_first": [TURNS[:4] + [LATER_DUP] + TURNS[4:]],
+}
+
+
+@pytest.mark.parametrize("call", sorted(CALLS))
+@pytest.mark.parametrize("driver", ["ordered", "replay"])
+@pytest.mark.parametrize("name", sorted(PATTERNS))
+def test_one_call_folds_in_turn_idx_order(name, driver, call):
+    """Both drivers fold a whole call in (turn_idx, ts) order, across
+    all of its frames, and keep the (turn_idx, ts)-least row of a
+    duplicated turn_idx."""
+    pattern = PATTERNS[name]
+    if driver == "ordered":
+        fn = make_ordered_fn(pattern)
+        state = FakeGroupState(event_time=pattern.due is not None)
+    else:
+        fn = make_replay_fn(pattern)
+        state = FakeGroupState(event_time=True)
+    out = _call(fn, state, [_batch(turns) for turns in CALLS[call]])
+    state.watermark_ms = END_MS + 1
+    assert out + _timeout(fn, state) == EXPECTED[name]

@@ -340,6 +340,42 @@ def test_cli_stream_row_local_equals_batch(spark, tmp_path, table):
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 
+def test_cli_stream_pairs_equals_batch_across_arrow_batches(spark, tmp_path):
+    """export-pairs --stream equals the batch matcher row for row when
+    its stateful calls receive conversations split over several Arrow
+    frames: a tiny maxRecordsPerBatch, set before the query starts,
+    splits every conversation of more than a few turns. The input is
+    the parity slices with their closers; the parity delay keeps every
+    eviction for the closers' final watermark."""
+    from pyspark.sql import functions as F
+
+    from stellar_etl_spark.operators.pairs import match_pairs
+    from stellar_etl_spark.sources.transcripts import load_transcripts
+    from stellar_etl_spark.streaming import parity
+    from stellar_etl_spark.streaming.matcher import OUTPUT_SCHEMA
+    from tests.conftest import SF_UNIT, _rows
+
+    out = str(tmp_path / "s")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        assert cli.main(
+            ["export-pairs", "--stream", "--input", parity._slice_dir(spark, SF_UNIT),
+             "--out", out, "--checkpoint", str(tmp_path / "c"),
+             "--watermark", parity.PARITY_DELAY, "--files-per-trigger", "2"],
+            spark=spark,
+        ) == 0
+    finally:
+        spark.conf.set(key, prior)
+    got = EpochCommitSink(out).read_table(spark, "pairs").filter(
+        F.col("conv_id") != parity.CLOSER_CONV
+    )
+    exp = match_pairs(load_transcripts(spark, SF_UNIT), EngineConfig())
+    cols = OUTPUT_SCHEMA.names
+    assert _rows(got, cols) == _rows(exp, cols)
+
+
 def test_cli_emb_table_exports(spark, tmp_path):
     """Embedding-family tables export via the CLI over a real
     embeddings parquet — semdedup here is the PURE operator (no

@@ -2,7 +2,7 @@
 (VERDICT r04 "Next round" #5): the same inputs delivered in REVERSED or
 seeded-SHUFFLED file order (one slice per trigger) must produce
 byte-identical results — for the sequential CEP processors via the
-watermark-ordered replay forms (streaming/ooo.py), and for the
+watermark-ordered replay tier (streaming/cep.py), and for the
 DQ monitor and the LSH bucket state because their state designs are
 delivery-order invariant by construction. The matcher's disorder drain
 is also a driver query (``turn_pairs_disorder_streamed``,
@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from stellar_etl_spark.config import EngineConfig
 from stellar_etl_spark.streaming import parity
+from stellar_etl_spark.streaming.cep import replay_stream
+from stellar_etl_spark.streaming.matcher import PAIRS
 from stellar_etl_spark.streaming.pipeline import start_query
 from stellar_etl_spark.streaming.sink import EpochCommitSink, foreach_batch_writer
 from stellar_etl_spark.streaming.source import read_transcript_stream
@@ -34,7 +36,7 @@ def test_matcher_disorder_reversed_equals_batch(spark):
 
     src_dir = parity.disorder_dir(spark, SF_UNIT, "reverse")
     # the ordered replay keeps one row per (conv_id, turn_idx)
-    # (streaming/ooo.py, exactness clause): a corpus with a duplicated
+    # (streaming/cep.py, exactness clause): a corpus with a duplicated
     # index would diverge from the batch operator, so fail on it here
     dups = (
         spark.read.parquet(src_dir)
@@ -131,7 +133,6 @@ def test_matcher_disorder_kill_resume(spark, tmp_path):
     from stellar_etl_spark.deploy import ship_package
     from stellar_etl_spark.operators.pairs import match_pairs
     from stellar_etl_spark.sources.transcripts import load_transcripts
-    from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
 
     ship_package(spark)
     stream = read_transcript_stream(
@@ -141,7 +142,7 @@ def test_matcher_disorder_kill_resume(spark, tmp_path):
     sink = EpochCommitSink(str(tmp_path / "sink"))
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
     at_kill, after = kill_resume(
-        match_pairs_stream_ooo(stream, cfg),
+        replay_stream(stream, PAIRS, cfg),
         foreach_batch_writer(sink, {"pairs": lambda df: df}),
         sink, str(tmp_path / "ckpt"), "ooo_resume",
     )
@@ -172,7 +173,6 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     Spark drops strictly-below only). The final fold must equal the
     batch matcher on the same rows."""
     from stellar_etl_spark.operators.pairs import match_pairs
-    from stellar_etl_spark.streaming.ooo import match_pairs_stream_ooo
 
     base_us = 1_700_000_000 * 1_000_000
 
@@ -197,7 +197,7 @@ def test_ooo_matcher_monotonicity_violation_still_exact(spark, tmp_path):
     )
     sink = EpochCommitSink(str(tmp_path / "sink"))
     q = start_query(
-        match_pairs_stream_ooo(stream, EngineConfig(watermark_delay="5 minutes")),
+        replay_stream(stream, PAIRS, EngineConfig(watermark_delay="5 minutes")),
         foreach_batch_writer(sink, {"pairs": lambda df: df}),
         str(tmp_path / "ckpt"), "ooo_monotonicity",
     )

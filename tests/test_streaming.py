@@ -25,9 +25,8 @@ from stellar_etl_spark.config import EngineConfig
 from stellar_etl_spark.operators import pairs as batch_pairs
 from stellar_etl_spark.operators import rollups, sessions
 from stellar_etl_spark.sources.generator import write_transcripts
-from stellar_etl_spark.streaming.matcher import match_pairs_stream
-
-
+from stellar_etl_spark.streaming.cep import ordered_stream
+from stellar_etl_spark.streaming.matcher import PAIRS
 from stellar_etl_spark.streaming.pipeline import start_fanout, start_query
 from stellar_etl_spark.streaming.sink import (
     EpochCommitSink,
@@ -133,7 +132,7 @@ def test_stream_sessions_equal_batch(spark, data_dir, tmp_path):
 def test_matcher_stream_equals_batch(spark, data_dir, tmp_path):
     stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
                                     with_lineage=False)
-    matched = match_pairs_stream(stream, CFG)
+    matched = ordered_stream(stream, PAIRS, CFG)
     q = start_fanout(matched, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
                      {"turn_pairs": _identity}, query_name="t_pairs")
     assert q.awaitTermination(540), "stream did not finish within 540s"
@@ -958,13 +957,13 @@ def test_transitions_resume_preserves_pattern_state(spark, data_dir, tmp_path):
     tool_transitions counts exactly."""
     from stellar_etl_spark.operators.journeys import tool_transitions
     from stellar_etl_spark.streaming import parity
-    from stellar_etl_spark.streaming.transitions import tool_transitions_stream
+    from stellar_etl_spark.streaming.transitions import TRANSITIONS
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
     stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=1,
                                     with_lineage=False)
     at_kill, after = kill_resume(
-        tool_transitions_stream(stream.filter(F.col("tool").isNotNull())),
+        ordered_stream(stream.filter(F.col("tool").isNotNull()), TRANSITIONS),
         foreach_batch_writer(sink, {parity.TRANS_TABLE: parity.transitions_partial}),
         sink, str(tmp_path / "ckpt"), "trans_resume",
     )
@@ -1033,7 +1032,7 @@ def test_bursts_resume_preserves_run_state(spark, tmp_path):
     query covers the inline-close path on real data."""
     from stellar_etl_spark.operators.journeys import error_bursts
     from stellar_etl_spark.streaming import parity
-    from stellar_etl_spark.streaming.bursts import error_bursts_stream
+    from stellar_etl_spark.streaming.bursts import BURSTS
 
     e, ok = "x |error| y", "fine"
     base_us = 1_700_000_000 * 1_000_000
@@ -1060,7 +1059,7 @@ def test_bursts_resume_preserves_run_state(spark, tmp_path):
     sink = EpochCommitSink(str(tmp_path / "sink"))
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
     at_kill, after = kill_resume(
-        error_bursts_stream(_pinned_stream(spark, src_dir), cfg),
+        ordered_stream(_pinned_stream(spark, src_dir), BURSTS, cfg),
         foreach_batch_writer(sink, {"bursts": _identity}),
         sink, str(tmp_path / "ckpt"), "bursts_resume",
     )
@@ -1139,7 +1138,7 @@ def test_ordered_matcher_rejects_old_state_layout(spark, data_dir, tmp_path):
 
     shutil.copy2(os.path.join(data_dir, files[1]), inp / files[1])
     q = start_query(
-        match_pairs_stream(stream(), CFG), drain, ckpt, "cep_new_layout"
+        ordered_stream(stream(), PAIRS, CFG), drain, ckpt, "cep_new_layout"
     )
     with pytest.raises(
         StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
