@@ -38,17 +38,42 @@ One place for every scale-relevant config:
     perfbench's sessions_drain read ``state.commit_ms`` 380 -> 28 ms
     and ``pipeline.wal_ms`` 61 -> 21 ms. ``.crc`` companions are still
     written and verified.
+  * local file system: on a local master the engine launches, Hadoop's
+    checksummed ``LocalFileSystem`` over a raw layer that sets modes
+    through java.nio (``local_filesystem``; ``jvm/`` holds its one
+    class). Without libhadoop, stock Hadoop forks a ``chmod`` (2.5-3
+    ms) for every file, ``.crc`` and directory it creates: ~13-18 per
+    live turns epoch (sink part files, the committer's ``_temporary``,
+    checkpoint logs) and ~26 per sessions epoch (state deltas too);
+    here none (``tools/forks.py``). Checksums and modes are as before.
+    The class is compiled once with the host's JDK (``javac``, 17 or
+    newer) against Spark's jars and put on the driver's class path. A
+    host without ``javac``, a JVM the engine did not launch and a
+    cluster master keep stock Hadoop: slower, same results.
   * driver heap: half the host's physical memory unless SPARK_DRIVER_MEM
     says otherwise.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from collections.abc import Callable, Mapping
+from typing import Any
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from stellar_etl_spark.config import DEFAULT, EngineConfig
+
+_log = logging.getLogger(__name__)
 
 
 def driver_memory() -> str:
@@ -75,11 +100,102 @@ FS_CHECKPOINT_MANAGER = (
 )
 
 
+def _is_local(master: str) -> bool:
+    return master.split("[")[0] == "local"
+
+
 def checkpoint_manager(master: str) -> str | None:
     """The checkpoint file manager a session on `master` gets: the
     FileSystem-based one on a ``local``/``local[...]`` master, and
     Spark's own default (None: left unset) on a cluster."""
-    return FS_CHECKPOINT_MANAGER if master.split("[")[0] == "local" else None
+    return FS_CHECKPOINT_MANAGER if _is_local(master) else None
+
+
+FS_IMPL_CONF = "spark.hadoop.fs.file.impl"
+CLASSPATH_CONF = "spark.driver.extraClassPath"
+LOCAL_FS_CLASS = "stellar_etl_spark.fs.ForkFreeLocalFileSystem"
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+
+
+def local_fs_jar() -> str:
+    """The jar holding ``LOCAL_FS_CLASS``, compiled on first use with the
+    host's ``javac`` against Spark's own jars, and named by a digest of
+    the source and those jars' names, so that a new source or a new
+    Spark compiles afresh. The jar is staged next to its final name and
+    renamed into place. Raises OSError when there is no ``javac``, the
+    build directory is not writable or the compile fails."""
+    src = os.path.join(_JVM_DIR, "ForkFreeLocalFileSystem.java")
+    jars = os.path.join(_find_spark_home(), "jars")
+    with open(src, "rb") as f:
+        key = f.read() + "\n".join(sorted(os.listdir(jars))).encode()
+    jar = os.path.join(_JVM_DIR, "build", f"localfs-{hashlib.sha256(key).hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        raise OSError("no javac on PATH")
+    os.makedirs(os.path.dirname(jar), exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+        out = subprocess.run(
+            [javac, "--release", "17", "-cp", os.path.join(jars, "*"), "-d", tmp, src],
+            capture_output=True, text=True,
+        )
+        if out.returncode != 0:
+            raise OSError(f"javac failed: {out.stderr.strip()}")
+        staged = os.path.join(tmp, "staged.jar")
+        with zipfile.ZipFile(staged, "w") as z:
+            for root, _, files in os.walk(tmp):
+                for name in files:
+                    if name.endswith(".class"):
+                        full = os.path.join(root, name)
+                        z.write(full, os.path.relpath(full, tmp))
+        os.replace(staged, jar)
+    return jar
+
+
+def local_filesystem(master: str, extra_conf: Mapping[str, str]) -> dict[str, str]:
+    """The confs that give a session on `master` the fork-free local
+    FileSystem (``LOCAL_FS_CLASS``), or {} to keep stock Hadoop's.
+
+    Only a ``local`` master gets it, and never over an ``extra_conf``
+    that names its own ``fs.file.impl``. Before the engine launches the
+    driver JVM, the class's jar (``local_fs_jar``) goes on the driver's
+    class path. A JVM that is already running has a fixed class path,
+    so there the class must already load (it does in a JVM that an
+    earlier ``get_spark`` launched). When it cannot be had, one warning
+    names the cause and the session runs stock Hadoop: slower, same
+    results."""
+    if not _is_local(master) or FS_IMPL_CONF in extra_conf:
+        return {}
+    try:
+        if SparkContext._jvm is not None:
+            SparkContext._jvm.org.apache.hadoop.conf.Configuration().getClassByName(
+                LOCAL_FS_CLASS)
+            return {FS_IMPL_CONF: LOCAL_FS_CLASS}
+        if "PYSPARK_GATEWAY_PORT" in os.environ:
+            raise OSError("the driver JVM was launched outside the engine")
+        jar = local_fs_jar()
+    except (OSError, Py4JError) as e:
+        _log.warning("stock Hadoop local FileSystem (a chmod fork per file): %s", e)
+        return {}
+    cp = extra_conf.get(CLASSPATH_CONF)
+    return {FS_IMPL_CONF: LOCAL_FS_CLASS,
+            CLASSPATH_CONF: jar if not cp else jar + os.pathsep + cp}
+
+
+def per_context(key: Any, build: Callable[[], Any]) -> Any:
+    """``build()``, once per active SparkContext. Each Column node costs
+    a py4j round trip to build, and a streaming writer would otherwise
+    rebuild its expressions every micro-batch. The values are kept on
+    the context object itself, so they go with it; a stopped context is
+    never the active one, so a new context builds its own."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return build()
+    built = sc.__dict__.setdefault("_stellar_built", {})
+    if key not in built:
+        built[key] = build()
+    return built[key]
 
 
 def get_spark(cfg: EngineConfig = DEFAULT, app_name: str = "stellar_etl_spark") -> SparkSession:
@@ -100,7 +216,8 @@ def get_spark(cfg: EngineConfig = DEFAULT, app_name: str = "stellar_etl_spark") 
         .config("spark.driver.memory", driver_memory())
         .config("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
     )
-    for k, v in cfg.extra_conf.items():
+    conf = {**cfg.extra_conf, **local_filesystem(cfg.master, cfg.extra_conf)}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

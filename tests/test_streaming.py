@@ -17,6 +17,7 @@ import time
 from dataclasses import replace
 
 import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -560,6 +561,131 @@ def test_checkpoint_manager_follows_master():
     for master in ("yarn", "spark://host:7077", "k8s://https://host:6443",
                    "local-cluster[2,1,1024]"):
         assert session.checkpoint_manager(master) is None
+
+
+class _RunningJVM:
+    """A stand-in for a running driver JVM: `loads` says whether its
+    class path has the engine's local FileSystem."""
+
+    def __init__(self, loads):
+        self.loads = loads
+
+    def __getattr__(self, name):
+        return self
+
+    def __call__(self):
+        return self
+
+    def getClassByName(self, name):
+        if not self.loads:
+            raise Py4JError(f"java.lang.ClassNotFoundException: {name}")
+
+
+def test_local_filesystem_follows_master_and_jvm(tmp_path, monkeypatch, caplog):
+    """A local master gets the fork-free FileSystem, compiled with the
+    host's javac when no JVM runs yet; a cluster master, an
+    `extra_conf` that names its own `fs.file.impl`, a host without
+    javac, a JVM the engine did not launch and a running JVM that
+    cannot load the class get nothing, the last three with one warning
+    naming the cause."""
+    from pyspark import SparkContext
+
+    jvm_dir = tmp_path / "jvm"
+    jvm_dir.mkdir()
+    shutil.copy(os.path.join(session._JVM_DIR, "ForkFreeLocalFileSystem.java"), jvm_dir)
+    monkeypatch.setattr(session, "_JVM_DIR", str(jvm_dir))
+    monkeypatch.setattr(SparkContext, "_jvm", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    impl, cp = session.FS_IMPL_CONF, session.CLASSPATH_CONF
+
+    def pick(master, extra=None):
+        caplog.clear()
+        with caplog.at_level("WARNING", logger=session.__name__):
+            return session.local_filesystem(master, extra or {})
+
+    for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]"):
+        assert pick(master) == {}
+    stock = "org.apache.hadoop.fs.LocalFileSystem"
+    assert pick("local[4]", {impl: stock}) == {}
+
+    with monkeypatch.context() as m:  # no JDK compiler on this host
+        m.setattr(shutil, "which", lambda name: None)
+        assert pick("local[4]") == {}
+        assert [r.getMessage() for r in caplog.records] == [
+            "stock Hadoop local FileSystem (a chmod fork per file): no javac on PATH"]
+    assert not (jvm_dir / "build").exists()
+
+    confs = pick("local[*]", {cp: "lib/extra.jar"})
+    jar = confs[cp].split(os.pathsep)[0]
+    assert confs == {impl: session.LOCAL_FS_CLASS, cp: jar + os.pathsep + "lib/extra.jar"}
+    assert os.path.dirname(jar) == str(jvm_dir / "build")
+    assert os.listdir(jvm_dir / "build") == [os.path.basename(jar)]  # nothing staged left
+    assert caplog.records == []
+
+    with monkeypatch.context() as m:  # a JVM spark-submit launched
+        m.setenv("PYSPARK_GATEWAY_PORT", "1")
+        assert pick("local[4]") == {}
+        [warning] = caplog.records
+        assert "launched outside the engine" in warning.getMessage()
+
+    monkeypatch.setattr(SparkContext, "_jvm", _RunningJVM(loads=True))
+    assert pick("local[4]") == {impl: session.LOCAL_FS_CLASS}
+    monkeypatch.setattr(SparkContext, "_jvm", _RunningJVM(loads=False))
+    assert pick("local[4]") == {}
+    [warning] = caplog.records
+    assert "ClassNotFoundException" in warning.getMessage()
+
+
+def test_local_session_filesystem_is_fork_free_and_checksummed(spark, tmp_path):
+    """The test session's local FileSystem is the engine's class, still a
+    LocalFileSystem. What it creates gets stock Hadoop's modes and a
+    .crc; a mode beyond 0777 is still set; and a committed part file
+    with one flipped byte fails its read on the checksum."""
+    jvm = spark.sparkContext._jvm
+    hadoop = jvm.org.apache.hadoop.fs
+    fs = hadoop.FileSystem.getLocal(spark.sparkContext._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == session.LOCAL_FS_CLASS
+    assert hadoop.LocalFileSystem._java_lang_class.isInstance(fs)
+
+    out = fs.create(hadoop.Path(str(tmp_path / "f.bin")))
+    out.write(bytearray(b"payload"))
+    out.close()
+    fs.mkdirs(hadoop.Path(str(tmp_path / "d")), hadoop.permission.FsPermission.getDirDefault())
+    mode = {f: oct(os.stat(tmp_path / f).st_mode & 0o7777) for f in os.listdir(tmp_path)}
+    assert mode == {"f.bin": "0o644", ".f.bin.crc": "0o644", "d": "0o755"}
+    fs.setPermission(hadoop.Path(str(tmp_path / "d")),
+                     hadoop.permission.FsPermission.valueOf("drwxr-xr-t"))
+    assert os.stat(tmp_path / "d").st_mode & 0o7777 == 0o1755
+
+    sink = EpochCommitSink(str(tmp_path / "sink"))
+    sink.write_epoch(0, {"t": spark.range(2000).selectExpr("id", "string(id * 7) AS s")})
+    epoch_dir = tmp_path / "sink" / "data" / "t" / "epoch=0"
+    part = next(p for p in epoch_dir.iterdir() if p.name.startswith("part-"))
+    assert (epoch_dir / f".{part.name}.crc").exists()
+    data = bytearray(part.read_bytes())
+    data[len(data) // 2] ^= 0x01
+    part.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="ChecksumException"):
+        sink.read_table(spark, "t").collect()
+
+
+def test_turns_projection_built_once(spark, data_dir, tmp_path, monkeypatch):
+    """A 3-epoch enrich_turns fan-out builds the projection's Columns
+    once, and its output equals batch enrich_turns."""
+    from stellar_etl_spark.operators import enrich
+
+    calls = []
+    build = enrich._turns_columns
+    monkeypatch.setattr(enrich, "_turns_columns", lambda cfg: calls.append(cfg) or build(cfg))
+    monkeypatch.setitem(vars(spark.sparkContext), "_stellar_built", {})  # a fresh context
+    _, manifests = _drain_fanout(spark, data_dir, tmp_path,
+                                 {"turns": lambda df: enrich.enrich_turns(df, CFG)},
+                                 "t_turns_once")
+    assert len(manifests) == 3
+    assert len(calls) == 1
+    got = EpochCommitSink(str(tmp_path / "t_turns_once" / "sink")).read_table(spark, "turns")
+    assert _rows(got) == _rows(enrich.enrich_turns(read_transcript_batch(spark, data_dir), CFG))
+    assert len(calls) == 1
 
 
 def test_sessions_resume_across_checkpoint_manager_change(spark, data_dir, tmp_path):
