@@ -62,7 +62,6 @@ import os
 import shutil
 import subprocess
 import tempfile
-import zipfile
 from collections.abc import Callable, Mapping
 from typing import Any
 
@@ -117,40 +116,42 @@ LOCAL_FS_CLASS = "stellar_etl_spark.fs.ForkFreeLocalFileSystem"
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 
 
-def local_fs_jar() -> str:
-    """The jar holding ``LOCAL_FS_CLASS``, compiled on first use with the
-    host's ``javac`` against Spark's own jars, and named by a digest of
-    the source and those jars' names, so that a new source or a new
-    Spark compiles afresh. The jar is staged next to its final name and
-    renamed into place. Raises OSError when there is no ``javac``, the
-    build directory is not writable or the compile fails."""
+def local_fs_classes() -> str:
+    """The class directory holding ``LOCAL_FS_CLASS``, compiled on first
+    use with the host's ``javac`` against Spark's own jars, and named by
+    a digest of the source and those jars' names, so that a new source
+    or a new Spark compiles afresh. ``javac`` writes into a temporary
+    directory next to it, renamed into place in one step; when another
+    process got there first, its classes stand. Raises OSError when
+    there is no ``javac``, the build directory is not writable or the
+    compile fails."""
     src = os.path.join(_JVM_DIR, "ForkFreeLocalFileSystem.java")
     jars = os.path.join(_find_spark_home(), "jars")
     with open(src, "rb") as f:
         key = f.read() + "\n".join(sorted(os.listdir(jars))).encode()
-    jar = os.path.join(_JVM_DIR, "build", f"localfs-{hashlib.sha256(key).hexdigest()[:16]}.jar")
-    if os.path.exists(jar):
-        return jar
+    classes = os.path.join(_JVM_DIR, "build", f"localfs-{hashlib.sha256(key).hexdigest()[:16]}")
+    if os.path.isdir(classes):
+        return classes
     javac = shutil.which("javac")
     if javac is None:
         raise OSError("no javac on PATH")
-    os.makedirs(os.path.dirname(jar), exist_ok=True)
-    with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as tmp:
+    os.makedirs(os.path.dirname(classes), exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=os.path.dirname(classes))
+    try:
         out = subprocess.run(
             [javac, "--release", "17", "-cp", os.path.join(jars, "*"), "-d", tmp, src],
             capture_output=True, text=True,
         )
         if out.returncode != 0:
             raise OSError(f"javac failed: {out.stderr.strip()}")
-        staged = os.path.join(tmp, "staged.jar")
-        with zipfile.ZipFile(staged, "w") as z:
-            for root, _, files in os.walk(tmp):
-                for name in files:
-                    if name.endswith(".class"):
-                        full = os.path.join(root, name)
-                        z.write(full, os.path.relpath(full, tmp))
-        os.replace(staged, jar)
-    return jar
+        try:
+            os.replace(tmp, classes)
+        except OSError:
+            if not os.path.isdir(classes):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return classes
 
 
 def local_filesystem(master: str, extra_conf: Mapping[str, str]) -> dict[str, str]:
@@ -159,9 +160,9 @@ def local_filesystem(master: str, extra_conf: Mapping[str, str]) -> dict[str, st
 
     Only a ``local`` master gets it, and never over an ``extra_conf``
     that names its own ``fs.file.impl``. Before the engine launches the
-    driver JVM, the class's jar (``local_fs_jar``) goes on the driver's
-    class path. A JVM that is already running has a fixed class path,
-    so there the class must already load (it does in a JVM that an
+    driver JVM, the class's directory (``local_fs_classes``) goes on the
+    driver's class path. A JVM that is already running has a fixed class
+    path, so there the class must already load (it does in a JVM that an
     earlier ``get_spark`` launched). When it cannot be had, one warning
     names the cause and the session runs stock Hadoop: slower, same
     results."""
@@ -174,13 +175,13 @@ def local_filesystem(master: str, extra_conf: Mapping[str, str]) -> dict[str, st
             return {FS_IMPL_CONF: LOCAL_FS_CLASS}
         if "PYSPARK_GATEWAY_PORT" in os.environ:
             raise OSError("the driver JVM was launched outside the engine")
-        jar = local_fs_jar()
+        classes = local_fs_classes()
     except (OSError, Py4JError) as e:
         _log.warning("stock Hadoop local FileSystem (a chmod fork per file): %s", e)
         return {}
     cp = extra_conf.get(CLASSPATH_CONF)
     return {FS_IMPL_CONF: LOCAL_FS_CLASS,
-            CLASSPATH_CONF: jar if not cp else jar + os.pathsep + cp}
+            CLASSPATH_CONF: classes if not cp else classes + os.pathsep + cp}
 
 
 def per_context(key: Any, build: Callable[[], Any]) -> Any:

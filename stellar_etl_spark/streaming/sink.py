@@ -51,8 +51,6 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from stellar_etl_spark.session import per_context
-
 
 # Hadoop's committer writes a `_SUCCESS` marker (plus its `.crc`) per
 # job; the manifest rename is this sink's commit point and nothing reads
@@ -307,15 +305,14 @@ def _footer_rows(path: str) -> dict[str, int]:
 def _observe(batch_df: DataFrame) -> tuple[DataFrame, Observation]:
     """`batch_df` (it carries `_source_file`) with its lineage metrics
     attached: whichever action first reads the result fills the
-    returned observation. The metric Columns are built once per
-    SparkContext (`session.per_context`); the observation is new."""
+    returned observation."""
     obs = Observation()
-    return batch_df.observe(obs, *per_context("lineage", _lineage_metrics)), obs
-
-
-def _lineage_metrics() -> list:
-    return [F.collect_set("_source_file").alias("input_files"),
-            F.count(F.lit(1)).alias("rows")]
+    observed = batch_df.observe(
+        obs,
+        F.collect_set("_source_file").alias("input_files"),
+        F.count(F.lit(1)).alias("rows"),
+    )
+    return observed, obs
 
 
 def lineage_of(batch_df: DataFrame, observation: Observation) -> dict:

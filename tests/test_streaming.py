@@ -616,10 +616,13 @@ def test_local_filesystem_follows_master_and_jvm(tmp_path, monkeypatch, caplog):
     assert not (jvm_dir / "build").exists()
 
     confs = pick("local[*]", {cp: "lib/extra.jar"})
-    jar = confs[cp].split(os.pathsep)[0]
-    assert confs == {impl: session.LOCAL_FS_CLASS, cp: jar + os.pathsep + "lib/extra.jar"}
-    assert os.path.dirname(jar) == str(jvm_dir / "build")
-    assert os.listdir(jvm_dir / "build") == [os.path.basename(jar)]  # nothing staged left
+    classes = confs[cp].split(os.pathsep)[0]
+    assert confs == {impl: session.LOCAL_FS_CLASS, cp: classes + os.pathsep + "lib/extra.jar"}
+    assert os.path.dirname(classes) == str(jvm_dir / "build")
+    assert os.listdir(jvm_dir / "build") == [os.path.basename(classes)]  # nothing staged left
+    class_file = session.LOCAL_FS_CLASS.replace(".", os.sep) + ".class"
+    assert os.path.isfile(os.path.join(classes, class_file))
+    assert session.local_fs_classes() == classes  # compiled once
     assert caplog.records == []
 
     with monkeypatch.context() as m:  # a JVM spark-submit launched

@@ -17,7 +17,11 @@ else (a session's first ``getconf``, the shipped package's
 ``--stock-fs`` runs the same drains on stock Hadoop's LocalFileSystem,
 the file system of a session where the engine's own is not available.
 
-Usage: python tools/forks.py [--convs 400] [--files 3] [--master local[2]] [--stock-fs]
+The input is ``CONVS`` conversations in ``FILES`` files (one per
+micro-batch) on a ``MASTER`` session; the per-micro-batch counts in
+the docs are for these values.
+
+Usage: python tools/forks.py [--stock-fs]
 """
 
 from __future__ import annotations
@@ -31,9 +35,11 @@ import subprocess
 import sys
 import tempfile
 from collections import Counter
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+CONVS, FILES, MASTER = 400, 3, "local[2]"
 
 # first match wins
 GROUPS = [
@@ -49,10 +55,11 @@ def group(command: str) -> str:
 
 
 def _ts(iso: str) -> datetime:
-    """An ISO-8601 UTC instant (JFR prints nanoseconds, Spark millis)."""
-    m = re.match(r"(\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d)(?:\.(\d+))?", iso)
-    frac = (m.group(2) or "0")[:6].ljust(6, "0")
-    return datetime.fromisoformat(m.group(1)) + timedelta(microseconds=int(frac))
+    """An ISO-8601 instant with its zone, in UTC. JFR prints nanoseconds
+    and the recording JVM's local offset, Spark millis and ``Z``."""
+    m = re.fullmatch(r"([^.]+?)(?:\.(\d+))?(Z|[+-]\d\d:\d\d)", iso)
+    frac = (m.group(2) or "")[:6].ljust(6, "0")
+    return datetime.fromisoformat(f"{m.group(1)}.{frac}{m.group(3)}").astimezone(timezone.utc)
 
 
 def process_starts(jfr_file: str) -> list[tuple[datetime, str]]:
@@ -62,13 +69,17 @@ def process_starts(jfr_file: str) -> list[tuple[datetime, str]]:
     return sorted((_ts(e["values"]["startTime"]), e["values"]["command"]) for e in events)
 
 
+def _span(batch: dict) -> tuple[datetime, datetime]:
+    start = _ts(batch["timestamp"])
+    return start, start + timedelta(milliseconds=batch["durationMs"]["triggerExecution"])
+
+
 def report(name: str, batches: list[dict], forks: list[tuple[datetime, str]]) -> None:
     """Print the forks inside each of `batches` (progress dicts)."""
     print(f"== {name}: {len(batches)} micro-batches")
     total = Counter()
     for b in batches:
-        start = _ts(b["timestamp"])
-        end = start + timedelta(milliseconds=b["durationMs"]["triggerExecution"])
+        start, end = _span(b)
         n = Counter(group(cmd) for t, cmd in forks if start <= t <= end)
         total += n
         parts = ", ".join(f"{g} {c}" for g, c in sorted(n.items())) or "-"
@@ -80,9 +91,6 @@ def report(name: str, batches: list[dict], forks: list[tuple[datetime, str]]) ->
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--convs", type=int, default=400, help="conversations in the input")
-    ap.add_argument("--files", type=int, default=3, help="input files (one per micro-batch)")
-    ap.add_argument("--master", default="local[2]")
     ap.add_argument("--stock-fs", action="store_true",
                     help="stock Hadoop LocalFileSystem instead of the engine's")
     args = ap.parse_args(argv)
@@ -110,9 +118,9 @@ def main(argv=None) -> int:
 
     work = tempfile.mkdtemp(prefix="forks-")
     inp = os.path.join(work, "in")
-    write_transcripts(inp, n_convs=args.convs, n_files=args.files)
+    write_transcripts(inp, n_convs=CONVS, n_files=FILES)
     extra = {FS_IMPL_CONF: "org.apache.hadoop.fs.LocalFileSystem"} if args.stock_fs else {}
-    spark = get_spark(EngineConfig(master=args.master, extra_conf=extra), app_name="forks")
+    spark = get_spark(EngineConfig(master=MASTER, extra_conf=extra), app_name="forks")
     listener = Progress()
     spark.streams.addListener(listener)
     pid = str(spark.sparkContext._gateway.proc.pid)
@@ -134,7 +142,11 @@ def main(argv=None) -> int:
                        check=True, capture_output=True)
         subprocess.run(["jcmd", pid, "JFR.stop", "name=forks"], capture_output=True)
     forks = process_starts(jfr_file)
-    print(f"{len(forks)} forks in all (jdk.ProcessStart)")
+    spans = [_span(b) for b in listener.seen]
+    outside = sum(not any(s <= t <= e for s, e in spans) for t, _ in forks)
+    # a session's own start-up forks a few; many more here means the
+    # two clocks do not line up
+    print(f"{len(forks)} forks in all (jdk.ProcessStart), {outside} outside every micro-batch")
     for name in ("sessions", "turns"):
         report(name, [b for b in listener.seen if b["name"] == name], forks)
     spark.stop()
