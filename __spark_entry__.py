@@ -75,15 +75,15 @@ def _q_sessions(spark, sf):
 
 
 def _q_tool_rate_1m(spark, sf):
-    return rollups.tool_rate(_T(spark, sf), CFG)
+    return rollups.tool_rate(_T(spark, sf))
 
 
 def _q_role_rate_1m(spark, sf):
-    return rollups.role_rate(_T(spark, sf), CFG)
+    return rollups.role_rate(_T(spark, sf))
 
 
 def _q_tool_rate_5m_sliding(spark, sf):
-    return rollups.tool_rate_sliding(_T(spark, sf), CFG)
+    return rollups.tool_rate_sliding(_T(spark, sf))
 
 
 def _q_turn_pairs(spark, sf):
@@ -539,7 +539,7 @@ def _q_turn_replies_outer_streamed(spark, sf):
 def _q_tool_rate_peak(spark, sf):
     """T54 batch form: window-on-window rollup — per-tool 1m counts
     re-aggregated into 10m peak/total/active-minute blocks."""
-    return rollups.tool_rate_peak(_T(spark, sf), CFG)
+    return rollups.tool_rate_peak(_T(spark, sf))
 
 
 def _q_tool_rate_peak_streamed(spark, sf):
@@ -773,7 +773,7 @@ def _q_tool_rate_1m_streamed(spark, sf):
     collect_set parity mode)."""
     from stellar_etl_spark.streaming import parity
 
-    return parity.streamed_tool_rate(spark, sf, CFG)
+    return parity.streamed_tool_rate(spark, sf)
 
 
 def _q_tool_rate_5m_sliding_streamed(spark, sf):
@@ -781,7 +781,7 @@ def _q_tool_rate_5m_sliding_streamed(spark, sf):
     streaming aggregation; oracle = the batch sliding SQL."""
     from stellar_etl_spark.streaming import parity
 
-    return parity.streamed_tool_rate_sliding(spark, sf, CFG)
+    return parity.streamed_tool_rate_sliding(spark, sf)
 
 
 def _q_latency_quantiles_streamed(spark, sf):

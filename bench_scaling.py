@@ -24,10 +24,10 @@ multi-tenant box):
      and best; efficiency is computed from medians.
 
 Job under test: the engine's core pipeline over a generated ~10M-turn
-transcript set — vectorized enrichment (pandas UDF), session windows,
+transcript set — the enrichment projection, session windows,
 tumbling tool rollup, and the user->assistant pair match — all forced
 end-to-end via the noop sink. That covers the shapes that dominate at
-100 TB: Arrow UDF batches, shuffles (session agg, rollup, pair-match
+100 TB: a codegen projection, shuffles (session agg, rollup, pair-match
 window sort), and windowed aggregation.
 
 Usage:
@@ -81,12 +81,7 @@ def child(cpus: int) -> None:
     from stellar_etl_spark.operators import pairs, rollups, sessions
     from stellar_etl_spark.operators.enrich import enrich_turns
 
-    # validator="pandas" pins the documented job shape: the scaling job
-    # deliberately includes the Arrow-batched pandas-UDF stage (the
-    # north-rule-mandated pattern) — the engine's default moved to the
-    # JVM F.when chain in round 2, which would silently drop the Python
-    # worker pool from the job under test
-    cfg = EngineConfig(session_gap="30 minutes", validator="pandas")
+    cfg = EngineConfig(session_gap="30 minutes")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"scale-bench-{cpus}")
@@ -129,7 +124,7 @@ def child(cpus: int) -> None:
         jobs = [
             lambda: enrich_turns(df, cfg),
             lambda: sessions.sessionize(df, cfg),
-            lambda: rollups.tool_rate(df, cfg),
+            lambda: rollups.tool_rate(df),
             lambda: pairs.match_pairs(df, cfg),
         ]
         with ThreadPoolExecutor(4) as ex:

@@ -55,9 +55,9 @@ def _tables(cfg: EngineConfig, as_of: str | None = None):
     return {
         "turns": lambda df: enrich_turns(df, cfg),
         "sessions": lambda df: sessions.sessionize(df, cfg),
-        "tool_rate": lambda df: rollups.tool_rate(df, cfg),
-        "role_rate": lambda df: rollups.role_rate(df, cfg),
-        "tool_rate_sliding": lambda df: rollups.tool_rate_sliding(df, cfg),
+        "tool_rate": rollups.tool_rate,
+        "role_rate": rollups.role_rate,
+        "tool_rate_sliding": rollups.tool_rate_sliding,
         "pairs": lambda df: pairs.match_pairs(df, cfg),
         "latency_quantiles": lambda df: pairs.latency_quantiles(
             pairs.match_pairs(df, cfg)
@@ -89,7 +89,7 @@ def _tables(cfg: EngineConfig, as_of: str | None = None):
         "explode_tokens": dims.explode_tokens,
         "top_convs": dims.top_convs,
         "conv_funnel": journeys.conv_funnel,
-        "tool_rate_peak": lambda df: rollups.tool_rate_peak(df, cfg),
+        "tool_rate_peak": rollups.tool_rate_peak,
         "salted_tool_rate": skew.salted_windowed_tool_counts,
         "conv_turns_cms": _conv_turns_cms_table,
         "transform_stats": lambda df: _transform_stats_table(df, cfg),
@@ -266,16 +266,16 @@ def _windowed_builders(cfg: EngineConfig):
     return {
         "sessions": lambda s: sessions.sessionize(s, cfg, watermark=True),
         "tool_rate": lambda s: rollups.tool_rate(
-            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+            s.withWatermark("ts", cfg.watermark_delay), distinct="approx"),
         "role_rate": lambda s: rollups.role_rate(
-            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+            s.withWatermark("ts", cfg.watermark_delay), distinct="approx"),
         "tool_rate_sliding": lambda s: rollups.tool_rate_sliding(
-            s.withWatermark("ts", cfg.watermark_delay), cfg, exact=False),
+            s.withWatermark("ts", cfg.watermark_delay), distinct="approx"),
         "pairs": lambda s: ordered_stream(s, PAIRS, cfg),
         # native chained time-window aggregation (two stateful
         # aggs, one watermark finalizes both)
         "tool_rate_peak": lambda s: rollups.tool_rate_peak(
-            s.withWatermark("ts", cfg.watermark_delay), cfg),
+            s.withWatermark("ts", cfg.watermark_delay)),
     }
 
 

@@ -6,21 +6,18 @@ per-field guards, returning (row, error)
 are counted and skipped in lenient mode or fatal in strict mode
 (internal/utils/logger.go:17-23, flag internal/utils/main.go:234).
 
-Here the projection is a vectorized pandas UDF over Arrow batches
-(never per-row Python), emitting an ``error`` quarantine column; the
-caller either filters the quarantine rows to a side table (lenient) or
-fails the job on first error (strict). Cheap derived columns that the
-JVM can codegen (lengths, packed ids) stay as built-in expressions —
-the UDF only covers what F.* can't express cheaply.
+Here the projection is one JVM select: the guards are an ``F.when``
+chain and the derived columns (packed ids, lengths) are built-in
+expressions, so whole-stage codegen compiles the whole row in one span
+and no row goes through Python. It emits an ``error`` quarantine
+column; the caller either filters the quarantine rows to a side table
+(lenient) or fails the job on first error (strict).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from stellar_etl_spark import ids
 from stellar_etl_spark.config import DEFAULT, EngineConfig
@@ -29,35 +26,11 @@ from stellar_etl_spark.session import per_context
 VALID_ROLES = ("user", "assistant", "tool", "system")
 
 
-@pandas_udf(T.StringType())
-def _validate_turn(
-    conv_id: pd.Series, turn_idx: pd.Series, role: pd.Series, ts_ok: pd.Series
-) -> pd.Series:
-    """Vectorized row validation -> error string or None.
-
-    Mirrors the reference's guard style (negative-value checks,
-    transform/ledger.go:44-51, account.go:30-47) as whole-column
-    boolean masks; one string allocation per *bad* row only.
-    """
-    err = pd.Series([None] * len(conv_id), dtype=object)
-    bad_conv = conv_id.isna() | (conv_id.astype(str).str.len() == 0)
-    bad_suffix = ~conv_id.str.contains(ids.NUMERIC_SUFFIX, na=False)
-    bad_idx = turn_idx.isna() | (turn_idx < 0)
-    bad_role = ~role.isin(VALID_ROLES)
-    bad_ts = ~ts_ok.astype(bool)
-    err[bad_ts] = "null ts"
-    err[bad_role.fillna(True)] = "invalid role"
-    err[bad_idx.fillna(True)] = "negative or null turn_idx"
-    err[bad_suffix] = "conv_id has no numeric suffix"
-    err[bad_conv] = "empty conv_id"
-    return err
-
-
-def _validate_turn_jvm() -> F.Column:
-    """The same guards as a pure F.when chain — whole-stage codegen,
-    no Arrow round-trip. Identical precedence to the pandas UDF
-    (conv > suffix > idx > role > ts: the UDF assigns in reverse order
-    so earlier guards overwrite later ones)."""
+def _validate_turn() -> F.Column:
+    """Row validation -> error string or NULL, mirroring the
+    reference's guard style (negative-value checks,
+    transform/ledger.go:44-51, account.go:30-47). The first failing
+    guard names the error: conv > suffix > idx > role > ts."""
     role = F.col("role")
     return (
         F.when(
@@ -81,40 +54,26 @@ def enrich_turns(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     Works identically on batch and streaming DataFrames (no window
     functions; everything row-local -> no shuffle at all).
 
-    cfg.validator picks the guard implementation: "jvm" (default —
-    the whole projection is one WholeStageCodegen span, zero Python)
-    or "pandas" (the Arrow-batched quarantine-UDF pattern, kept as the
-    template for guards F.* genuinely can't express). Both emit the
-    same error strings with the same precedence.
-
-    The projection's Columns are built once per SparkContext and
-    validator (`session.per_context`): a live fan-out calls this every
+    The projection's Columns are built once per SparkContext
+    (`session.per_context`): a live fan-out calls this every
     micro-batch, and rebuilding its ~40 expression nodes over py4j
     took ~50 ms a call on a 4-vCPU host, where the `select` of built
     Columns takes ~7 ms.
+
+    `cfg` is unused; it stays because callers, perfbench among them, pass it.
     """
-    cols = per_context(("enrich_turns", cfg.validator), lambda: _turns_columns(cfg))
-    return df.select(*cols)
+    return df.select(*per_context("enrich_turns", _turns_columns))
 
 
-def _turns_columns(cfg: EngineConfig) -> list:
+def _turns_columns() -> list:
     """The select list of `enrich_turns`, as Columns: a name would cost
     a round trip of its own in every `select`."""
-    if cfg.validator == "pandas":
-        error = _validate_turn(
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            F.col("role"),
-            F.col("ts").isNotNull(),
-        )
-    else:
-        error = _validate_turn_jvm()
     return [
         *map(F.col, ("conv_id", "turn_idx", "role", "text", "tool", "ts")),
         ids.pack_turn_id(ids.conv_num_from_suffix("conv_id"), "turn_idx").alias("turn_id"),
         F.length("text").alias("text_len"),
         F.size(F.split(F.trim("text"), r"\s+")).alias("word_count"),
-        error.alias("error"),
+        _validate_turn().alias("error"),
     ]
 
 

@@ -17,7 +17,11 @@ shuffle — Spark does this automatically for hash aggregates); the
 sliding window replicates each row length/slide times *logically*
 without materializing copies (Spark expands windows in the generator
 node). Distinct counts force a second shuffle; at 100 TB prefer
-approx_count_distinct (HLL, mergeable) — exposed via exact=False.
+approx_count_distinct (HLL, mergeable) — exposed via distinct="approx".
+
+The window lengths are module constants: the DuckDB oracles
+(``rate_oracle_sql``, ``sliding_oracle_sql``, ``PEAK_ORACLE_SQL``) are
+written for exactly these.
 """
 
 from __future__ import annotations
@@ -25,7 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stellar_etl_spark.config import DEFAULT, EngineConfig
+TUMBLING = "1 minute"
+SLIDING_LENGTH = "5 minutes"
+SLIDING_SLIDE = "1 minute"
+PEAK_COARSE = "10 minutes"
 
 
 def _distinct_convs(mode: str):
@@ -44,10 +51,9 @@ def _distinct_convs(mode: str):
     raise ValueError(f"unknown distinct mode {mode!r}")
 
 
-def _rate(df: DataFrame, dim: str, window_col, exact, drop_null_dim: bool) -> DataFrame:
+def _rate(df: DataFrame, dim: str, window_col, distinct: str, drop_null_dim: bool) -> DataFrame:
     src = df.filter(F.col(dim).isNotNull()) if drop_null_dim else df
-    mode = exact if isinstance(exact, str) else ("exact" if exact else "approx")
-    convs = _distinct_convs(mode).cast("long").alias("convs")
+    convs = _distinct_convs(distinct).cast("long").alias("convs")
     return (
         src.groupBy(window_col.alias("w"), dim)
         .agg(F.count(F.lit(1)).cast("long").alias("turns"), convs)
@@ -61,23 +67,23 @@ def _rate(df: DataFrame, dim: str, window_col, exact, drop_null_dim: bool) -> Da
     )
 
 
-def tool_rate(df: DataFrame, cfg: EngineConfig = DEFAULT, exact: "bool | str" = True) -> DataFrame:
+def tool_rate(df: DataFrame, distinct: str = "exact") -> DataFrame:
     """Per-tool turn rate, tumbling windows; tool turns only."""
-    return _rate(df, "tool", F.window("ts", cfg.tumbling), exact, drop_null_dim=True)
+    return _rate(df, "tool", F.window("ts", TUMBLING), distinct, drop_null_dim=True)
 
 
-def role_rate(df: DataFrame, cfg: EngineConfig = DEFAULT, exact: "bool | str" = True) -> DataFrame:
+def role_rate(df: DataFrame, distinct: str = "exact") -> DataFrame:
     """Per-role turn rate, tumbling windows."""
-    return _rate(df, "role", F.window("ts", cfg.tumbling), exact, drop_null_dim=False)
+    return _rate(df, "role", F.window("ts", TUMBLING), distinct, drop_null_dim=False)
 
 
-def tool_rate_sliding(df: DataFrame, cfg: EngineConfig = DEFAULT, exact: "bool | str" = True) -> DataFrame:
-    """Per-tool rate over sliding windows (length/slide from cfg)."""
+def tool_rate_sliding(df: DataFrame, distinct: str = "exact") -> DataFrame:
+    """Per-tool rate over sliding windows."""
     return _rate(
         df,
         "tool",
-        F.window("ts", cfg.sliding_length, cfg.sliding_slide),
-        exact,
+        F.window("ts", SLIDING_LENGTH, SLIDING_SLIDE),
+        distinct,
         drop_null_dim=True,
     )
 
@@ -120,10 +126,7 @@ def sliding_oracle_sql(dim: str, length_min: int = 5, slide_min: int = 1, where:
 
 # --- chained windowed aggregation (window-on-window) -------------------------
 
-PEAK_COARSE = "10 minutes"
-
-
-def tool_rate_peak(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
+def tool_rate_peak(df: DataFrame) -> DataFrame:
     """Two-level windowed aggregation: per-tool 1-minute turn counts,
     re-aggregated into 10-minute peak/total/active-minute rollups —
     the ops-dashboard shape ('worst minute in each 10-minute block').
@@ -143,7 +146,7 @@ def tool_rate_peak(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     — the watermark closes both."""
     fine = (
         df.filter(F.col("tool").isNotNull())
-        .groupBy(F.window("ts", cfg.tumbling).alias("w"), "tool")
+        .groupBy(F.window("ts", TUMBLING).alias("w"), "tool")
         .agg(F.count(F.lit(1)).cast("long").alias("turns"))
     )
     return (

@@ -5,20 +5,22 @@ One place for every scale-relevant config:
   * Arrow on (vectorized pandas UDFs; the engine never runs per-row Python)
   * UTC session timezone (parity with the reference's UTC timestamps,
     /root/reference/internal/utils/main.go:41-47 TimePointToUTCTimeStamp)
-  * two partition widths (EngineConfig):
-      - batch shuffles start from ``cfg.shuffle_partitions`` partitions
-        (``coalescePartitions.initialPartitionNum``), which AQE coalesces
-        down to what the data needs;
-      - streaming plans run without AQE: Spark turns it off for them, so
-        ``spark.sql.shuffle.partitions`` is their width as is. It is the
-        state width (one state-store instance per partition, each
-        committed every micro-batch, rows or not) and the width of the
-        shuffles inside ``foreachBatch``. It defaults to the session's
-        cores (``defaultParallelism``): at local[4] 32 state partitions
-        spent 5.3 s in state-store commits against 1.2 s of update on an
-        export-sessions drain. A checkpoint pins the width it was first
-        started with (offset metadata), so resuming an older checkpoint
-        keeps its width; a new width needs a new checkpoint.
+  * one partition width, the session's cores (``defaultParallelism``),
+    set as ``spark.sql.shuffle.partitions``:
+      - batch shuffles start from it and AQE coalesces them down to
+        what the data needs;
+      - streaming plans run without AQE (Spark turns it off for them),
+        so it is their width as is: the state width (one state-store
+        instance per partition, each committed every micro-batch, rows
+        or not) and the width of the shuffles inside ``foreachBatch``.
+        At local[4], 32 state partitions spent 5.3 s in state-store
+        commits against 1.2 s of update on an export-sessions drain. A
+        checkpoint pins the width it was first started with (offset
+        metadata), so resuming an older checkpoint keeps its width; a
+        new width needs a new checkpoint.
+    An ``extra_conf`` value of ``spark.sql.shuffle.partitions`` or of
+    AQE's ``coalescePartitions.initialPartitionNum`` wins: a cluster
+    sets them as deployment settings (docs/deploy.md).
   * state store: the bundled HDFS-backed store. RocksDB (plus changelog
     checkpointing) is the cluster choice (docs/deploy.md). At local[4]
     under Spark's default checkpoint manager it measured 1.4-1.8x
@@ -206,8 +208,6 @@ def get_spark(cfg: EngineConfig = DEFAULT, app_name: str = "stellar_etl_spark") 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(cfg.shuffle_partitions))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # at 100 TB: bound per-task input so scan tasks stay ~128 MB
@@ -222,11 +222,11 @@ def get_spark(cfg: EngineConfig = DEFAULT, app_name: str = "stellar_etl_spark") 
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # the state width and the checkpoint manager come from the running
-    # context (its cores, its master); extra_conf wins
-    state = cfg.extra_conf.get("spark.sql.shuffle.partitions",
+    # the partition width and the checkpoint manager come from the
+    # running context (its cores, its master); extra_conf wins
+    width = cfg.extra_conf.get("spark.sql.shuffle.partitions",
                                spark.sparkContext.defaultParallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state))
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     manager = cfg.extra_conf.get(CHECKPOINT_MANAGER_CONF,
                                  checkpoint_manager(spark.sparkContext.master))
     if manager is not None:

@@ -80,9 +80,8 @@ from stellar_etl_spark.streaming.cep import frame
 from stellar_etl_spark.streaming.source import epoch_us
 
 # Hard ceiling on per-conversation open groups; crossing it triggers a
-# partial finalize down to DQ_KEEP_GROUPS (amortizes the prefix scan).
+# partial finalize down to half of it (amortizes the prefix scan).
 DQ_MAX_OPEN_GROUPS = 4096
-DQ_KEEP_GROUPS = DQ_MAX_OPEN_GROUPS // 2
 
 DQ_OUTPUT_SCHEMA = T.StructType(
     [
@@ -146,7 +145,9 @@ def _adjudicate(
     return out
 
 
-def _make_dq_fn(max_open_groups: int, keep_groups: int):
+def _make_dq_fn(max_open_groups: int):
+    keep_groups = max(1, max_open_groups // 2)
+
     def _dq_fn(
         key: tuple,
         pdf_iter: Iterator[pd.DataFrame],
@@ -245,7 +246,6 @@ def dq_violations_stream(
     df: DataFrame,
     cfg: EngineConfig = DEFAULT,
     max_open_groups: int = DQ_MAX_OPEN_GROUPS,
-    keep_groups: int | None = None,
 ) -> DataFrame:
     """Append-mode streaming integrity monitor over the turn stream:
     row-local checks (bad_role, empty_text) emit within their
@@ -258,15 +258,13 @@ def dq_violations_stream(
     arrives at or below a partially finalized boundary; each such row
     is left out of the order checks and emits one
     ``late_after_finalize`` row (detail: the boundary idx)."""
-    if keep_groups is None:
-        keep_groups = max(1, max_open_groups // 2)
     wm = df.withWatermark("ts", cfg.watermark_delay)
 
     ordered = (
         wm.select("conv_id", "turn_idx", "ts")
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_dq_fn(max_open_groups, keep_groups),
+            _make_dq_fn(max_open_groups),
             DQ_OUTPUT_SCHEMA,
             DQ_STATE_SCHEMA,
             "append",

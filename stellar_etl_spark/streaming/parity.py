@@ -429,9 +429,7 @@ def streamed_sessions(
     ).filter(F.col("conv_id") != CLOSER_CONV)
 
 
-def streamed_tool_rate(
-    spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
+def streamed_tool_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the tumbling-window per-tool rollup (A1/W-family analog) as a
     REAL watermarked streaming aggregation; values hash-match the batch
     rate_oracle_sql. Exact distinct conv counts stream via
@@ -448,7 +446,7 @@ def streamed_tool_rate(
     from stellar_etl_spark.operators.rollups import tool_rate
 
     stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
-    return _drain_append(tool_rate(stream, cfg, exact="set"), "tool_rate").filter(
+    return _drain_append(tool_rate(stream, distinct="set"), "tool_rate").filter(
         F.col("tool") != CLOSER_CONV
     )
 
@@ -508,9 +506,7 @@ def streamed_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fold_dedup_sink(spark, sink.root, sf_dir)
 
 
-def streamed_tool_rate_sliding(
-    spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
+def streamed_tool_rate_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sliding-window rollup (overlapping windows — each event
     lands in length/slide windows) as a REAL watermarked streaming
     aggregation; values hash-match the batch sliding oracle. Same
@@ -520,7 +516,7 @@ def streamed_tool_rate_sliding(
 
     stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
     return _drain_append(
-        tool_rate_sliding(stream, cfg, exact="set"), "tool_rate_sliding"
+        tool_rate_sliding(stream, distinct="set"), "tool_rate_sliding"
     ).filter(F.col("tool") != CLOSER_CONV)
 
 
@@ -1222,9 +1218,7 @@ def streamed_turn_replies(
 
 # --- chained window aggregation + native streaming dedup ---------------------
 
-def streamed_tool_rate_peak(
-    spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
+def streamed_tool_rate_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The window-on-window rollup (operators/rollups.tool_rate_peak)
     running as Spark's native CHAINED time-window aggregation — two
     stateful aggs in one streaming query, both finalized by the same
@@ -1234,7 +1228,7 @@ def streamed_tool_rate_peak(
     from stellar_etl_spark.operators.rollups import tool_rate_peak
 
     stream = _transcripts(spark, sf_dir).withWatermark("ts", PARITY_DELAY)
-    return _drain_append(tool_rate_peak(stream, cfg), "tool_rate_peak").filter(
+    return _drain_append(tool_rate_peak(stream), "tool_rate_peak").filter(
         F.col("tool") != CLOSER_CONV
     )
 

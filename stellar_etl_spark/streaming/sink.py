@@ -110,8 +110,8 @@ class EpochCommitSink:
         query then dies with STATE_STORE_COMMIT_VALIDATION_FAILED
         (SQLSTATE XXKST, "Expected N commits but got 0") even though
         the prior attempt's state deltas are durable. Re-evaluating
-        recommits the deterministic state versions and satisfies the
-        validator; the sink output stays write-once. Every table is a
+        recommits the deterministic state versions and passes the commit
+        validation; the sink output stays write-once. Every table is a
         transform of the same micro-batch, whose evaluation is what
         commits the state, so one evaluation serves them all (a table
         that limits or samples its input must not come first).
@@ -161,11 +161,9 @@ class EpochCommitSink:
         with open(os.path.join(d, names[-1])) as f:
             return json.load(f)
 
-    def compact(
-        self, spark: SparkSession, upto: int | None = None, target_files: int = 1
-    ) -> dict | None:
-        """Rewrite the small per-epoch files of every table into one
-        compacted dataset per table — the Iceberg rewrite_data_files
+    def compact(self, spark: SparkSession) -> dict | None:
+        """Rewrite the small per-epoch files of every committed epoch
+        into one file per table — the Iceberg rewrite_data_files
         analog a commit-per-epoch streaming sink needs operationally
         (a year of 5-minute epochs is ~10^5 directories per table).
 
@@ -184,8 +182,6 @@ class EpochCommitSink:
         prev = self.latest_snapshot()
         floor_e = prev["upto"] if prev else -1
         epochs = [e for e in self.committed_epochs() if e > floor_e]
-        if upto is not None:
-            epochs = [e for e in epochs if e <= upto]
         if len(epochs) < 2 and prev is None:
             return None
         hi = max(epochs) if epochs else floor_e
@@ -210,7 +206,7 @@ class EpochCommitSink:
             dst = os.path.join(self.root, "snapdata", name, f"upto={hi}")
             (
                 spark.read.parquet(*parts)
-                .coalesce(max(1, target_files))
+                .coalesce(1)
                 .write.mode("overwrite")
                 .option(_SUCCESS_MARKER, "false")
                 .parquet(dst)

@@ -28,8 +28,7 @@ def spark():
     from stellar_etl_spark.config import EngineConfig
     from stellar_etl_spark.session import get_spark
 
-    cfg = EngineConfig(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
-                       shuffle_partitions=8)
+    cfg = EngineConfig(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
     s = get_spark(cfg, app_name="pytest")
     yield s
     s.stop()

@@ -81,7 +81,7 @@ def test_stream_tool_rate_equals_batch(spark, data_dir, tmp_path):
     stream = read_transcript_stream(spark, data_dir, max_files_per_trigger=2,
                                     with_lineage=False)
     agg = rollups.tool_rate(
-        stream.withWatermark("ts", CFG.watermark_delay), CFG, exact=False
+        stream.withWatermark("ts", CFG.watermark_delay), distinct="approx"
     )
     q = start_fanout(agg, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
                      {"tool_rate": _identity}, query_name="t_rate")
@@ -89,7 +89,7 @@ def test_stream_tool_rate_equals_batch(spark, data_dir, tmp_path):
 
     wm = _final_watermark(spark, data_dir)
     got = EpochCommitSink(str(tmp_path / "sink")).read_table(spark, "tool_rate")
-    batch = rollups.tool_rate(read_transcript_batch(spark, data_dir), CFG, exact=False)
+    batch = rollups.tool_rate(read_transcript_batch(spark, data_dir), distinct="approx")
     expected = batch.filter(F.col("window_end") <= F.lit(wm))
     cols = ["window_start", "window_end", "tool", "turns"]
     assert _rows(got, cols) == _rows(expected, cols)
@@ -265,13 +265,11 @@ def test_multi_table_fanout_lineage(spark, data_dir, tmp_path):
             assert sum(t["partitions"].values()) == t["rows"]
 
 
-@pytest.mark.parametrize("validator", ["jvm", "pandas"])
-def test_enrich_turns_quarantines_conv_id_without_numeric_suffix(
-        spark, tmp_path, validator):
+def test_enrich_turns_quarantines_conv_id_without_numeric_suffix(spark, tmp_path):
     """A conv_id without a numeric suffix (the closer sentinels' among
     them) gets a NULL turn_id and its own quarantine error, in batch
     and in a stream, instead of failing its whole micro-batch on an
-    ANSI cast. Both validators rank it right after an empty conv_id."""
+    ANSI cast. Its error ranks right after an empty conv_id's."""
     from stellar_etl_spark.operators.enrich import enrich_turns
     from stellar_etl_spark.streaming import parity
 
@@ -283,14 +281,13 @@ def test_enrich_turns_quarantines_conv_id_without_numeric_suffix(
          ("", 0, "user", "empty id", None, t0 + 3)],
     ]
     src = parity.write_pinned(str(tmp_path / "src"), slices, t0 + 3)
-    cfg = EngineConfig(validator=validator)
     sink = EpochCommitSink(str(tmp_path / "sink"))
     q = start_fanout(_pinned_stream(spark, src), sink.root, str(tmp_path / "ckpt"),
-                     {"turns": lambda df: enrich_turns(df, cfg)},
+                     {"turns": enrich_turns},
                      query_name="t_no_suffix")
     assert q.awaitTermination(540), "stream did not finish within 540s"
 
-    batch = enrich_turns(read_transcript_batch(spark, src), cfg)
+    batch = enrich_turns(read_transcript_batch(spark, src))
     got = sink.read_table(spark, "turns")
     assert _rows(got) == _rows(batch)
     errors = {(r.conv_id, r.turn_idx): (r.turn_id, r.error) for r in got.collect()}
@@ -438,10 +435,11 @@ class _StateWidthListener(StreamingQueryListener):
         assert run_id in self.terminated, f"no termination event for run {run_id}"
 
 
-def test_default_state_width_is_session_cores(spark, data_dir, tmp_path):
-    """get_spark sets the streaming state width to the session's cores
-    and leaves batch shuffles starting from cfg.shuffle_partitions (the
-    test session passes 8) for AQE to coalesce."""
+def test_one_partition_width_is_session_cores(spark, data_dir, tmp_path):
+    """get_spark sets one partition width, the session's cores: the
+    streaming state width, and the width a batch shuffle starts from
+    before AQE coalesces it. An `extra_conf` spark.sql.shuffle.partitions
+    sets both."""
     cores = spark.sparkContext.defaultParallelism
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
 
@@ -455,14 +453,28 @@ def test_default_state_width_is_session_cores(spark, data_dir, tmp_path):
               for p in q.recentProgress for op in p["stateOperators"]]
     assert widths and set(widths) == {cores}
 
-    assert spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "8"
-    agg = (read_transcript_batch(spark, data_dir)
-           .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n")))
-    assert agg.collect()
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"hashpartitioning\(conv_id#\d+, 8\)", plan), plan
+    def batch_plan():
+        agg = (read_transcript_batch(spark, data_dir)
+               .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n")))
+        assert agg.collect()
+        return agg._jdf.queryExecution().executedPlan().toString()
+
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert spark.conf.get(initial, None) is None
+    plan = batch_plan()
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, {cores}\)", plan), plan
     assert "AQEShuffleRead coalesced" in plan, plan
+
+    width = cores + 3
+    cfg = EngineConfig(master=spark.sparkContext.master,
+                       extra_conf={"spark.sql.shuffle.partitions": str(width)})
+    try:
+        assert session.get_spark(cfg, app_name="pytest") is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(width)
+        plan = batch_plan()
+        assert re.search(rf"hashpartitioning\(conv_id#\d+, {width}\)", plan), plan
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
 
 
 def test_resume_keeps_checkpoint_state_width(spark, data_dir, tmp_path):
@@ -679,7 +691,7 @@ def test_turns_projection_built_once(spark, data_dir, tmp_path, monkeypatch):
 
     calls = []
     build = enrich._turns_columns
-    monkeypatch.setattr(enrich, "_turns_columns", lambda cfg: calls.append(cfg) or build(cfg))
+    monkeypatch.setattr(enrich, "_turns_columns", lambda: calls.append(1) or build())
     monkeypatch.setitem(vars(spark.sparkContext), "_stellar_built", {})  # a fresh context
     _, manifests = _drain_fanout(spark, data_dir, tmp_path,
                                  {"turns": lambda df: enrich.enrich_turns(df, CFG)},
@@ -701,7 +713,7 @@ def test_sessions_resume_across_checkpoint_manager_change(spark, data_dir, tmp_p
     key = session.CHECKPOINT_MANAGER_CONF
     file_context = ("org.apache.spark.sql.execution.streaming.checkpointing."
                     "FileContextBasedCheckpointFileManager")
-    cfg = EngineConfig(master=spark.sparkContext.master, shuffle_partitions=8)
+    cfg = EngineConfig(master=spark.sparkContext.master)
     assert spark.conf.get(key) == session.FS_CHECKPOINT_MANAGER
 
     sink = EpochCommitSink(str(tmp_path / "sink"))
@@ -946,7 +958,7 @@ def test_replayed_committed_epoch_recommits_state(spark, tmp_path):
     the restart replays batch N whose sink epoch is already durable.
     Pre-fix, EpochCommitSink.write_epoch returned without evaluating
     the DataFrame, so the replayed batch committed 0 state-store
-    partitions and Spark 4.1's commit validator
+    partitions and Spark 4.1's commit validation
     (spark.sql.streaming.stateStore.commitValidation.enabled, default
     true) killed the resumed query with
     STATE_STORE_COMMIT_VALIDATION_FAILED ("Expected N commits but got
@@ -1456,7 +1468,7 @@ def test_dq_stream_hot_conversation_bounded_state(spark, tmp_path):
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
     q = start_query(
         dq_violations_stream(_pinned_stream(spark, src_dir), cfg,
-                             max_open_groups=4, keep_groups=2),
+                             max_open_groups=4),
         epoch_stamped_writer(sink, "dq"), str(tmp_path / "ckpt"), "dq_hot",
     )
     assert q.awaitTermination(540), "hot-conversation DQ stream did not finish"
@@ -1505,7 +1517,7 @@ def test_dq_stream_counts_rows_below_finalized_boundary(spark, tmp_path):
     cfg = EngineConfig(watermark_delay=parity.PARITY_DELAY)
     q = start_fanout(
         dq_violations_stream(_pinned_stream(spark, src_dir), cfg,
-                             max_open_groups=4, keep_groups=2),
+                             max_open_groups=4),
         str(tmp_path / "sink"), str(tmp_path / "ckpt"), {"dq": _identity},
         query_name="dq_late",
     )

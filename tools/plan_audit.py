@@ -27,9 +27,7 @@ def audit(sf_dir: str) -> str:
     from stellar_etl_spark.config import EngineConfig
     from stellar_etl_spark.session import get_spark
 
-    spark = get_spark(
-        EngineConfig(master="local[8]", shuffle_partitions=8), app_name="plan-audit"
-    )
+    spark = get_spark(EngineConfig(master="local[8]"), app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
